@@ -1,64 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE (d20, measured): session-wide AQE size-based coalescing
-      // (coalescePartitions.parallelismFirst=false + a small advisory)
-      // was A/B-tested here and REJECTED — it merged the near-empty
-      // shuffles of sheet-sized frames (q283-family −25%) but serialized
-      // CPU-dense small-BYTE stages (q152 PageRank +4.5 s, q144 k-means
-      // +4.3 s: the byte heuristic cannot see per-row compute), netting
-      // +6% on the full suite. Partition-by-WORK fixes are applied at
-      // the operators instead (Multimodal.workPartitions et al).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="key=value;key2=value2" — extra session confs for
-    // local tuning experiments (unset in the driver's invocation)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: initialize codegen/shuffle machinery and touch every table's
-    // footer so the first measured query pays query cost, not JVM startup
-    spark.range(100000).selectExpr("id % 10 AS k", "id AS v")
-      .groupBy("k").count().count()
-    // layout staging (spark.graft.bench.stageLayout, default on): the
-    // generated tables arrive as ONE row group each, which serializes
-    // every query's first stage (Spark parallelizes across row groups,
-    // never within one — measured 5× on the 600k-row lineitem at 32
-    // threads). A deployment fixes that once at ingest; the bench does
-    // the same up front — an order-preserving row-group split into /tmp,
-    // mtime-keyed so reruns reuse it — and sizes maxPartitionBytes to
-    // the row-group size so the splits actually parallelize. Staging
-    // cost is reported separately (stage_sec); the correctness gate
-    // (Verify) keeps reading the ORIGINAL files.
-    // off-tokens parsed leniently — a tuning run passing "off"/"0" must
-    // disable staging, not crash the bench in String.toBoolean
-    val stageOn = !spark.conf.getOption("spark.graft.bench.stageLayout")
-      .exists(v => Set("false", "0", "off", "no").contains(v.trim.toLowerCase))
-    val stageSec = if (stageOn) {
-      val t0 = System.nanoTime()
-      val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val blockBytes = 1L << 20
-      graft.Tables.stageLayout(spark, sfDir, s"/tmp/graft_stage/$sfName", blockBytes)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", blockBytes.toString)
-      (System.nanoTime() - t0) / 1e9
-    } else 0.0
-    graft.Tables.names.foreach { t =>
-      try graft.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
+    // layout staging cost is reported separately (stage_sec)
+    val stageSec = GraftSession.prepare(spark, sfDir)
     // standard warmup-then-measure: pass 1 (timed as "cold") pays per-plan
     // codegen compilation + JIT; pass 2 measures steady-state execution —
     // the number that reflects engine throughput on a long-running

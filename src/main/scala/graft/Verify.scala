@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="key=value;key2=value2" — extra session confs, same
-    // contract as Bench (unset in the driver's invocation). Lets the whole
-    // gate run in e.g. reliable-checkpoint mode:
-    //   SPARK_GRAFT_CONF="spark.graft.checkpoint.reliable=true"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q101,q102 (query-id token match) narrows the dump
     // for local iteration; unset (the driver's invocation) dumps everything

@@ -44,7 +44,7 @@ object EtlQueries {
     * converts the merge's dominant shuffle into a co-located read.
     * Values must equal the raw-parquet q26 oracle; PlanSpec pins the
     * snapshot-side exchange elimination, UpsertSpec the value parity,
-    * PLANS.md the BucketAb-style A/B. */
+    * PLANS.md "d12: bucketed-snapshot upsert (q260)" the A/B. */
   def upsertCustomersBucketed(s: SparkSession, dir: String): DataFrame = {
     val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
     val table = s"graft_cust_bucketed_$sf"

@@ -365,11 +365,12 @@ object FileGate {
     * per-SF scratch dir, then q217's exact aggregate chain re-planned
     * over the bucketed scans — the shuffle-free fact-fact join riding
     * the correctness gate every round (values must equal the raw-parquet
-    * q217 oracle; BucketAb/PLANS.md carry the A/B timings — 1.5× at
-    * sf0.1 widening to 2.8× at sf1 — and LayoutSpec pins the
-    * zero-join-key-exchange plan). At 100 TB this is the ingest-time
-    * layout decision: land orderkey-grained facts bucketed once, and
-    * every order-grain join afterwards plans without an exchange. */
+    * q217 oracle; PLANS.md "Round-14: q217-shape bucketed-layout A/B"
+    * carries the timings — 1.5× at sf0.1 widening to 2.8× at sf1 — and
+    * LayoutSpec pins the zero-join-key-exchange plan). At 100 TB this is
+    * the ingest-time layout decision: land orderkey-grained facts
+    * bucketed once, and every order-grain join afterwards plans without
+    * an exchange. */
   def bucketedSla(s: SparkSession, dir: String): DataFrame = {
     val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"/tmp/graft_gate/$sf/bucketed"

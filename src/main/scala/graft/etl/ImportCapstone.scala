@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.{Q, Tables}
 import graft.functions.Conversions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §2.8 composed import-pipeline capstone (q283, round-15 verdict item 3)
@@ -194,22 +194,16 @@ object ImportCapstone {
     // key map) and the error/arrival stats — FUSED into one aggregate
     // (d20, guide §2.4: same grouping key ⇒ one exchange). The former
     // shape ran two `row_number` windows plus a groupBy, each with its
-    // own exchange over withEnt; `max_by(v, CASE WHEN v IS NOT NULL
-    // THEN __src_order END)` is the windows' last-non-null-by-src-order
-    // semantics as a map-side-partial aggregate (null ordering keys are
-    // skipped, all-null groups yield null).
+    // own exchange over withEnt; [[lastNonNull]] is the windows'
+    // last-non-null-by-src-order semantics as a map-side-partial aggregate.
     val errCnt = errors.groupBy(col("row_key"))
       .agg(count(lit(1)).as("__n_err"))
     val entAgg = withEnt
       .join(errCnt, withEnt("__row_key") === errCnt("row_key"), "left")
       .groupBy(col("entity"))
       .agg(
-        max_by(col("locale_value"),
-          when(col("locale_value").isNotNull, col("__src_order")))
-          .as("name_de"),
-        max_by(col("image_url"),
-          when(col("image_url").isNotNull, col("__src_order")))
-          .as("image_url"),
+        lastNonNull(col("locale_value"), col("__src_order")).as("name_de"),
+        lastNonNull(col("image_url"), col("__src_order")).as("image_url"),
         min(col("segment_index")).as("arrival_segment"),
         sum(coalesce(col("__n_err"), lit(0L))).as("n_errors"))
     val media = entAgg.filter(col("image_url").isNotNull)
@@ -232,6 +226,14 @@ object ImportCapstone {
         col("arrival_segment").cast("long").as("arrival_segment"))
       .orderBy(col("p_partkey"))
   }
+
+  /** Per group, `v` of the row last in `order` among the rows whose `v`
+    * is non-null — the `row_number` window over `order` DESC (nulls
+    * last) as one aggregate. A null `order` (a malformed SrcOrder cell)
+    * ranks below every real one, so such a row still wins when it holds
+    * the group's only non-null `v`; an all-null group yields null. */
+  private[graft] def lastNonNull(v: Column, order: Column): Column =
+    max_by(v, when(v.isNotNull, coalesce(order, lit(Long.MinValue))))
 
   val qs: Seq[Q] = Seq(
     Q("q283_import_capstone", (s, d) => importCapstone(s, d), Some(

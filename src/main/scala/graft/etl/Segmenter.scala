@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,7 +36,9 @@ object Segmenter {
     * barrier that blocked codegen for every downstream consumer. A
     * partition would need 2³³ (≈8.6 B) rows to overflow the local
     * counter; such a partition (≳ hundreds of GB) is far past every
-    * other per-partition limit in Spark. */
+    * other per-partition limit in Spark. ExportDeploySpec pins that
+    * layout, so a Spark upgrade that changes it fails loudly. `posCol`
+    * is non-nullable. */
   private[graft] def zipPosition(df: DataFrame, posCol: String): DataFrame = {
     val pinned = graft.Ckpt(df)
     val counts = pinned.groupBy(spark_partition_id().as("__pid")).count()
@@ -44,9 +47,10 @@ object Segmenter {
       counts.lastOption.map(_._1 + 1).getOrElse(0))
     var acc = 0L
     counts.foreach { case (pid, n) => offsets(pid) = acc; acc += n }
+    val pos = element_at(typedLit(offsets.toSeq), spark_partition_id() + 1) +
+      monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1))
     pinned.withColumn(posCol,
-      element_at(typedLit(offsets.toSeq), spark_partition_id() + 1) +
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+      GraftBridge.column(AssertNotNull(GraftBridge.expression(pos))))
   }
 
   /** Attach a 0-based `posCol` in `orderBy` order (a TOTAL order for

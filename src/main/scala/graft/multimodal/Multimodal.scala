@@ -175,15 +175,6 @@ object Multimodal {
       img.rgb.map(p => (p & 0xFF).toByte)
   }
 
-  /** Render one REAL PNG per input row — the in-pipeline fixture
-    * generator for the codec path. Pixel (x, y) of image `id` is the
-    * integer formula
-    *   r = (id + 7x + 13y)  mod 256
-    *   g = (2id + 5x + 3y)  mod 256
-    *   b = (3id + 11x + y)  mod 256
-    * — chosen because a SQL engine can recompute any statistic of the
-    * decoded raster directly from (id, x, y) without an image library
-    * (PNG is lossless, so decode(encode(raster)) == raster). */
   /** Partition count for a CPU-bound codec stage, sized by WORK — row
     * count over `rowsPerTask` — and capped at the cluster parallelism.
     * The original `repartition(defaultParallelism)` fixed the sf1
@@ -198,13 +189,29 @@ object Multimodal {
     * corpus sizes the count exceeds cpus·rowsPerTask, so the cap keeps
     * full parallelism exactly where it matters. Floor 2: a codec stage
     * never plans a SinglePartition exchange (the scale-hostile shape
-    * PlanAudit lints), however small the probe corpus. */
+    * PlanAudit lints), however small the probe corpus.
+    *
+    * Eager: the `count()` is a Spark job run when the caller BUILDS its
+    * frame, so [[renderPng]], [[renderWav]] and [[renderGif]] execute
+    * their input subtree once at construction, before the returned
+    * frame runs. Every caller passes a base-table id projection, whose
+    * count is metadata-cheap; a derived input frame pays one full extra
+    * execution per codec call — pin it first. */
   private def workPartitions(ids: DataFrame, rowsPerTask: Int = 512): Int = {
     val par = ids.sparkSession.sparkContext.defaultParallelism.toLong
     val n = ids.count()
     math.max(2L, math.min(par, (n + rowsPerTask - 1) / rowsPerTask)).toInt
   }
 
+  /** Render one REAL PNG per input row — the in-pipeline fixture
+    * generator for the codec path. Pixel (x, y) of image `id` is the
+    * integer formula
+    *   r = (id + 7x + 13y)  mod 256
+    *   g = (2id + 5x + 3y)  mod 256
+    *   b = (3id + 11x + y)  mod 256
+    * — chosen because a SQL engine can recompute any statistic of the
+    * decoded raster directly from (id, x, y) without an image library
+    * (PNG is lossless, so decode(encode(raster)) == raster). */
   def renderPng(df: DataFrame, idCol: String, w: Int = 16,
       h: Int = 16): DataFrame = {
     val outSchema = StructType(Seq(

@@ -8,6 +8,10 @@ import org.apache.spark.sql.functions._
 /** Multimodal plumbing queries: documents wrapped as binary media rows. */
 object MultimodalQueries {
 
+  /** The registered queries' band-bucket stop-list cap; only this cap's
+    * aHash pairs and dedup components are session-memoized. */
+  private val DefaultCap = 64
+
   /** Binary metadata projection — oracle-checkable (byte count + digest
     * computed on the same utf-8 payload in both engines). */
   def mediaMeta(s: SparkSession, dir: String): DataFrame =
@@ -228,14 +232,14 @@ object MultimodalQueries {
     // an unpinned frame instead of tripping the memo's tag guard
     // (the winnowFpsM pattern; ADVICE r19)
     val pairs =
-      if (cap == 64)
+      if (cap == DefaultCap)
         graft.etl.ChainCache.memo(s, dir, "mm_ahash_pairs",
           s"cap=$cap")(buildPairs)
       else buildPairs.ckpt
     (bands, pairs)
   }
 
-  def imageNearDup(s: SparkSession, dir: String, cap: Int = 64): DataFrame = {
+  def imageNearDup(s: SparkSession, dir: String, cap: Int = DefaultCap): DataFrame = {
     val (bands, pairs) = aHashPairs(s, dir, cap)
     // per-image hashes are any one band-slice of the pinned frame — a
     // filter on the checkpoint, not a second render→decode→hash job
@@ -262,7 +266,7 @@ object MultimodalQueries {
     * pointer-jumping fixpoint over |pairs| edges with per-superstep
     * lineage truncation — edges are cluster-local, never corpus². */
   def imageDedupDecision(s: SparkSession, dir: String,
-      cap: Int = 64): DataFrame = {
+      cap: Int = DefaultCap): DataFrame = {
     val comp = imageDedupComponents(s, dir, cap)
     val sizes = comp.groupBy(col("component")).agg(count(lit(1)).as("csize"))
     comp.join(sizes, Seq("component"))
@@ -274,7 +278,7 @@ object MultimodalQueries {
   /** The q263 clustering WITHOUT the decision projection/sort — the
     * (media_id, component) frame the q267 pair-level decision joins. */
   private[graft] def imageDedupComponents(s: SparkSession, dir: String,
-      cap: Int = 64): DataFrame = {
+      cap: Int = DefaultCap): DataFrame = {
     def build = {
       val (_, pairs) = aHashPairs(s, dir, cap)
       val edges = pairs.filter(col("ham") <= 6)
@@ -286,7 +290,7 @@ object MultimodalQueries {
     // memoize only the registered default cap (winnowFpsM pattern;
     // ADVICE r19) — a non-default cap builds unpinned rather than
     // tripping the tag guard; CC already ckpts its own output
-    if (cap == 64)
+    if (cap == DefaultCap)
       graft.etl.ChainCache.memo(s, dir, "mm_img_components",
         s"cap=$cap,ham6")(build)
     else build

@@ -18,7 +18,8 @@ object TextFunctions {
   /** lower + collapse runs of whitespace + trim — canonical form for
     * fingerprinting and shingling. Fused single-byte-scan native form
     * ([[graft.functions.GraftStrings]]); the regex original is kept as
-    * [[normalizeRegex]] (parity property-pinned, A/B'd in TokAb). */
+    * [[normalizeRegex]] (parity pinned in GraftStringsSpec; A/B in
+    * PLANS.md "d13 (cont.): single-pass native tokenize"). */
   def normalize(c: Column): Column = graft.functions.GraftStrings.normalizeCol(c)
 
   /** whitespace tokens of the normalized text; empty text → empty array.

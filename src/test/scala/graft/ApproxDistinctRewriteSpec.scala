@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.ApproxDistinctRewrite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,17 +16,12 @@ class ApproxDistinctRewriteSpec extends AnyFunSuite {
       .groupBy(col("l_returnflag"))
       .agg(countDistinct(col("l_partkey")).as("nd"))
 
+  // the rule is installed (TestSpark carries GraftExtensions); the
+  // conf gate alone decides whether it fires
   private def withRule[T](on: Boolean)(f: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
     if (on) spark.conf.set("spark.graft.rewrite.approxDistinct", "true")
     try f
-    finally {
-      spark.conf.set("spark.graft.rewrite.approxDistinct", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == ApproxDistinctRewrite)
-    }
+    finally spark.conf.set("spark.graft.rewrite.approxDistinct", "false")
   }
 
   test("off by default: the exact distinct plan (Expand) survives") {

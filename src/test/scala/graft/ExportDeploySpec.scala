@@ -72,6 +72,21 @@ class ExportDeploySpec extends AnyFunSuite {
     assert(stats.last.getInt(3) == 250)
   }
 
+  test("zipPosition: monotonically_increasing_id is partitionId·2³³ + " +
+      "local index, and positions are non-null and gap-free") {
+    val df = spark.range(0, 40, 1, 4).toDF("k")
+    val ids = df.select(spark_partition_id(), monotonically_increasing_id())
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(ids.map(_._1).distinct.length == 4)
+    ids.groupBy(_._1).foreach { case (p, rs) =>
+      assert(rs.map(_._2).toSeq == rs.indices.map(i => (p.toLong << 33) + i))
+    }
+    val pos = Segmenter.zipPosition(df, "pos")
+    assert(!pos.schema("pos").nullable)
+    val rows = pos.collect()
+    assert(rows.length == 40 && rows.forall(r => r.getLong(0) == r.getLong(1)))
+  }
+
   test("folder publisher + zip archive deployment") {
     val out = tmp("graft-dep") + "/out"
     ExportPipeline.writeCsv(Seq((1, "x")).toDF("id", "v"), out)

@@ -40,15 +40,21 @@ class GraftStringsSpec extends AnyFunSuite {
     "ALLKINDS \r\n OF\f WS")
 
   test("native tokens/normalize match the regex forms on adversarial strings") {
-    val df = spark.createDataFrame(
-      adversarial.map(Tuple1(_)) :+ Tuple1(null.asInstanceOf[String]))
-      .toDF("text")
-    val mismatch = df.filter(
-      not(TextFunctions.tokensOfRegex(TextFunctions.normalizeRegex(col("text"))) <=>
-        GraftStrings.tokensCol(col("text"))) ||
-      not(TextFunctions.normalizeRegex(col("text")) <=>
-        GraftStrings.normalizeCol(col("text"))))
-    assert(mismatch.count() === 0)
+    // input sets: the adversarial strings, and row by row the real
+    // corpus (the documents table every text query reads)
+    val inputs = Seq(
+      "adversarial" -> spark.createDataFrame(
+        adversarial.map(Tuple1(_)) :+ Tuple1(null.asInstanceOf[String]))
+        .toDF("text"),
+      "documents" -> Tables.documents(spark, TestSpark.sfDir).select("text"))
+    for ((name, df) <- inputs) {
+      val mismatch = df.filter(
+        not(TextFunctions.tokensOfRegex(TextFunctions.normalizeRegex(col("text"))) <=>
+          GraftStrings.tokensCol(col("text"))) ||
+        not(TextFunctions.normalizeRegex(col("text")) <=>
+          GraftStrings.normalizeCol(col("text"))))
+      assert(mismatch.count() === 0, s"input set $name")
+    }
   }
 
   test("tokensOf on an already-normalized column equals the regex chain") {

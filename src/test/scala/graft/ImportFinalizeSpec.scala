@@ -181,6 +181,20 @@ class ImportFinalizeSpec extends AnyFunSuite {
         "combinations not supported. Skipping row.")
   }
 
+  test("capstone last-non-null: a null SrcOrder ranks last, never drops " +
+      "an entity's only non-null value (the nulls-last window)") {
+    import spark.implicits._
+    val rows = Seq[(Int, Option[String], Option[Long])](
+      (1, Some("only"), None), (1, None, Some(5L)),
+      (2, Some("a"), Some(1L)), (2, Some("b"), Some(3L)), (2, None, Some(9L)),
+      (2, Some("c"), None),
+      (3, None, Some(1L))).toDF("entity", "v", "ord")
+    val got = rows.groupBy(col("entity"))
+      .agg(etl.ImportCapstone.lastNonNull(col("v"), col("ord")).as("last"))
+      .collect().map(r => r.getInt(0) -> Option(r.getString(1))).toMap
+    assert(got == Map(1 -> Some("only"), 2 -> Some("b"), 3 -> None))
+  }
+
   test("chain memo: pass outputs are materialized once per (session, dir)") {
     val a = etl.ImportCapstone.importCapstone(spark, dir)
     val b = etl.ImportCapstone.importCapstone(spark, dir)

@@ -51,25 +51,17 @@ class PlanAuditSpec extends AnyFunSuite {
     // plan has no global window at all.)
 
   test("no registered query plans a scale-hostile operator off-whitelist") {
-    // audit under the SAME optimizer rules the shipped sessions run:
-    // Verify/Bench install graft.GraftExtensions, whose injected rules
-    // (range-join rewrite, approx-distinct rewrite) change exactly the
-    // plans this gate exists to check (q79's naive inequality join is a
-    // nested loop without the rewrite, a bucketed equi-join with it)
-    val injected = Seq(graft.plans.RangeJoinRewrite,
-      graft.plans.ApproxDistinctRewrite)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations ++ injected
-    val offenders =
-      try Registry.all.flatMap { q =>
-        val df = q.run(spark, TestSpark.sfDir)
-        PlanAudit.findings(df)
-          .map(f => (q.name, f.kind, f.operator))
-          .filterNot { case (n, k, _) => whitelist.contains((n, k)) }
-          .distinct
-      }
-      finally spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(injected.contains)
+    // TestSpark installs graft.GraftExtensions like Verify/Bench, so the
+    // audit sees the plans they run (q79's naive inequality join is a
+    // nested loop without the range-join rewrite, a bucketed equi-join
+    // with it)
+    val offenders = Registry.all.flatMap { q =>
+      val df = q.run(spark, TestSpark.sfDir)
+      PlanAudit.findings(df)
+        .map(f => (q.name, f.kind, f.operator))
+        .filterNot { case (n, k, _) => whitelist.contains((n, k)) }
+        .distinct
+    }
     assert(offenders.isEmpty,
       "unjustified scale-hostile plan shapes:\n" +
         offenders.map { case (n, k, op) => s"  $n: $k ($op)" }.mkString("\n"))

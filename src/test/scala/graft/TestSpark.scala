@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (per the reference's single
-  * in-memory DB fixture; also keeps sbt test wall-time sane). */
+  * in-memory DB fixture; also keeps sbt test wall-time sane), built like
+  * Bench's and Verify's, so specs plan under the same extensions. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

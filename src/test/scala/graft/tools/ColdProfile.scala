@@ -1,10 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only cold-run profiler (test scope): reproduces the Bench session
-  * (same master/shuffle-partitions/layout staging) and times the FIRST
+  * (GraftSession.local + prepare: warmup and layout staging) and times the FIRST
   * in-session execution of each named query — the number Bench reports
   * for ChainCache-memoized owners — decomposed into Spark jobs with task
   * counts, so per-task fixed cost vs data cost separates.
@@ -15,33 +14,8 @@ object ColdProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val tokens = args(1).split(',').map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bench warmup + layout staging (same as Bench.main)
-    spark.range(100000).selectExpr("id % 10 AS k", "id AS v")
-      .groupBy("k").count().count()
-    val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val blockBytes = 1L << 20
-    graft.Tables.stageLayout(spark, sfDir, s"/tmp/graft_stage/$sfName", blockBytes)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", blockBytes.toString)
-    graft.Tables.names.foreach { t =>
-      try graft.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    graft.GraftSession.prepare(spark, sfDir)
 
     val jobs = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Int)]()
     val starts = scala.collection.mutable.Map[Int, (String, Long)]()

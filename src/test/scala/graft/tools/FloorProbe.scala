@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the per-job Spark floor on the bench configuration
   * (local[32], 32 shuffle partitions) — the fixed scheduling/codegen
   * cost a query pays PER JOB regardless of data size. Quantifies the
@@ -20,13 +18,8 @@ import org.apache.spark.sql.SparkSession
   */
 object FloorProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("floor-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(n)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -42,7 +35,6 @@ object FloorProbe {
       println(f"$name%-10s median ${median(ts)}%.4f s  min ${ts.min}%.4f  max ${ts.max}%.4f")
     }
 
-    val n = cpus.toInt
     probe("one-stage") {
       spark.range(0, n, 1, n).queryExecution.toRdd.count()
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** sf1 scale-proof data generator (round-9 verdict item 3): derives a
@@ -29,16 +29,10 @@ object GenSf1 {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("gen-sf1")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read it the way the
-      // engine does (nanos surface as long, normalized to micros below)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // events.parquet carries TIMESTAMP(NANOS); the session reads it the
+    // way the engine does (nanos surface as long, normalized to micros below)
+    val spark = graft.GraftSession.local(16)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** One-off sf10 probe data: 100-replica key-offset copies of sf0.1's
@@ -31,13 +31,8 @@ object GenSf10 {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf10"
     val replicas = if (args.length > 2) args(2).toInt else 100
 
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("gen-sf10")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(16)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")

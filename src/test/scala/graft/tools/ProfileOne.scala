@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only profiling main (test scope — never ships in the library jar):
   * runs one registered query at a given SF dir and prints per-Spark-job
@@ -13,16 +12,7 @@ object ProfileOne {
     val sfDir = args(0)
     val token = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val jobs = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
     val starts = scala.collection.mutable.Map[Int, (String, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
