@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.Dataset
 
-/** Lineage-truncation point for iterative and multi-consumer frames
-  * (`df.ckpt` via [[Ckpt.Ops]]).
+/** Lineage-truncation point for multi-consumer frames (`df.ckpt` via
+  * [[Ckpt.Ops]]). Iterative loops do not call it per step: they pass a
+  * pinning policy to [[Iterate]], which calls it.
   *
   * `localCheckpoint` truncates lineage by pinning blocks to executors
   * with NO fault tolerance: on a real cluster, one lost executor

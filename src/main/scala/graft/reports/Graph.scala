@@ -39,7 +39,7 @@ object Graph {
   // deterministic frame every query in this family derives from — the
   // per-order sorted-set suffix-slice explode aggregated to
   // (a, b, support). It is session-pinned via ChainCache (the same
-  // "materialize the graph once, run the analyses on it" a production
+  // "build the graph once, run the analyses on it" a production
   // deployment does) and each member derives its view with narrow
   // filters/projections. Bench owner: q152 (first consumer in bench
   // order, reports cold incl. materialization).
@@ -99,48 +99,32 @@ object Graph {
     * nodes (every node has degree ≥ 1 and receives ≥ 1 contribution), so
     * no dangling-mass redistribution term is needed.
     *
-    * Scale shape: the edge frame materializes ONCE (localCheckpoint) and
-    * is the only corpus-sized state; each superstep is a broadcast-hash
-    * join of the node-sized rank frame into the edges (map-side — the
-    * edges are never re-shuffled) plus the ONE dst-keyed hash aggregate
-    * with map-side partial sums that PageRank fundamentally needs.
-    * Ranks re-checkpoint per superstep so lineage stays flat at any
-    * iteration count (the q69 pointer-jumping discipline). The final
-    * top-k is TakeOrderedAndProject (sort+limit), never a corpus-wide
-    * window. */
+    * Scale shape: the edge frame (derived from the pinned pair-support
+    * frame) is the only corpus-sized state; each superstep broadcasts the
+    * node-sized rank frame into the edges (never re-shuffled) and runs the
+    * ONE dst-keyed partial-sum aggregate PageRank needs. The top-k is
+    * TakeOrderedAndProject (sort+limit), never a corpus-wide window. */
   def copurchasePageRank(s: SparkSession, dir: String, iters: Int = 3,
       k: Int = 20): DataFrame = {
-    // the edge frame materializes ONCE; degree lives on the NODE-sized
-    // rank frame, not on every edge row — so each superstep is a
-    // broadcast-hash join (map-side, no edge shuffle, contribution
-    // rank div deg computed from the broadcast side) plus the one
-    // dst-keyed aggregate PageRank fundamentally needs. Rank frames are
-    // node-count-sized: broadcastable for any catalog-scale graph (1e7
-    // nodes ≈ 240 MB); past that, swap the broadcast for a join against
-    // edges pre-partitioned by src — the aggregate stage is unchanged.
-    // edges derive from the PINNED pair-support frame by a narrow
-    // mirror-union — re-deriving per superstep is two cached-block scans,
-    // cheaper than pinning a second copy of the edge list (d19)
+    // degree rides the broadcast NODE-sized rank frame (1e7 nodes ≈
+    // 240 MB; past that, join edges pre-partitioned by src). Edges
+    // re-derive per superstep from the PINNED pair-support frame: two
+    // cached-block scans, cheaper than pinning a second copy (d19)
     val edges = adjacency(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
       .ckpt
-    var ranks = deg.withColumn("rank", lit(1000000L))
-    for (i <- 1 to iters) {
+    // pin every 4th superstep (d19): a rank frame has ONE consumer, so a
+    // 3-step run plans as one job and lineage stays bounded at any count
+    val ranks = graft.Iterate(deg.withColumn("rank", lit(1000000L)), iters,
+        graft.Iterate.PinEvery(4)) { ranks =>
       val contrib = edges.join(broadcast(ranks), edges("src") === ranks("node"))
         .select(col("dst"), expr("rank div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
         .select(col("dst").as("node"),
           (lit(150000L) + expr("85 * sc div 100")).as("rank"))
-      // re-attach the static degree for the next superstep's broadcast.
-      // d19: each rank frame is consumed exactly ONCE (the next
-      // superstep's broadcast, or the final top-k), so no re-execution
-      // multiplier exists and the per-step checkpoint was pure per-job
-      // floor at a fixed small iteration count — checkpoint on a
-      // CADENCE instead (every 4th superstep) so lineage stays bounded
-      // at any iteration count while a 3-step run plans as one job
-      val next = deg.join(contrib, Seq("node"))
-      ranks = if (i % 4 == 0) next.ckpt else next
+      // re-attach the static degree for the next superstep's broadcast
+      deg.join(contrib, Seq("node"))
     }
     val top = ranks
       .orderBy(col("rank").desc, col("node"))
@@ -291,7 +275,7 @@ object Graph {
     * counts support ONLY for C3 (triangle-closure candidates of the
     * support-filtered pair graph — a few hundred rows that BROADCAST),
     * so the transaction table is probed by three narrowing equi-joins
-    * and nothing basket-cubed ever materializes. L2 itself reuses the
+    * and nothing basket-cubed is ever built. L2 itself reuses the
     * bounded per-order sorted-set explode (q55/q152/q175). Measured in
     * the DuckDB oracle at sf0.1: 0.23 s candidate-pruned vs 8.2 s raw
     * triple enumeration — the same ratio the distributed plan banks on. */
@@ -373,12 +357,11 @@ object Graph {
        |ORDER BY isize, rn""".stripMargin
 
   /** Support-filtered symmetrized co-purchase edges (the q175 graph,
-    * shared by LPA / BFS / link prediction): edge {a,b} iff the parts
-    * co-occur in ≥ minSupport distinct orders; emitted in BOTH
-    * directions. One shuffle builds it (pair dedup + support count in
-    * the same aggregate); materialized once per query via
-    * localCheckpoint. */
-  private def supportEdges(s: SparkSession, dir: String,
+    * shared by LPA / BFS / k-core / link prediction): edge {a,b} iff the
+    * parts co-occur in ≥ minSupport distinct orders; emitted in BOTH
+    * directions. A narrow filter + mirror-union of the pinned
+    * pair-support frame; each caller pins it once per query. */
+  private[graft] def supportEdges(s: SparkSession, dir: String,
       minSupport: Int): DataFrame = {
     // support filter + symmetrize over the pinned pair frame (memo)
     val pairs = pairSupportM(s, dir)
@@ -400,31 +383,16 @@ object Graph {
     * (dst, label) count and the per-dst argmax, both map-side-partial
     * hash aggregates; the node-sized label frame BROADCASTS into the
     * static edge frame (edges are never re-shuffled, the q152 superstep
-    * shape) and re-checkpoints per round to keep lineage flat. The
-    * argmax is max(struct(cnt, -label)) — an aggregate, not a
-    * partitioned window sort. */
+    * shape). The argmax is max(struct(cnt, -label)) — an aggregate, not
+    * a partitioned window sort. */
   def lpaCommunities(s: SparkSession, dir: String, minSupport: Int = 2,
-      rounds: Int = 3, k: Int = 20,
-      materialize: Boolean = true): DataFrame = {
-    // materialize=false keeps the whole lineage in one plan so PlanSpec
-    // can assert the per-round join shapes (production always true)
-    def cp(df: DataFrame) = if (materialize) df.ckpt else df
-    val edges = cp(supportEdges(s, dir, minSupport))
-    var labels = cp(edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lab")))
-    for (r <- 1 to rounds) {
-      // d19: each round's label frame is consumed exactly once (the
-      // next round's broadcast) — checkpoint on a cadence (every 4th
-      // round) like q152: lineage stays bounded at any round count,
-      // a 3-round run plans as one job
-      val next = edges
-        .join(broadcast(labels), edges("src") === labels("node"))
-        .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(max(struct(col("cnt"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("dst").as("node"), (-col("m.nl")).as("lab"))
-      labels = if (r % 4 == 0) cp(next) else next
-    }
+      rounds: Int = 3, k: Int = 20): DataFrame = {
+    val edges = supportEdges(s, dir, minSupport).ckpt
+    val init = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lab")).ckpt
+    // pin every 4th round, as q152 (d19): a label frame has ONE consumer
+    val labels = graft.Iterate(init, rounds, graft.Iterate.PinEvery(4))(
+      lpaStep(edges))
     labels.groupBy(col("lab")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("n_members").desc, col("lab"))
       .limit(k)
@@ -433,6 +401,15 @@ object Graph {
       .select(col("lab").as("community"), col("n_members"), col("rn"))
       .orderBy(col("rn"))
   }
+
+  /** One synchronous LPA round: (node, lab) → (node, lab). */
+  private[graft] def lpaStep(edges: DataFrame)(labels: DataFrame): DataFrame =
+    edges
+      .join(broadcast(labels), edges("src") === labels("node"))
+      .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("cnt"))
+      .groupBy(col("dst"))
+      .agg(max(struct(col("cnt"), (-col("lab")).as("nl"))).as("m"))
+      .select(col("dst").as("node"), (-col("m.nl")).as("lab"))
 
   /** q188 oracle: the synchronous rounds unrolled — per-round label
     * counts with a QUALIFY argmax (cnt DESC, lab ASC = the same
@@ -480,26 +457,27 @@ object Graph {
     * join; at a fixed 3-hop horizon relax-all is strictly fewer
     * shuffles.) */
   def bfsHops(s: SparkSession, dir: String, minSupport: Int = 2,
-      nSeeds: Int = 3, maxHops: Int = 3,
-      materialize: Boolean = true): DataFrame = {
-    def cp(df: DataFrame) = if (materialize) df.ckpt else df
-    val edges = cp(supportEdges(s, dir, minSupport))
-    val nodes = cp(edges.select(col("src").as("node")).distinct())
-    var dist = cp(nodes
-      .orderBy(col("node")).limit(nSeeds)
-      .select(col("node"), lit(0).as("dist")))
-    for (_ <- 1 to maxHops) {
-      dist = cp(edges
-        .join(broadcast(dist), edges("src") === dist("node"))
-        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-        .unionByName(dist.select(col("node"), col("dist")))
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-    }
+      nSeeds: Int = 3, maxHops: Int = 3): DataFrame = {
+    val edges = supportEdges(s, dir, minSupport).ckpt
+    val nodes = edges.select(col("src").as("node")).distinct().ckpt
+    val seeds = nodes.orderBy(col("node")).limit(nSeeds)
+      .select(col("node"), lit(0).as("dist")).ckpt
+    // pin every round: the next round reads it twice (broadcast + union)
+    val dist = graft.Iterate(seeds, maxHops, graft.Iterate.PinEvery(1))(
+      bfsStep(edges))
     nodes.join(dist, Seq("node"), "left_outer")
       .select(coalesce(col("dist"), lit(-1)).as("hops"))
       .groupBy(col("hops")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("hops"))
   }
+
+  /** One relax-all round: (node, dist) → (node, dist). */
+  private[graft] def bfsStep(edges: DataFrame)(dist: DataFrame): DataFrame =
+    edges
+      .join(broadcast(dist), edges("src") === dist("node"))
+      .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
+      .unionByName(dist.select(col("node"), col("dist")))
+      .groupBy(col("node")).agg(min(col("dist")).as("dist"))
 
   /** q189 oracle: relax-all rounds unrolled in CTEs over the same
     * support-filtered graph. */
@@ -612,34 +590,31 @@ object Graph {
     *
     * Scale shape: per round ONE degree aggregate (node-sized result,
     * BROADCASTS) and two semi-joins that filter the edge frame by
-    * surviving endpoints — edges re-checkpoint per round so lineage
-    * stays flat; the stats rows are 1-row aggregates. No driver-side
-    * graph state. */
+    * surviving endpoints; the stats rows are 1-row aggregates. No
+    * driver-side graph state. */
   def kCorePeeling(s: SparkSession, dir: String, minSupport: Int = 2,
-      k: Int = 3, rounds: Int = 4,
-      materialize: Boolean = true): DataFrame = {
-    def cp(df: DataFrame) = if (materialize) df.ckpt else df
-    var edges = cp(supportEdges(s, dir, minSupport))
-    def stats(round: Int, e: DataFrame): DataFrame =
-      e.agg(
-        countDistinct(col("src")).as("n_nodes"),
-        (count(lit(1)) / 2).cast("long").as("n_edges"))
+      k: Int = 3, rounds: Int = 4): DataFrame = {
+    // pin every round: read by the next round's degree, semi-joins, stats
+    val edges = graft.Iterate.trace(supportEdges(s, dir, minSupport).ckpt,
+      rounds, graft.Iterate.PinEvery(1))(kCoreStep(k))
+    edges.zipWithIndex.map { case (e, round) =>
+      e.agg(countDistinct(col("src")).as("n_nodes"),
+          (count(lit(1)) / 2).cast("long").as("n_edges"))
         .select(lit(round).as("round"), col("n_nodes"), col("n_edges"))
-    var out = stats(0, edges)
-    for (r <- 1 to rounds) {
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("src").as("node"))
-      edges = edges
-        .join(broadcast(keep.select(col("node").as("src"))), Seq("src"),
-          "left_semi")
-        .join(broadcast(keep.select(col("node").as("dst"))), Seq("dst"),
-          "left_semi")
-        .select(col("src"), col("dst"))
-      edges = cp(edges)
-      out = out.unionByName(stats(r, edges))
-    }
-    out.orderBy(col("round"))
+    }.reduce(_ unionByName _).orderBy(col("round"))
+  }
+
+  /** One peeling round: the edges whose endpoints both have degree ≥ k. */
+  private[graft] def kCoreStep(k: Int)(edges: DataFrame): DataFrame = {
+    val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+      .select(col("src").as("node"))
+    edges
+      .join(broadcast(keep.select(col("node").as("src"))), Seq("src"),
+        "left_semi")
+      .join(broadcast(keep.select(col("node").as("dst"))), Seq("dst"),
+        "left_semi")
+      .select(col("src"), col("dst"))
   }
 
   /** q197 oracle: the peeling rounds unrolled. */
@@ -685,8 +660,8 @@ object Graph {
     * engine-portable (no float normalization drift; the conventional
     * L2 norm is irrational and would never value-check).
     *
-    * Scale shape: the distinct (customer, part) edge frame materializes
-    * ONCE (localCheckpoint; the only corpus-sized state). Each half-step
+    * Scale shape: the distinct (customer, part) edge frame is pinned
+    * ONCE (the only corpus-sized state). Each half-step
     * is the q152 superstep shape — the node-sized score frame BROADCASTS
     * into the static edges (never re-shuffled) and one key aggregate with
     * map-side partials builds the opposite side's raw scores; the max is
@@ -720,6 +695,8 @@ object Graph {
           expr("cast(cast(raw as decimal(38,0)) * 1000000 div mx as bigint)")
             .as("score"))
     }
+    // not on graft.Iterate: the pins sit inside the half-step, and the
+    // result needs the last authority half-step as well as the last hubs
     var hubs = edges.select(col("c")).distinct()
       .select(col("c"), lit(1000000L).as("score"))
     var auths: DataFrame = null

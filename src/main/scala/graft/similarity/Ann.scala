@@ -211,13 +211,6 @@ object Ann {
       queries, idCol, vecCol, k, nprobe)
   }
 
-  /** Nearest-centroid cell assignment (rounded cosine, centroid-id
-    * tiebreak) — the IVF build pass. max_by aggregation, NOT a window:
-    * the argmax combines map-side (partial max per partition), so the
-    * only shuffle carries |V| pre-reduced rows — a row_number window
-    * would shuffle AND sort the |V|×nlist exploded frame. Ordering key
-    * (__cc, -cent_id) is total per vector (cent_id unique), so the
-    * result is deterministic and identical to the window argmax. */
   /** Two-level PRUNED argmax assignment — IVF coarse quantization
     * applied to the assignment step itself. The k centroids are grouped
     * under their `g` smallest-id peers (each centroid's nearest seed by
@@ -270,6 +263,13 @@ object Ann {
         col("__best.cent_id").as("__cell"))
   }
 
+  /** Nearest-centroid cell assignment (rounded cosine, centroid-id
+    * tiebreak) — the IVF build pass. max_by aggregation, NOT a window:
+    * the argmax combines map-side (partial max per partition), so the
+    * only shuffle carries |V| pre-reduced rows — a row_number window
+    * would shuffle AND sort the |V|×nlist exploded frame. Ordering key
+    * (__cc, -cent_id) is total per vector (cent_id unique), so the
+    * result is deterministic and identical to the window argmax. */
   private[similarity] def ivfAssign(vectors: DataFrame, idCol: String,
       vecCol: String, cents: DataFrame): DataFrame =
     vectors.join(broadcast(cents))
@@ -575,49 +575,16 @@ object Ann {
     pqTail(scored, m, topk)
   }
 
-  /** A ≤k-row frame round-tripped through the driver: same rows, same
-    * schema, zero upstream lineage (LocalRelation). Between Lloyd
-    * iterations this is the MLlib KMeans shape — the k centroids already
-    * cross the driver in every `broadcast(cents)` build; materializing
-    * them once per iteration instead stops the NEXT iteration's plan
-    * from carrying (and under multi-reference, re-executing) the whole
-    * previous-iteration subtree, and turns each iteration into ONE
-    * collect job instead of a broadcast-subtree job cascade (d20
-    * ColdProfile: q144 ran 34 single-task jobs, q153 35). Bounded by
-    * construction: every call site collects a `limit(k)`-annotated
-    * centroid table — k·dim doubles, the same bytes the broadcast
-    * shipped anyway. */
-  private def localized(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   def kmeansTrain(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): DataFrame = {
-    val v = vectors.select(col(idCol).as("__vid"),
-      col(vecCol).cast("array<double>").as("__v"))
-    // seeds and every INTERMEDIATE centroid table are localized (driver
-    // round trip, values/schema identical); the LAST iteration returns
-    // the distributed frame so the declared output plan/schema is
-    // unchanged. Each iteration = one collect job over (assign + mean
-    // recompute) with a LocalRelation broadcast side — lineage stays
-    // flat at any iteration count with no per-iteration checkpoint.
-    var cents = localized(v.orderBy(col("__vid")).limit(k)
-      .select(col("__vid").as("cent_id"), col("__v").as("centroid")))
-    for (i <- 1 to iters) {
-      val assigned = v.join(broadcast(
-          cents.select(col("cent_id"), col("centroid").as("__cv"))))
+      k: Int, iters: Int): DataFrame =
+    lloyd(vectors, idCol, vecCol, k, iters) { (v, cents) =>
+      v.join(broadcast(cents))
         .withColumn("__cc", round(cosine(col("__v"), col("__cv")), 4))
         .groupBy(col("__vid"))
         .agg(max_by(struct(col("cent_id"), col("__v").as("__m")),
           struct(col("__cc"), (-col("cent_id")).as("__nc"))).as("__best"))
         .select(col("__best.cent_id").as("cent_id"), col("__best.__m").as("__v"))
-      val means = recomputeMeans(assigned, k)
-      cents = if (i == iters) means else localized(means)
     }
-    cents
-  }
 
   /** `kmeansTrain` with the assignment step of every Lloyd iteration
     * routed through [[prunedAssign]] (g = ⌈√k⌉): the corpus-scaled
@@ -629,29 +596,28 @@ object Ann {
   def kmeansTrainPruned(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     val g = math.ceil(math.sqrt(k.toDouble)).toInt
+    lloyd(vectors, idCol, vecCol, k, iters) { (v, cents) =>
+      prunedAssign(v, "__vid", "__v", cents, g)
+        .select(col("__cell").as("cent_id"), col("__v"))
+    }
+  }
+
+  /** Lloyd's iteration from the k smallest-id vectors; `assign` maps the
+    * (__vid, __v) rows and (cent_id, __cv) centroids to (cent_id, __v).
+    * Each iteration reads a driver-local copy of the ≤k centroids
+    * (`Iterate.Localize`, the MLlib KMeans shape), so none carries or,
+    * through `prunedAssign`'s two broadcast subtrees, re-executes the
+    * previous one (d20: q144 34 jobs → 8). */
+  private def lloyd(vectors: DataFrame, idCol: String, vecCol: String,
+      k: Int, iters: Int)(assign: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val v = vectors.select(col(idCol).as("__vid"),
       col(vecCol).cast("array<double>").as("__v"))
-    // every iteration's k-row centroid table is LOCALIZED (driver round
-    // trip — see `localized`): prunedAssign references its `cents`
-    // argument through TWO broadcast subtrees (seeds + grouping), which
-    // re-executed the whole upstream lineage per reference before d19's
-    // per-iteration Ckpt pinned it (sf10: 204 s → 99 s). The
-    // LocalRelation goes further: both references now read k in-memory
-    // rows with NO lineage at all, the pin job disappears, and each
-    // iteration is one collect (d20: q144 34 jobs → 8). The final
-    // iteration still returns the distributed recompute frame, so the
-    // declared output plan/schema is unchanged; maxRows is known for a
-    // LocalRelation, keeping PlanAudit's bounded-broadcast proof.
-    var cents = localized(v.orderBy(col("__vid")).limit(k)
-      .select(col("__vid").as("cent_id"), col("__v").as("centroid")))
-    for (i <- 1 to iters) {
-      val assigned = prunedAssign(v, "__vid", "__v",
-          cents.select(col("cent_id"), col("centroid").as("__cv")), g)
-        .select(col("__cell").as("cent_id"), col("__v"))
-      val means = recomputeMeans(assigned, k)
-      cents = if (i == iters) means else localized(means)
+    val seeds = v.orderBy(col("__vid")).limit(k)
+      .select(col("__vid").as("cent_id"), col("__v").as("centroid"))
+    graft.Iterate(seeds, iters, graft.Iterate.Localize) { cents =>
+      recomputeMeans(
+        assign(v, cents.select(col("cent_id"), col("centroid").as("__cv"))), k)
     }
-    cents
   }
 
   /** Lloyd mean recompute from (cent_id, __v) assignment rows, in the

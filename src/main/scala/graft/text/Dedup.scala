@@ -116,60 +116,50 @@ object Dedup {
     * component label IS the keeper id).
     *
     * Iterative min-label propagation with pointer jumping (each round:
-    * take the min over neighbor labels, then follow label→label one hop),
+    * take the min over neighbor labels, then follow label→label twice),
     * so convergence is O(log component-diameter) rounds, each round one
     * join + aggregate — the standard scalable formulation (alternating
     * star-contraction refines this further at extreme scale). Runs until
-    * fixpoint with a cheap emptiness probe per round. */
+    * fixpoint with a cheap emptiness probe per round; throws
+    * `IllegalStateException` if `maxIter` rounds do not reach it. */
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
       maxIter: Int = 50): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .ckpt
-    // each round's frame is EAGERLY materialized and its lineage truncated
-    // (localCheckpoint): the iterative joins would otherwise double the
-    // logical plan per round — exponential analysis cost long before any
-    // data-size limit. (A cluster deployment persists each round to a
-    // table for fault tolerance; same structure.)
-    var labels = nodes.select(col("id"), col("id").as("label"))
-      .ckpt
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // round part 1: min over own + neighbor labels (not checkpointed:
-      // the part-2 self-join's two identical subtrees land on one
-      // ReusedExchange, so materializing `stepped` would only add a job)
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(sym("src").as("nid")).agg(min(col("label")).as("nbr"))
-      val stepped = labels.join(nbrMin, labels("id") === col("nid"), "left")
-        .select(labels("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      // round part 2: DOUBLE pointer jump (label := label's label,
-      // twice) — d19: each extra jump is one node-sized self-join per
-      // round but compresses label chains 4× instead of 2×, so the
-      // EDGE-sized neighbor-min join (and the per-round checkpoint +
-      // probe jobs, the dominant cost of long-chain graphs like the ER
-      // worklist) runs ~half as many rounds. The converged fixpoint is
-      // unique (min-reachable labels), so results are bit-identical —
-      // only the round count changes. The round's ONE materializing job
-      // also carries the convergence flag, so the probe below is a
-      // narrow scan of the cached partitions instead of an extra join
-      // job per round.
-      val asMap = stepped.select(col("id").as("mid"), col("label").as("mlabel"))
-      val j1 = stepped.join(asMap, stepped("label") === col("mid"), "left")
-        .select(stepped("id"), col("old"),
-          coalesce(col("mlabel"), stepped("label")).as("label"))
-      val asMap2 = stepped.select(col("id").as("mid2"), col("label").as("mlabel2"))
-      val next = j1.join(asMap2, j1("label") === col("mid2"), "left")
-        .select(j1("id"),
-          coalesce(col("mlabel2"), j1("label")).as("label"),
-          (coalesce(col("mlabel2"), j1("label")) =!= col("old")).as("changed"))
-        .ckpt
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("id"), col("label"))
-      iter += 1
-    }
-    labels.withColumnRenamed("label", "component")
+    // pin every round (the convergent form): untruncated, the joins
+    // double the plan per round; the pinned round carries `changed`, so
+    // the probe is a narrow scan of cached partitions, not a join job
+    graft.Iterate.until(nodes.select(col("id"), col("id").as("label")).ckpt,
+        maxIter)(ccStep(sym))(_.filter(col("changed")).isEmpty)
+      .select(col("id"), col("label").as("component"))
+  }
+
+  /** One min-label round over the symmetrized edges `sym`: (id, label)
+    * → (id, label, changed). */
+  private def ccStep(sym: DataFrame)(state: DataFrame): DataFrame = {
+    val labels = state.select(col("id"), col("label"))
+    // part 1: min over own + neighbor labels (unpinned: part 2's two
+    // identical subtrees land on one ReusedExchange)
+    val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+      .groupBy(sym("src").as("nid")).agg(min(col("label")).as("nbr"))
+    val stepped = labels.join(nbrMin, labels("id") === col("nid"), "left")
+      .select(labels("id"), col("label").as("old"),
+        least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
+    // part 2: DOUBLE pointer jump (label := label's label, twice; d19):
+    // one more node-sized self-join per round compresses label chains 4×
+    // instead of 2×, halving the rounds of edge-sized joins, pins and
+    // probes. The fixpoint (min-reachable labels) is unique, so results
+    // are unchanged.
+    val asMap = stepped.select(col("id").as("mid"), col("label").as("mlabel"))
+    val j1 = stepped.join(asMap, stepped("label") === col("mid"), "left")
+      .select(stepped("id"), col("old"),
+        coalesce(col("mlabel"), stepped("label")).as("label"))
+    val asMap2 = stepped.select(col("id").as("mid2"), col("label").as("mlabel2"))
+    j1.join(asMap2, j1("label") === col("mid2"), "left")
+      .select(j1("id"),
+        coalesce(col("mlabel2"), j1("label")).as("label"),
+        (coalesce(col("mlabel2"), j1("label")) =!= col("old")).as("changed"))
   }
 
   /** Token-level Jaccard similarity for all pairs within a (small) frame —

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4 moved
@@ -53,6 +54,11 @@ object GraftBridge {
   def translateSourceFilter(e: Expression,
       supportNested: Boolean): Option[sources.Filter] =
     execution.datasources.DataSourceStrategy.translateFilter(e, supportNested)
+
+  /** `SparkContext.listenerBus` is `private[spark]`: block until every
+    * event posted so far reached every listener (a job's end event is
+    * posted before its action returns, so a drain after it sees it). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Idempotently add a planner strategy to the session's experimental
     * hooks — the runtime fallback for sessions built without

@@ -186,6 +186,35 @@ class AnnSpec extends AnyFunSuite {
       tiny, "vec_id", "embedding", k = 5, iters = 2).count() <= 2)
   }
 
+  test("kmeansTrainPruned recovers planted clusters and equals the exact " +
+      "trainer where the groups separate") {
+    // four cones in two well-separated pairs (a1/a2 near +x, b1/b2 near
+    // +z); ids put the g = ⌈√4⌉ = 2 group seeds in different pairs
+    // (0→a1, 1→b1) and the other two seeds (2→a2, 3→b2) in the pair of
+    // their nearest group seed, so the coarse group pick never loses a
+    // vector's true-nearest centroid and pruned equals exact
+    def jitter(base: Array[Float], i: Int): Array[Float] =
+      base.zipWithIndex.map { case (x, j) => x + 0.01f * ((i + j) % 3) }
+    val xs = Seq(Array(10f, 1f, 0f), Array(0f, 1f, 10f),
+      Array(10f, -1f, 0f), Array(0f, -1f, 10f))
+    val data = (0 until 40).map(i => (i.toLong, jitter(xs(i % 4), i)))
+      .toDF("vec_id", "embedding")
+    def train(pruned: Boolean) = {
+      val f = if (pruned) Ann.kmeansTrainPruned _ else Ann.kmeansTrain _
+      f(data, "vec_id", "embedding", 4, 3).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    }
+    val pruned = train(pruned = true)
+    assert(pruned.keySet == Set(0L, 1L, 2L, 3L))
+    // each centroid sits on its cone: within jitter of the planted base
+    pruned.foreach { case (id, c) =>
+      val base = xs(id.toInt).map(_.toDouble)
+      assert(c.zip(base).forall { case (a, b) => math.abs(a - b) < 0.05 },
+        s"centroid $id = ${c.mkString(",")}")
+    }
+    assert(pruned == train(pruned = false))
+  }
+
   test("semanticDupVerdicts: within-cell drop rule, lowest id kept, " +
       "cross-cell twins untouched") {
     // three direction cones (one cell each): 20/21 duplicate 10 inside

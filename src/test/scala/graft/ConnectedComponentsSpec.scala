@@ -45,4 +45,13 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.values.toSet == Set(0L))
   }
+
+  test("no fixpoint within maxIter fails loudly instead of returning " +
+      "unconverged labels") {
+    val edges = (0L until 19L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(edges, (0L to 19L).toDF("id"), maxIter = 1)
+    }
+    assert(e.getMessage.contains("1 steps"), e.getMessage)
+  }
 }

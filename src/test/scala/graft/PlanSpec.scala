@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality regression tests (see PLANS.md): assert the executed
@@ -178,16 +179,20 @@ class PlanSpec extends AnyFunSuite {
     assert(scans <= 5, s"expected <=5 scans, got $scans\n$p")
   }
 
+  // one round's step on its own: production pins between rounds, which
+  // hides the round joins from the FINAL plan
+  private lazy val supportEdges =
+    reports.Graph.supportEdges(spark, TestSpark.sfDir, minSupport = 2)
+
   test("q188/q189: per-round label/distance frames broadcast into the " +
       "static edges; no cartesian anywhere") {
-    // materialize=false: production checkpoints per round, which hides
-    // the round joins from the FINAL plan — un-materialized lineage
-    // shows every superstep
+    val nodes = supportEdges.select(col("src").as("node")).distinct()
     Seq(
-      reports.Graph.lpaCommunities(spark, TestSpark.sfDir,
-        materialize = false),
-      reports.Graph.bfsHops(spark, TestSpark.sfDir,
-        materialize = false)).foreach { df =>
+      reports.Graph.lpaStep(supportEdges)(
+        nodes.select(col("node"), col("node").as("lab"))),
+      reports.Graph.bfsStep(supportEdges)(
+        nodes.orderBy(col("node")).limit(3)
+          .select(col("node"), lit(0).as("dist")))).foreach { df =>
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("BroadcastHashJoin"), p)
       assert(!p.contains("CartesianProduct"), p)
@@ -254,8 +259,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q197: survivor sets broadcast into the edge frame as semi joins") {
-    val p = reports.Graph.kCorePeeling(spark, TestSpark.sfDir,
-        materialize = false)
+    val p = reports.Graph.kCoreStep(k = 3)(supportEdges)
       .queryExecution.executedPlan.toString
     assert(p.contains("LeftSemi"), p)
     assert(!p.contains("CartesianProduct"), p)
@@ -519,7 +523,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("upsert insert numbering: a distributed range shuffle, never a " +
       "single-partition exchange") {
-    import org.apache.spark.sql.functions.col
     val ins = Tables.customer(spark, TestSpark.sfDir)
     val p = etl.Upsert.orderedInserts(ins, Seq("c_custkey"))
       .queryExecution.executedPlan.toString

@@ -1,6 +1,11 @@
 package graft.tools
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 
 /** Dev-only profiling main (test scope — never ships in the library jar):
   * runs one registered query at a given SF dir and prints per-Spark-job
@@ -13,28 +18,32 @@ object ProfileOne {
     val token = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val jobs = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
-    val starts = scala.collection.mutable.Map[Int, (String, Long)]()
+    // written on the listener thread, read on this one after a drain
+    val jobs = new ConcurrentLinkedQueue[(Int, String, Long)]()
+    val starts = new ConcurrentHashMap[Int, (String, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts(j.jobId) = (Option(j.properties)
+        starts.put(j.jobId, (Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""), System.nanoTime())
+          .getOrElse(""), System.nanoTime()))
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach { case (d, t0) =>
-          jobs += ((j.jobId, d, System.nanoTime() - t0)) }
+        Option(starts.remove(j.jobId)).foreach { case (d, t0) =>
+          jobs.add((j.jobId, d, System.nanoTime() - t0)) }
     })
     val q = graft.Registry.all.find(_.name.startsWith(token))
       .getOrElse(sys.error(s"no query matching $token"))
     // warmup
     q.run(spark, sfDir).queryExecution.toRdd.count()
     for (r <- 1 to reps) {
+      GraftBridge.drainListenerBus(spark.sparkContext)
       jobs.clear()
       val t0 = System.nanoTime()
       q.run(spark, sfDir).queryExecution.toRdd.count()
       val total = (System.nanoTime() - t0) / 1e9
-      println(f"== rep $r total $total%.3f s, ${jobs.size} jobs ==")
-      jobs.sortBy(-_._3).take(12).foreach { case (id, d, ns) =>
+      GraftBridge.drainListenerBus(spark.sparkContext)
+      val done = jobs.asScala.toSeq
+      println(f"== rep $r total $total%.3f s, ${done.size} jobs ==")
+      done.sortBy(-_._3).take(12).foreach { case (id, d, ns) =>
         println(f"  job $id%3d ${ns / 1e9}%7.3f s  ${d.take(90)}")
       }
     }
