@@ -67,7 +67,6 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    e.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectFunction((
       FunctionIdentifier("graft_minhash"),

@@ -5,7 +5,21 @@ import org.apache.spark.sql.SparkSession
 /** The one place a graft session is built. `Bench`, `Verify`, the shared
   * spec session and the dev tools all take theirs from [[local]], so every
   * caller plans under the same optimizer rules and planner strategies
-  * (`graft.GraftExtensions`). */
+  * (`graft.GraftExtensions`).
+  *
+  * Every `spark.graft.*` conf the engine reads (KnobInventorySpec holds
+  * this list equal to the keys in `src/main`; a new knob is listed here):
+  *  - `spark.graft.checkpoint.reliable`: `Ckpt` pins with reliable
+  *    checkpoints instead of `localCheckpoint` (deployment setting).
+  *  - `spark.graft.checkpoint.dir`: where reliable checkpoints go.
+  *  - `spark.graft.bench.stageLayout`: [[prepare]]'s layout staging
+  *    (default on).
+  *  - `spark.graft.scan.stagedDir`, `spark.graft.scan.stagedSrc`: the
+  *    staged copy `Tables.stageLayout` wrote and the source dir it
+  *    belongs to (state, not a user setting).
+  *  - `spark.graft.rangeJoin.bucketMs`,
+  *    `spark.graft.rangeJoin.maxBucketsPerRow`: `RangeJoinRewrite`'s
+  *    bucket width and its per-row bucket ceiling. */
 object GraftSession {
 
   /** A `local[cpus]` session: `cpus` shuffle partitions, UTC, parquet

@@ -46,8 +46,7 @@ object EtlQueries {
     * snapshot-side exchange elimination, UpsertSpec the value parity,
     * PLANS.md "d12: bucketed-snapshot upsert (q260)" the A/B. */
   def upsertCustomersBucketed(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val table = s"graft_cust_bucketed_$sf"
+    val table = s"graft_cust_bucketed_${SheetStage.sourceKey(dir)}"
     // Landing is SETUP, not merge: a production snapshot is bucketed once
     // and then merged into nightly. Re-landing on every invocation would
     // (a) bill a full snapshot overwrite to every measured bench pass and
@@ -61,7 +60,7 @@ object EtlQueries {
         if (s.catalog.tableExists(table)) table
         else graft.operators.Scale.writeBucketed(
           Tables.customer(s, dir), table, "c_custkey", 8,
-          Some(s"/tmp/graft_gate/$sf/bucketed/customer"))
+          Some(SheetStage.dirFor(dir, "bucketed/customer")))
       }
     val snap = s.table(snapT)
     Upsert.upsert(snap, upsertIncoming(snap), upsertCfg)
@@ -343,8 +342,7 @@ object EtlQueries {
     * union's. PlanSpec pins both properties (history partition pruned
     * from the merge's join; zero snapshot-side exchange). */
   private[graft] def scd2Dim(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val table = s"graft_scd2_dim_$sf"
+    val table = s"graft_scd2_dim_${SheetStage.sourceKey(dir)}"
     val snapT =
       if (s.catalog.tableExists(table)) table
       else EtlQueries.synchronized {
@@ -352,7 +350,7 @@ object EtlQueries {
         else Scd2.landSnapshot(
           Scd2.initial(Tables.customer(s, dir), "1994-01-01"),
           table, "c_custkey", 8,
-          Some(s"/tmp/graft_gate/$sf/scd2/customer_dim"))
+          Some(SheetStage.dirFor(dir, "scd2/customer_dim")))
       }
     val freshOffset = scd2Offsets.getOrElseUpdate(table,
       Tables.customer(s, dir).agg(max(col("c_custkey")))

@@ -64,19 +64,25 @@ private[graft] object SheetStage {
     path
   }
 
-  /** Staged-sheet path for a (source dir, sheet name) pair. The path —
-    * which is also the once-per-JVM done-set key — embeds a hash of the
-    * CANONICAL source dir alongside its sanitized basename, so two source
-    * dirs whose basenames collide (`/a/sf1` vs `/b/sf1`, or `sf.1` vs
-    * `sf_1` after sanitization) stage to distinct locations instead of
-    * the second silently reading the first's sheet data. Mirrors the
-    * `src=` binding `Tables.stageLayout` stamps on layout copies. */
-  def dirFor(srcDir: String, name: String): String = {
+  /** Identifier of a source dir for everything landed from it (staged
+    * sheets, landed catalog tables, per-dir offsets): its sanitized
+    * basename plus a hash of its CANONICAL path, so two source dirs whose
+    * basenames collide (`/a/sf1` vs `/b/sf1`, or `sf.1` vs `sf_1` after
+    * sanitization) never share a landing and the second never silently
+    * reads the first's data. Mirrors the `src=` binding
+    * `Tables.stageLayout` stamps on layout copies. Letters, digits and
+    * `_` only, so it is also a valid table-name suffix. */
+  def sourceKey(srcDir: String): String = {
     val canonical = new java.io.File(srcDir).getCanonicalPath
     val base = new java.io.File(canonical).getName
       .replaceAll("[^A-Za-z0-9]", "_")
     val hash = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(canonical))
-    s"/tmp/graft_gate/${base}_$hash/$name"
+    s"${base}_$hash"
   }
+
+  /** Landing path for a (source dir, name) pair — also the once-per-JVM
+    * done-set key of staged sheets. */
+  def dirFor(srcDir: String, name: String): String =
+    s"/tmp/graft_gate/${sourceKey(srcDir)}/$name"
 }

@@ -49,15 +49,7 @@ object Upsert {
         * entity, the LAST one in this order wins — the net effect of the
         * reference's sequential row loop. Empty ⇒ arbitrary-but-
         * deterministic tie-break on the key columns. */
-      incomingOrder: Seq[String] = Seq.empty,
-      /** Dense surrogate numbering (maxId+1, maxId+2, … in key order)
-        * needs a range shuffle plus zipWithIndex's extra count job.
-        * Callers that tolerate GAPS in the sequence (most production
-        * loads — a surrogate only needs uniqueness and monotonicity
-        * above the snapshot max) set false: inserts number
-        * `maxId + 1 + monotonically_increasing_id()` — one codegen'd
-        * projection, no extra job, no extra shuffle. */
-      denseIds: Boolean = true)
+      incomingOrder: Seq[String] = Seq.empty)
 
   val ResolvedCol = "__resolved_id"
   val IsNewCol = "__is_new"
@@ -143,9 +135,7 @@ object Upsert {
     val insDedup = resolved.filter(col(IsNewCol))
       .withColumn("__ins_rn", row_number().over(wInsDedup))
       .filter(col("__ins_rn") === 1).drop("__ins_rn")
-    val newRows =
-      if (cfg.denseIds) numberInserts(insDedup, keyCols, maxId)
-      else numberInsertsSparse(insDedup, keyCols, maxId)
+    val newRows = numberInserts(insDedup, keyCols, maxId)
     val oldRows = resolved.filter(!col(IsNewCol))
       .withColumn("__key", col(ResolvedCol))
     resolved = oldRows.unionByName(newRows)
@@ -210,53 +200,6 @@ object Upsert {
     // this site only shifts the position into surrogate space
     Segmenter.zipPosition(orderedInserts(insDedup, keyCols), "__key")
       .withColumn("__key", col("__key") + lit(maxId + 1))
-
-  /** Gap-tolerant surrogate numbering (`denseIds = false`):
-    * `monotonically_increasing_id()` is partitionId·2³³ + local index —
-    * unique and non-negative, so every id lands strictly above the
-    * snapshot max with NO count job, NO range shuffle and NO RDD
-    * round-trip (stays inside whole-stage codegen). Ids depend on the
-    * physical partition layout, so they are unique-but-not-reproducible
-    * across runs — exactly the contract gap-tolerant callers accept.
-    *
-    * Overflow guard: the largest id the sparse formula can mint is
-    * `maxId + 1 + (parts−1)·2³³ + localIndex` (local index < 2³³ by the
-    * monotonic-id encoding), so a snapshot max near `Long.MaxValue`
-    * could overflow — which ANSI mode (Spark 4's default) turns into a
-    * mid-merge abort and non-ANSI into negative ids that can COLLIDE
-    * with snapshot surrogates. Fall back to dense numbering there: it
-    * needs only |inserts| of headroom. The margin is STATIC per merge
-    * rather than a read of the plan's current partition count: `df.rdd`
-    * forces a separate physical planning pass per merge, and AQE can
-    * re-plan to a DIFFERENT partition count by the time
-    * `monotonically_increasing_id` actually executes — a dynamic guard
-    * would be both slower and not airtight. It is DERIVED, not
-    * hard-coded (ADVICE r14): `(ceil+1)·2³³` where ceil is the largest
-    * of the 2¹⁷ = 131,072 default, `spark.sql.shuffle.partitions`, and
-    * the explicit `spark.graft.upsert.maxPartitions` declaration — a
-    * deployment whose insert frame can exceed 131,072 scan partitions
-    * (file-count-driven, NOT bounded by shuffle.partitions) must declare
-    * its ceiling via that conf; past 2²⁹ declared partitions the sparse
-    * encoding cannot fit at all and every merge numbers densely. */
-  private[graft] def sparseMargin(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    def confLong(k: String): Long = spark.conf.getOption(k)
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
-    val ceil = Seq(1L << 17, confLong("spark.sql.shuffle.partitions"),
-      confLong("spark.graft.upsert.maxPartitions")).max
-    if (ceil >= (1L << 29)) Long.MaxValue // sparse ids can't fit: go dense
-    else (ceil + 1) << 33
-  }
-
-  private[graft] def numberInsertsSparse(insDedup: DataFrame,
-      keyCols: Seq[String], maxId: Long): DataFrame = {
-    val margin = sparseMargin(insDedup.sparkSession)
-    if (margin == Long.MaxValue || maxId >= Long.MaxValue - margin)
-      numberInserts(insDedup, keyCols, maxId)
-    else
-      insDedup.withColumn("__key",
-        lit(maxId + 1) + monotonically_increasing_id())
-  }
 
   def upsert(snapshot: DataFrame, incoming: DataFrame, cfg: Config): DataFrame =
     merge(snapshot, resolve(snapshot, incoming, cfg), cfg)

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 /** Multimodal plumbing queries: documents wrapped as binary media rows. */
 object MultimodalQueries {
 
-  /** The registered queries' band-bucket stop-list cap; only this cap's
-    * aHash pairs and dedup components are session-memoized. */
-  private val DefaultCap = 64
+  /** The aHash band-bucket stop-list cap (q262/q263/q267): a band value
+    * shared by more images than this is boilerplate, not a near-dup. */
+  private final val BandCap = 64
 
   /** Binary metadata projection — oracle-checkable (byte count + digest
     * computed on the same utf-8 payload in both engines). */
@@ -174,6 +174,49 @@ object MultimodalQueries {
           Multimodal.renderGif(Tables.documents(s, dir), "doc_id"), 2))
       .orderBy(col("media_id"))
 
+  /** The q262 candidate machinery, shared with the q263 dedup decision:
+    * returns (bands, pairs) where `bands` is the pinned per-image
+    * (media_id, h0, h1, bi, bv) band frame — the ONE materialization of
+    * the render→decode→hash chain; per-image hashes are a bi=0 slice of
+    * it, so no separate `ah` checkpoint job runs — and `pairs` the
+    * DISTINCT symmetric (ida, idb, ham) rows from the stop-listed band
+    * join. */
+  private def aHashPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    // both frames are session-pinned shared passes (d19 memo): the
+    // render→decode→hash chain and the banded candidate join run once
+    // and serve q262/q263/q267 — the family's bench owner is q262
+    // (first in bench order)
+    val bands = graft.etl.ChainCache.memo(s, dir, "mm_ahash_bands") {
+      val ah = Multimodal.imageAHash(
+        Multimodal.renderPng(Tables.documents(s, dir), "doc_id"))
+      ah.select(col("media_id"), col("h0"), col("h1"),
+          explode(array(
+            struct(lit(0).as("bi"), expr("h0 % 65536").as("bv")),
+            struct(lit(1).as("bi"), expr("h0 div 65536").as("bv")),
+            struct(lit(2).as("bi"), expr("h1 % 65536").as("bv")),
+            struct(lit(3).as("bi"), expr("h1 div 65536").as("bv")))).as("b"))
+        .select(col("media_id"), col("h0"), col("h1"),
+          col("b.bi").as("bi"), col("b.bv").as("bv"))
+    }
+    val pairs = graft.etl.ChainCache.memo(s, dir, "mm_ahash_pairs",
+        s"cap=$BandCap") {
+      val ok = bands.groupBy(col("bi"), col("bv"))
+        .agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") <= BandCap).select("bi", "bv")
+      val kept = bands.join(ok, Seq("bi", "bv"))
+      val a = kept.select(col("bi"), col("bv"), col("media_id").as("ida"),
+        col("h0").as("a0"), col("h1").as("a1"))
+      val b2 = kept.select(col("bi"), col("bv"), col("media_id").as("idb"),
+        col("h0").as("b0"), col("h1").as("b1"))
+      a.join(b2, Seq("bi", "bv"))
+        .filter(col("ida") =!= col("idb"))
+        .select(col("ida"), col("idb"),
+          expr("bit_count(a0 ^ b0) + bit_count(a1 ^ b1)").as("ham"))
+        .distinct()
+    }
+    (bands, pairs)
+  }
+
   /** Image perceptual-hash near-dup audit (q262): render → REAL decode
     * → aHash (8×8 integer grayscale mean-threshold, packed as two
     * 32-bit halves) → banded candidate join (4 × 16-bit bands) →
@@ -187,60 +230,8 @@ object MultimodalQueries {
     * shared by hundreds of images is boilerplate (blank frames, test
     * cards), not a near-dup signal, and skipping it bounds the
     * quadratic term at cap²·|buckets|. Rows shuffle as 3 longs. */
-  /** The q262 candidate machinery, shared with the q263 dedup decision:
-    * returns (bands, pairs) where `bands` is the pinned per-image
-    * (media_id, h0, h1, bi, bv) band frame — the ONE materialization of
-    * the render→decode→hash chain; per-image hashes are a bi=0 slice of
-    * it, so no separate `ah` checkpoint job runs — and `pairs` the
-    * DISTINCT symmetric (ida, idb, ham) rows from the stop-listed band
-    * join. */
-  private def aHashPairs(s: SparkSession, dir: String,
-      cap: Int): (DataFrame, DataFrame) = {
-    // both frames are session-pinned shared passes (d19 memo): the
-    // render→decode→hash chain and the banded candidate join run once
-    // and serve q262/q263/q267 — the family's bench owner is q262
-    // (first in bench order); cap is part of the memo tag so a
-    // non-default cap would fail loudly rather than serve wrong pairs
-    val bands = graft.etl.ChainCache.memo(s, dir, "mm_ahash_bands") {
-      val ah = Multimodal.imageAHash(
-        Multimodal.renderPng(Tables.documents(s, dir), "doc_id"))
-      ah.select(col("media_id"), col("h0"), col("h1"),
-          explode(array(
-            struct(lit(0).as("bi"), expr("h0 % 65536").as("bv")),
-            struct(lit(1).as("bi"), expr("h0 div 65536").as("bv")),
-            struct(lit(2).as("bi"), expr("h1 % 65536").as("bv")),
-            struct(lit(3).as("bi"), expr("h1 div 65536").as("bv")))).as("b"))
-        .select(col("media_id"), col("h0"), col("h1"),
-          col("b.bi").as("bi"), col("b.bv").as("bv"))
-    }
-    def buildPairs = {
-      val ok = bands.groupBy(col("bi"), col("bv"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") <= cap).select("bi", "bv")
-      val kept = bands.join(ok, Seq("bi", "bv"))
-      val a = kept.select(col("bi"), col("bv"), col("media_id").as("ida"),
-        col("h0").as("a0"), col("h1").as("a1"))
-      val b2 = kept.select(col("bi"), col("bv"), col("media_id").as("idb"),
-        col("h0").as("b0"), col("h1").as("b1"))
-      a.join(b2, Seq("bi", "bv"))
-        .filter(col("ida") =!= col("idb"))
-        .select(col("ida"), col("idb"),
-          expr("bit_count(a0 ^ b0) + bit_count(a1 ^ b1)").as("ham"))
-        .distinct()
-    }
-    // memoize only the registered default cap — a non-default cap builds
-    // an unpinned frame instead of tripping the memo's tag guard
-    // (the winnowFpsM pattern; ADVICE r19)
-    val pairs =
-      if (cap == DefaultCap)
-        graft.etl.ChainCache.memo(s, dir, "mm_ahash_pairs",
-          s"cap=$cap")(buildPairs)
-      else buildPairs.ckpt
-    (bands, pairs)
-  }
-
-  def imageNearDup(s: SparkSession, dir: String, cap: Int = DefaultCap): DataFrame = {
-    val (bands, pairs) = aHashPairs(s, dir, cap)
+  def imageNearDup(s: SparkSession, dir: String): DataFrame = {
+    val (bands, pairs) = aHashPairs(s, dir)
     // per-image hashes are any one band-slice of the pinned frame — a
     // filter on the checkpoint, not a second render→decode→hash job
     val ah = bands.filter(col("bi") === 0)
@@ -265,9 +256,8 @@ object MultimodalQueries {
     * Scale shape: candidates stay banded+capped (q262); the CC is the
     * pointer-jumping fixpoint over |pairs| edges with per-superstep
     * lineage truncation — edges are cluster-local, never corpus². */
-  def imageDedupDecision(s: SparkSession, dir: String,
-      cap: Int = DefaultCap): DataFrame = {
-    val comp = imageDedupComponents(s, dir, cap)
+  def imageDedupDecision(s: SparkSession, dir: String): DataFrame = {
+    val comp = imageDedupComponents(s, dir)
     val sizes = comp.groupBy(col("component")).agg(count(lit(1)).as("csize"))
     comp.join(sizes, Seq("component"))
       .select(col("media_id"), col("component"), col("csize"),
@@ -277,24 +267,16 @@ object MultimodalQueries {
 
   /** The q263 clustering WITHOUT the decision projection/sort — the
     * (media_id, component) frame the q267 pair-level decision joins. */
-  private[graft] def imageDedupComponents(s: SparkSession, dir: String,
-      cap: Int = DefaultCap): DataFrame = {
-    def build = {
-      val (_, pairs) = aHashPairs(s, dir, cap)
+  private[graft] def imageDedupComponents(s: SparkSession, dir: String): DataFrame =
+    graft.etl.ChainCache.memo(s, dir, "mm_img_components",
+        s"cap=$BandCap,ham6") {
+      val (_, pairs) = aHashPairs(s, dir)
       val edges = pairs.filter(col("ham") <= 6)
         .select(col("ida").as("src"), col("idb").as("dst"))
       val ids = Tables.documents(s, dir).select(col("doc_id").as("id"))
       graft.text.Dedup.connectedComponents(edges, ids)
         .select(col("id").as("media_id"), col("component"))
     }
-    // memoize only the registered default cap (winnowFpsM pattern;
-    // ADVICE r19) — a non-default cap builds unpinned rather than
-    // tripping the tag guard; CC already ckpts its own output
-    if (cap == DefaultCap)
-      graft.etl.ChainCache.memo(s, dir, "mm_img_components",
-        s"cap=$cap,ham6")(build)
-    else build
-  }
 
   /** Cross-modal PAIR dedup decision (q267) — the curation call a
     * (text, image) training-pair corpus actually needs: a pair
@@ -338,7 +320,7 @@ object MultimodalQueries {
     * (hash → stop-listed bands → symmetric hamming≤6 edges `ie`),
     * composable next to the q131 text CTEs without name collisions. */
   private def imageClusterCtes: String =
-    """ig AS (SELECT t1.x AS x, t2.y AS y
+    s"""ig AS (SELECT t1.x AS x, t2.y AS y
       |       FROM unnest(range(0, 8)) t1(x), unnest(range(0, 8)) t2(y)),
       |igr AS (SELECT doc_id, y * 8 + x AS k,
       |               (((doc_id + 7 * (2 * x) + 13 * (2 * y)) % 256)
@@ -362,7 +344,7 @@ object MultimodalQueries {
       |                            ELSE h1 // 65536 END AS bv
       |           FROM ih, (VALUES (0), (1), (2), (3)) b(bi)),
       |iok AS (SELECT bi, bv FROM ibands GROUP BY bi, bv
-      |        HAVING COUNT(*) <= 64),
+      |        HAVING COUNT(*) <= $BandCap),
       |ikept AS (SELECT ibands.* FROM ibands JOIN iok USING (bi, bv)),
       |ie AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
       |       FROM ikept a JOIN ikept b
@@ -399,7 +381,7 @@ object MultimodalQueries {
     Q("q267_pair_dedup_decision", (s, d) => pairDedupDecision(s, d),
       Some(pairDedupOracle)),
     Q("q263_image_dedup_decision", (s, d) => imageDedupDecision(s, d), Some(
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |g AS (SELECT t1.x AS x, t2.y AS y
         |      FROM unnest(range(0, 8)) t1(x), unnest(range(0, 8)) t2(y)),
         |gr AS (SELECT doc_id, y * 8 + x AS k,
@@ -424,7 +406,7 @@ object MultimodalQueries {
         |                           ELSE h1 // 65536 END AS bv
         |          FROM h, (VALUES (0), (1), (2), (3)) b(bi)),
         |ok AS (SELECT bi, bv FROM bands GROUP BY bi, bv
-        |       HAVING COUNT(*) <= 64),
+        |       HAVING COUNT(*) <= $BandCap),
         |kept AS (SELECT bands.* FROM bands JOIN ok USING (bi, bv)),
         |e AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
         |      FROM kept a JOIN kept b
@@ -501,7 +483,7 @@ object MultimodalQueries {
         |FROM px GROUP BY doc_id, nf2
         |ORDER BY media_id""".stripMargin)),
     Q("q262_image_neardup", (s, d) => imageNearDup(s, d), Some(
-      """WITH g AS (SELECT t1.x AS x, t2.y AS y
+      s"""WITH g AS (SELECT t1.x AS x, t2.y AS y
         |           FROM unnest(range(0, 8)) t1(x), unnest(range(0, 8)) t2(y)),
         |gr AS (SELECT doc_id, y * 8 + x AS k,
         |              (((doc_id + 7 * (2 * x) + 13 * (2 * y)) % 256)
@@ -525,7 +507,7 @@ object MultimodalQueries {
         |                           ELSE h1 // 65536 END AS bv
         |          FROM h, (VALUES (0), (1), (2), (3)) b(bi)),
         |ok AS (SELECT bi, bv FROM bands GROUP BY bi, bv
-        |       HAVING COUNT(*) <= 64),
+        |       HAVING COUNT(*) <= $BandCap),
         |kept AS (SELECT bands.* FROM bands JOIN ok USING (bi, bv)),
         |pairs AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb,
         |                 bit_count(xor(a.h0, b.h0))

@@ -43,8 +43,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, TimestampT
   *    branch exists for any input. A point×interval pair can only meet
   *    at the interval's single home tier, so no pair is emitted twice.
   *
-  * Registered by `graft.GraftExtensions` (injectOptimizerRule) or at
-  * runtime via `spark.experimental.extraOptimizations`. SURVEY §7.3(c):
+  * Registered by `graft.GraftExtensions` (injectOptimizerRule), so every
+  * session `graft.GraftSession` builds plans under it. SURVEY §7.3(c):
   * the custom-Rule tier, used exactly where declarative composition
   * cannot express the fix (a user's naive predicate can't be
   * re-associated into an equi-join without a plan rewrite). */

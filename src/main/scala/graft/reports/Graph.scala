@@ -847,13 +847,9 @@ object Graph {
     row("q224_basket_lift", Some("cap224"), col("kept224"))
       .unionByName(row("q183_frequent_itemsets", Some("cap183"), col("kept183")))
       .unionByName(row("q55_copurchase_topk", None, col("n_keys")))
-      .unionByName {
-        // one gram frame feeds the q159 AND q171/q194 audit rows
-        val dg = Some(graft.text.TextQueries.gramFrame(s, dir))
-        graft.text.TextQueries.ngramPostingStats(s, dir, dg)
-          .unionByName(graft.text.TextQueries.postingMassStats(s, dir,
-            dgOpt = dg))
-      }
+      // the q159 AND q171/q194 audit rows read the one pinned gram frame
+      .unionByName(graft.text.TextQueries.ngramPostingStats(s, dir))
+      .unionByName(graft.text.TextQueries.postingMassStats(s, dir))
       .orderBy(col("query"))
   }
 

@@ -238,11 +238,9 @@ object TextQueries {
     * rollup is the one doc-keyed aggregate. At 100 TB grams shuffle as
     * 16-byte digests exactly like q94 (string keys here keep the
     * oracle value-checkable). */
-  def ngramNovelty(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    // n is fixed at 3 by the oracle (see gramFrame) — the distinct
-    // shingle set is the pinned shared frame (memo)
-    val dg = if (n == 3) gram3M(s, dir)
-      else shingleRows(Tables.documents(s, dir), n).distinct().ckpt
+  def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
+    // the distinct shingle set is the pinned shared frame (memo)
+    val dg = gram3M(s, dir)
     val df = dg.groupBy(col("g")).agg(count(lit(1)).as("df"))
     dg.join(df, Seq("g"))
       .groupBy(col("doc_id"))
@@ -330,12 +328,17 @@ object TextQueries {
       .limit(n)
       .repartition(col("doc_id"))
 
+  /** The quadratic-audit family's base Jaccard threshold: the pinned
+    * pair and component frames are scored at it, and q35/q69/q275/q277
+    * report at it (q84 filters the pinned pairs tighter). */
+  private final val AuditMinJaccard = 0.3
+
   /** The matching DuckDB table expression (same order, same cap). */
   private val auditSampleSql =
     "SELECT * FROM documents ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 200"
 
   /** Shared CTE chain for the near-dup component closure over the audit
-    * sample (q69's oracle body): exact-jaccard edges ≥ 0.3 →
+    * sample (q69's oracle body): exact-jaccard edges ≥ [[AuditMinJaccard]] →
     * recursive-CTE reachability; `r(id, reach)` is the closure frame
     * consumers aggregate (component = MIN(reach)). */
   private lazy val nearDupComponentsCtes: String =
@@ -348,7 +351,8 @@ object TextQueries {
        |          GROUP BY a.id, b.id),
        |e0 AS (SELECT id1, id2 FROM inter
        |       JOIN sz s1 ON id1 = s1.id JOIN sz s2 ON id2 = s2.id
-       |       WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4) >= 0.3),
+       |       WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4)
+       |             >= $AuditMinJaccard),
        |e AS (SELECT id1 AS src, id2 AS dst FROM e0
        |      UNION SELECT id2, id1 FROM e0),
        |r AS (SELECT doc_id AS id, doc_id AS reach FROM d
@@ -382,21 +386,20 @@ object TextQueries {
     * form keeps the exact-edge variant oracle-checked on a bounded
     * sample.) */
   def nearDupClusters(s: SparkSession, dir: String,
-      minJaccard: Double = 0.3): DataFrame = {
+      minJaccard: Double = AuditMinJaccard): DataFrame = {
     // at the family-wide base threshold the clustering is the pinned
     // shared frame; tighter thresholds (q84's 0.8) filter the pinned
     // PAIR frame on its rounded jaccard — identical values to scoring
     // at the tighter threshold directly — and cluster the (smaller)
-    // edge set themselves. Thresholds BELOW the pinned 0.3 base would
-    // silently under-report (the pinned pair frame has no edges in
-    // [minJaccard, 0.3)) — fail loudly instead, matching the q275/q277
-    // guards (ADVICE r19).
-    require(minJaccard >= 0.3,
-      "nearDupClusters thresholds below the pinned 0.3 base would drop " +
-        "pairs in [minJaccard, 0.3); compute Dedup.jaccardPairs directly " +
+    // edge set themselves. Thresholds BELOW the pinned base would
+    // silently under-report (the pinned pair frame has no edges under
+    // it) — fail loudly instead (ADVICE r19).
+    require(minJaccard >= AuditMinJaccard,
+      s"nearDupClusters thresholds below the pinned $AuditMinJaccard base " +
+        "would drop pairs under it; compute Dedup.jaccardPairs directly " +
         "for looser thresholds")
     val comp =
-      if (minJaccard == 0.3) auditComponentsM(s, dir)
+      if (minJaccard == AuditMinJaccard) auditComponentsM(s, dir)
       else Dedup.connectedComponents(
         auditJaccardM(s, dir).filter(col("jaccard") >= minJaccard)
           .select(col("id1").as("src"), col("id2").as("dst")),
@@ -418,12 +421,10 @@ object TextQueries {
     * aggregate (map-side partial argmax — clusters never materialize as
     * lists) and one equi-join of the |clusters|-sized canonical frame
     * back onto members. */
-  def dedupCanonical(s: SparkSession, dir: String,
-      minJaccard: Double = 0.3): DataFrame = {
+  def dedupCanonical(s: SparkSession, dir: String): DataFrame = {
     // sample, pairs and clustering are the pinned shared frames (memo;
     // this query is the family's bench owner — its cold time carries
     // their materialization)
-    require(minJaccard == 0.3, "q275 is pinned to the family threshold")
     val subset = auditSampleM(s, dir)
     val comps = auditComponentsM(s, dir)
       .select(col("id").as("doc_id"), col("component"))
@@ -450,9 +451,7 @@ object TextQueries {
     * Scale shape: q69's candidate discipline bounds the edge set; on top
     * are two broadcast-able id→source equi-joins and one tiny
     * (|sources|²-grid) aggregate. */
-  def crossSourceDupMatrix(s: SparkSession, dir: String,
-      minJaccard: Double = 0.3): DataFrame = {
-    require(minJaccard == 0.3, "q277 is pinned to the family threshold")
+  def crossSourceDupMatrix(s: SparkSession, dir: String): DataFrame = {
     val subset = auditSampleM(s, dir)
     val edges = auditJaccardM(s, dir)
     val src = subset.select(col("doc_id"), col("source"))
@@ -490,28 +489,17 @@ object TextQueries {
         concat_ws(" ", slice(col("toks"), col("col") + 1, lit(chunkSize))).as("chunk_text"))
       .orderBy(col("doc_id"), col("chunk_idx"))
 
-  /** One row per n-token shingle (doc_id, g): tokenize → explode start
-    * indices → slice+join. All narrow codegen'd ops (sequence/slice/
-    * concat_ws — no interpreted HOF lambdas); the explosion is bounded by
-    * tokens-per-doc, not corpus size. */
   /** Posting-mass stats for q159's gram family — one arm of the d17
     * pair/posting-mass envelope audit (q295): n_units = docs
     * contributing grams, n_keys = distinct grams, mass = Σ df (the
     * posting mass the gram-keyed shuffle carries), kept = the df = 1
     * grams q159's novelty signal extracts. Shares [[shingleRows]] with
     * the registered query so the audited mass IS the query's mass. */
-  /** The distinct trigram frame (doc_id, g), ckpt'd — built once and
-    * shared across the q295 audit rows (q159 novelty + q171/q194 df
-    * stats read the same frame; rebuilding it per row would double the
-    * audit's dominant cost). */
-  private[graft] def gramFrame(s: SparkSession, dir: String): DataFrame =
-    gram3M(s, dir)
-
-  private[graft] def ngramPostingStats(s: SparkSession, dir: String,
-      dgOpt: Option[DataFrame] = None): DataFrame = {
+  private[graft] def ngramPostingStats(s: SparkSession, dir: String): DataFrame = {
     // trigrams, fixed: the oracle twin below hardcodes t[i:i+2]/len>=3 —
-    // a parameter here would silently diverge from the SQL
-    val dg = dgOpt.getOrElse(gramFrame(s, dir))
+    // a parameter here would silently diverge from the SQL. The pinned
+    // frame is the one q159 reads, so the q295 rows share its build.
+    val dg = gram3M(s, dir)
     val units = dg.select(col("doc_id")).distinct()
       .agg(count(lit(1)).as("n_units"))
     dg.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -536,10 +524,9 @@ object TextQueries {
     * the same count), so their rows differ only in name — reported
     * separately anyway because their caps could diverge independently. */
   private[graft] def postingMassStats(s: SparkSession, dir: String,
-      maxDf: Int = 20, winnowK: Int = 16, winnowW: Int = 6,
-      winnowDfCap: Int = 20, dgOpt: Option[DataFrame] = None): DataFrame = {
+      maxDf: Int = 20, winnowDfCap: Int = 20): DataFrame = {
     // gram space (q171/q194): distinct-doc df per trigram
-    val dg = dgOpt.getOrElse(gramFrame(s, dir))
+    val dg = gram3M(s, dir)
     val gUnits = dg.select(col("doc_id")).distinct()
       .agg(count(lit(1)).as("n_units"))
     val gStats = dg.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -552,7 +539,7 @@ object TextQueries {
       col("n_keys"), col("mass"), lit(maxDf.toLong).as("cap"), col("kept"))
     // winnow fingerprint space (q174): the SAME pinned frame winnowPairs
     // builds (d19 memo — the audit literally audits the audited frame)
-    val fps = winnowFpsM(s, dir, winnowK, winnowW)
+    val fps = winnowFpsM(s, dir)
     val wUnits = fps.select(col("doc_id")).distinct()
       .agg(count(lit(1)).as("n_units"))
     val wRow = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -571,7 +558,7 @@ object TextQueries {
 
   /** Oracle twin of [[postingMassStats]] (embed parenthesized). */
   private[graft] val postingMassStatsSql: String = {
-    val (maxDf, k, w, dfCap) = (20, 16, 6, 20)
+    val (maxDf, k, w, dfCap) = (20, WinnowK, WinnowW, 20)
     s"""WITH tok AS (SELECT doc_id, $toksSql AS t FROM documents),
        |gg AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
        |       FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
@@ -640,6 +627,10 @@ object TextQueries {
        |       CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS kept
        |FROM df""".stripMargin
 
+  /** One row per n-token shingle (doc_id, g): tokenize → explode start
+    * indices → slice+join. All narrow codegen'd ops (sequence/slice/
+    * concat_ws — no interpreted HOF lambdas); the explosion is bounded by
+    * tokens-per-doc, not corpus size. */
   private def shingleRows(docs: DataFrame, n: Int,
       minTokens: Option[Int] = None): DataFrame =
     shingleRowsOf(
@@ -710,35 +701,39 @@ object TextQueries {
     }
 
   /** Exact token-Jaccard pairs (with the jaccard column) over the audit
-    * sample at the family-wide base threshold 0.3; tighter thresholds
+    * sample at the family-wide base threshold; tighter thresholds
     * (q84's 0.8) are filters on the rounded score — identical values to
     * running jaccardPairs at the tighter threshold directly. */
   private def auditJaccardM(s: SparkSession, dir: String): DataFrame =
-    graft.etl.ChainCache.memo(s, dir, "txt_audit_jaccard", "minJ=0.3") {
+    graft.etl.ChainCache.memo(s, dir, "txt_audit_jaccard",
+        s"minJ=$AuditMinJaccard") {
       Dedup.jaccardPairs(auditSampleM(s, dir), "doc_id", "text",
-        minJaccard = 0.3)
+        minJaccard = AuditMinJaccard)
     }
 
-  /** The distinct (doc_id, winnow-hash) fingerprint frame (k=16, w=6 —
-    * the registered parameters; any other set builds unpinned). Shared
-    * by q174's pairing and q295's winnow audit arm. */
-  private def winnowFpsM(s: SparkSession, dir: String, k: Int,
-      w: Int): DataFrame = {
-    def build = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        explode(graft.functions.WinnowExpr.winnowOf(
-          TextFunctions.normalize(col("text")), k, w)).as("f"))
-      .select(col("doc_id"), col("f.h").as("h"))
-      .distinct()
-    if (k == 16 && w == 6)
-      graft.etl.ChainCache.memo(s, dir, "txt_winnow_fps", "k=16,w=6")(build)
-    else build.ckpt
-  }
+  /** q174's winnowing parameters: gram length in normalized chars and
+    * window width in grams. */
+  private final val WinnowK = 16
+  private final val WinnowW = 6
 
-  /** Connected components over the 0.3-threshold audit edges — the
+  /** The distinct (doc_id, winnow-hash) fingerprint frame. Shared by
+    * q174's pairing and q295's winnow audit arm. */
+  private def winnowFpsM(s: SparkSession, dir: String): DataFrame =
+    graft.etl.ChainCache.memo(s, dir, "txt_winnow_fps",
+        s"k=$WinnowK,w=$WinnowW") {
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          explode(graft.functions.WinnowExpr.winnowOf(
+            TextFunctions.normalize(col("text")), WinnowK, WinnowW)).as("f"))
+        .select(col("doc_id"), col("f.h").as("h"))
+        .distinct()
+    }
+
+  /** Connected components over the base-threshold audit edges — the
     * (id, component) frame q69 and q275 both derive. */
   private def auditComponentsM(s: SparkSession, dir: String): DataFrame =
-    graft.etl.ChainCache.memo(s, dir, "txt_audit_components", "minJ=0.3") {
+    graft.etl.ChainCache.memo(s, dir, "txt_audit_components",
+        s"minJ=$AuditMinJaccard") {
       Dedup.connectedComponents(
         auditJaccardM(s, dir)
           .select(col("id1").as("src"), col("id2").as("dst")),
@@ -2031,8 +2026,7 @@ object TextQueries {
     * discipline applied to the advanced gates. All four blocks share
     * one scan shape (map-only or histogram-bounded), so the ensemble
     * stays a handful of key-partitioned passes over the corpus. */
-  def curationDecision(s: SparkSession, dir: String,
-      targetBound: Int = 20): DataFrame = {
+  def curationDecision(s: SparkSession, dir: String): DataFrame = {
     val g = gopherM(s, dir)
       .select(col("doc_id"), col("keep").as("g_keep"))
     val c = Classifier.classify(s, dir)
@@ -2040,7 +2034,7 @@ object TextQueries {
         (col("label") === "keep").cast("int").as("c_keep"))
     val p = perplexityBuckets(s, dir)
       .select(col("doc_id"), col("bucket").as("p_bucket"))
-    val d = dsirWeights(s, dir, targetBound)
+    val d = dsirWeights(s, dir)
       .select(col("doc_id"), col("selected").as("d_selected"))
     d.join(g, Seq("doc_id")).join(c, Seq("doc_id")).join(p, Seq("doc_id"))
       .withColumn("n_gates",
@@ -2060,7 +2054,7 @@ object TextQueries {
     s"""WITH gop AS ($gopherOracle),
        |cls AS (${Classifier.oracle}),
        |ppl AS ($perplexityBucketsOracle),
-       |dsr AS (${dsirOracle()})
+       |dsr AS ($dsirOracle)
        |SELECT doc_id, g_keep, c_keep, p_bucket, d_selected, n_gates,
        |       CAST(CASE WHEN n_gates >= 2 THEN 1 ELSE 0 END AS INT) AS keep
        |FROM (
@@ -2638,8 +2632,8 @@ object TextQueries {
     * hashed n-gram distribution is, log w(x) = Σ_tokens log
     * p_T(b)/p_R(b) with add-one smoothing over the 4096-bucket space
     * (the same md5 bucket hash as the q149 classifier, so one SQL
-    * restatement idiom serves both). Target = doc_id < 20 (the
-    * benchmark-set convention of q86/q147); docs with positive log
+    * restatement idiom serves both). Target = doc_id < [[DsirTargetBound]]
+    * (the benchmark-set convention of q86/q147); docs with positive log
     * weight are more target-like than raw-like and marked selected —
     * the deterministic core of DSIR's resampling step (the Gumbel-top-k
     * draw adds an RNG on top of exactly these weights).
@@ -2654,29 +2648,31 @@ object TextQueries {
     * same pass via conditional sums — no second shuffle), a ≤4096-row
     * weight table broadcast back onto token rows, one doc_id aggregate.
     * The token frame feeds the count and score passes → localCheckpoint. */
-  def dsirWeights(s: SparkSession, dir: String, targetBound: Int = 20): DataFrame =
-    if (targetBound == 20)
-      graft.etl.ChainCache.memo(s, dir, "txt_dsir", "b=20") {
-        dsirWeightsImpl(s, dir, targetBound)
-      }
-    else dsirWeightsImpl(s, dir, targetBound)
+  def dsirWeights(s: SparkSession, dir: String): DataFrame =
+    graft.etl.ChainCache.memo(s, dir, "txt_dsir", s"b=$DsirTargetBound") {
+      dsirWeightsImpl(s, dir)
+    }
 
-  private[graft] def dsirWeightsImpl(s: SparkSession, dir: String,
-      targetBound: Int): DataFrame = {
+  /** DSIR's target set: documents with doc_id below this bound. */
+  private final val DsirTargetBound = 20
+
+  /** The [[dsirWeights]] frame before the memo pins it — package-visible
+    * so PlanSpec can assert the build plan. */
+  private[graft] def dsirWeightsImpl(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tok"))
       .withColumn("b", Classifier.bucketOf(col("tok")))
       .ckpt
     val counts = tok.groupBy(col("b")).agg(
-      sum(when(col("doc_id") < targetBound, 1L).otherwise(0L)).as("ct"),
-      sum(when(col("doc_id") >= targetBound, 1L).otherwise(0L)).as("cr"))
+      sum(when(col("doc_id") < DsirTargetBound, 1L).otherwise(0L)).as("ct"),
+      sum(when(col("doc_id") >= DsirTargetBound, 1L).otherwise(0L)).as("cr"))
     val tot = counts.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
     val w = counts.crossJoin(broadcast(tot))
       .select(col("b"),
         round(log2(((col("ct") + 1L) * (col("tr") + 4096L)).cast("double") /
             ((col("cr") + 1L) * (col("tt") + 4096L)).cast("double")) * 10000, 0)
           .cast("long").as("w"))
-    tok.filter(col("doc_id") >= targetBound)
+    tok.filter(col("doc_id") >= DsirTargetBound)
       .join(broadcast(w), Seq("b"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("w")).as("units"))
@@ -2686,16 +2682,16 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
-  private def dsirOracle(targetBound: Int = 20): String =
+  private def dsirOracle: String =
     s"""WITH tok AS (
        |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
        |tb AS (SELECT doc_id,
        |              ('0x' || substr(md5('f:' || tok), 1, 3))::INT AS b
        |       FROM tok),
        |c AS (SELECT b,
-       |             CAST(SUM(CASE WHEN doc_id < $targetBound THEN 1 ELSE 0 END)
+       |             CAST(SUM(CASE WHEN doc_id < $DsirTargetBound THEN 1 ELSE 0 END)
        |                  AS BIGINT) AS ct,
-       |             CAST(SUM(CASE WHEN doc_id >= $targetBound THEN 1 ELSE 0 END)
+       |             CAST(SUM(CASE WHEN doc_id >= $DsirTargetBound THEN 1 ELSE 0 END)
        |                  AS BIGINT) AS cr
        |      FROM tb GROUP BY b),
        |tot AS (SELECT CAST(SUM(ct) AS BIGINT) AS tt,
@@ -2709,7 +2705,7 @@ object TextQueries {
        |       CAST(SUM(w.w) AS BIGINT) / 10000.0 AS logw,
        |       CAST(CASE WHEN SUM(w.w) > 0 THEN 1 ELSE 0 END AS INT) AS selected
        |FROM tb t JOIN w USING (b)
-       |WHERE t.doc_id >= $targetBound
+       |WHERE t.doc_id >= $DsirTargetBound
        |GROUP BY t.doc_id
        |ORDER BY t.doc_id""".stripMargin
 
@@ -3562,11 +3558,11 @@ object TextQueries {
     * sketch. The md5-prefix gram hash is engine-portable, so the ENTIRE
     * pipeline — sketch selection included — is value-checked by the
     * window-enumeration oracle. */
-  def winnowPairs(s: SparkSession, dir: String, k: Int = 16, w: Int = 6,
+  def winnowPairs(s: SparkSession, dir: String,
       dfCap: Int = 20, minShared: Int = 3, minOverlap: Double = 0.2): DataFrame = {
     // consumers: fc, df, both pair sides — and q295's winnow audit arm
     // reads the SAME frame, so it is session-pinned (d19 memo)
-    val fps = winnowFpsM(s, dir, k, w)
+    val fps = winnowFpsM(s, dir)
     val fc = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
     val rareH = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select(col("h"))
@@ -3773,19 +3769,19 @@ object TextQueries {
     * joins each of the w windows covering it, per-window argmin by
     * (hash ASC, pos DESC), distinct selections, then the same df-capped
     * postings pairing. */
-  private def winnowOracle(k: Int = 16, w: Int = 6, dfCap: Int = 20,
+  private def winnowOracle(dfCap: Int = 20,
       minShared: Int = 3, minOverlap: Double = 0.2): String =
     s"""WITH n AS (SELECT doc_id, $norm AS t FROM documents),
-       |g AS (SELECT doc_id, i AS pos, substring(md5(substring(t, i, $k)), 1, 8) AS h
-       |      FROM n, LATERAL unnest(generate_series(1, length(t) - ${k - 1}))
+       |g AS (SELECT doc_id, i AS pos, substring(md5(substring(t, i, $WinnowK)), 1, 8) AS h
+       |      FROM n, LATERAL unnest(generate_series(1, length(t) - ${WinnowK - 1}))
        |        AS u(i)
-       |      WHERE length(t) >= $k),
+       |      WHERE length(t) >= $WinnowK),
        |gc AS (SELECT doc_id, COUNT(*) AS gcnt FROM g GROUP BY doc_id),
        |wins AS (SELECT g.doc_id, g.pos - o.off AS win, g.pos, g.h
        |         FROM g JOIN gc USING (doc_id),
-       |              LATERAL unnest(generate_series(0, ${w - 1})) AS o(off)
+       |              LATERAL unnest(generate_series(0, ${WinnowW - 1})) AS o(off)
        |         WHERE g.pos - o.off >= 1
-       |           AND g.pos - o.off <= greatest(1, gc.gcnt - ${w - 1})),
+       |           AND g.pos - o.off <= greatest(1, gc.gcnt - ${WinnowW - 1})),
        |sel AS (SELECT doc_id, win, pos, h,
        |               ROW_NUMBER() OVER (PARTITION BY doc_id, win
        |                 ORDER BY h, pos DESC) AS rn
@@ -4050,7 +4046,7 @@ object TextQueries {
          |FROM inter
          |JOIN sz s1 ON id1 = s1.id
          |JOIN sz s2 ON id2 = s2.id
-         |WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4) >= 0.3
+         |WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4) >= $AuditMinJaccard
          |ORDER BY id1, id2""".stripMargin)),
     Q("q59_length_percentiles", (s, d) => lengthPercentiles(s, d), Some(
       """SELECT lang,
@@ -4074,7 +4070,8 @@ object TextQueries {
          |       FROM inter
          |       JOIN sz s1 ON id1 = s1.id JOIN sz s2 ON id2 = s2.id
          |       JOIN sm sa ON id1 = sa.doc_id JOIN sm sb ON id2 = sb.doc_id
-         |       WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4) >= 0.3)
+         |       WHERE round(i / CAST(s1.n + s2.n - i AS DOUBLE), 4)
+         |             >= $AuditMinJaccard)
          |SELECT source_a, source_b, CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |       CAST(SUM(CAST(floor(jac * 10000 + 0.5) AS BIGINT)) AS BIGINT)
          |         AS jac_mass_bp
@@ -4200,7 +4197,7 @@ object TextQueries {
       Some(unigramSurprisalOracle)),
     Q("q155_perplexity_buckets", (s, d) => perplexityBuckets(s, d),
       Some(perplexityBucketsOracle)),
-    Q("q157_dsir_weights", (s, d) => dsirWeights(s, d), Some(dsirOracle())),
+    Q("q157_dsir_weights", (s, d) => dsirWeights(s, d), Some(dsirOracle)),
     Q("q158_gopher_rules", (s, d) => gopherRules(s, d), Some(gopherOracle)),
     Q("q159_ngram_novelty", (s, d) => ngramNovelty(s, d),
       Some(ngramNoveltyOracle)),

@@ -27,7 +27,6 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the optimizer batches include the injected rewrites") {
     val rules = state.optimizer.batches.flatMap(_.rules).toSet
     assert(rules.contains(plans.RangeJoinRewrite))
-    assert(rules.contains(plans.ApproxDistinctRewrite))
   }
 
   test("the planner strategies include the native as-of join") {

@@ -7,8 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the Spark job structure of the iterative families: how many jobs
-  * each query fires while it is built (`q.run` — eager pins, collects,
+/** Pins the Spark job structure of the iterative families, the upsert
+  * loader and the memoized dedup/curation chains: how many jobs each
+  * query fires while it is built (`q.run` — eager pins, collects,
   * probes) and while its result executes. Job counts are deterministic
   * for a fixed SF and config, so a change to a loop's pinning or
   * localization policy shows here as a count, not as a timing.
@@ -29,7 +30,17 @@ class JobStructureSpec extends AnyFunSuite {
     "q201_hits_scores" -> (24, 5),
     "q137_kmeans_train" -> (12, 2),
     "q144_semantic_dedup" -> (31, 8),
-    "q131_lsh_dedup_pipeline" -> (33, 3))
+    "q131_lsh_dedup_pipeline" -> (33, 3),
+    "q26_upsert_customers" -> (11, 7),
+    "q157_dsir_weights" -> (11, 1),
+    "q159_ngram_novelty" -> (3, 6),
+    "q167_curation_decision" -> (29, 10),
+    "q174_winnow_candidates" -> (3, 8),
+    "q262_image_neardup" -> (9, 6),
+    "q263_image_dedup_decision" -> (51, 6),
+    "q275_dedup_canonical" -> (40, 8),
+    "q277_cross_source_dups" -> (8, 5),
+    "q295_pair_mass_audit" -> (13, 22))
 
   private val Tag = "graft.jobstructure.phase"
 

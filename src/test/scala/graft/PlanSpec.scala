@@ -105,7 +105,7 @@ class PlanSpec extends AnyFunSuite {
     // the registered query serves the session-pinned frame (d19 memo),
     // whose plan is a checkpoint scan — assert the BUILD plan, which is
     // what production executes once per corpus
-    val p = text.TextQueries.dsirWeightsImpl(spark, TestSpark.sfDir, 20)
+    val p = text.TextQueries.dsirWeightsImpl(spark, TestSpark.sfDir)
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("Expand"), p)

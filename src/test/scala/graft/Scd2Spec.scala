@@ -150,8 +150,8 @@ class Scd2Spec extends AnyFunSuite {
       "like the q260 bucketed-upsert discipline)") {
     val sfDir = TestSpark.sfDir
     graft.etl.EtlQueries.scd2Merge(spark, sfDir).count()
-    val sf = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(s"/tmp/graft_gate/$sf/scd2/customer_dim")
+    val dir = new java.io.File(etl.SheetStage.dirFor(sfDir, "scd2/customer_dim"))
+    assert(dir.isDirectory, s"no landing at $dir")
     def state(): Set[(String, Long)] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)

@@ -93,25 +93,6 @@ class UpsertSpec extends AnyFunSuite {
       (1 to 500).map(i => f"zz$i%04d"), "surrogates not in key order")
   }
 
-  test("sparse surrogates (denseIds=false): unique, above max, no count " +
-      "job path — updates identical to dense mode") {
-    val snap = (1L to 50L).map(i => (i, f"sku$i%04d", s"n$i"))
-      .toDF("id", "sku", "name")
-    val inc = (1 to 500).map(i => (f"zz$i%04d", s"new$i")).toDF("sku", "name")
-      .unionByName(Seq(("sku0007", "renamed")).toDF("sku", "name"))
-    val cfgS = Upsert.Config(surrogate = "id", keyPriority = Seq("sku"),
-      requiredForInsert = Some("name"), denseIds = false)
-    val out = Upsert.upsert(snap, inc, cfgS)
-    val news = out.filter(col("id") > 50L).select(col("id")).as[Long].collect()
-    assert(news.length == 500)
-    assert(news.distinct.length == 500, "sparse surrogates collided")
-    assert(news.forall(_ > 50L), "sparse surrogate at or below snapshot max")
-    // updates are numbering-independent: same resolved row either mode
-    val upd = out.filter(col("id") === 7L).select("name").as[String].head()
-    assert(upd == "renamed")
-    assert(out.count() == 550)
-  }
-
   test("bucketed snapshot: upsert values identical to the raw-parquet " +
       "path (the q260 layout must change the plan, never the data)") {
     val sfDir = TestSpark.sfDir
@@ -126,45 +107,13 @@ class UpsertSpec extends AnyFunSuite {
       "invocation reuses the table instead of re-overwriting it") {
     val sfDir = TestSpark.sfDir
     etl.EtlQueries.upsertCustomersBucketed(spark, sfDir).count()
-    val sf = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(s"/tmp/graft_gate/$sf/bucketed/customer")
+    val dir = new java.io.File(etl.SheetStage.dirFor(sfDir, "bucketed/customer"))
+    assert(dir.isDirectory, s"no landing at $dir")
     def state() = dir.listFiles().map(f => (f.getName, f.lastModified)).toSet
     val before = state()
     etl.EtlQueries.upsertCustomersBucketed(spark, sfDir).count()
     assert(state() == before,
       "second invocation rewrote the bucketed snapshot (measured merge " +
         "passes must not pay — or redo — the landing)")
-  }
-
-  test("sparse surrogates fall back to dense numbering when the snapshot " +
-      "max leaves no headroom for the partition-id term") {
-    val inc = (1 to 20).map(i => (f"zz$i%04d", s"n$i")).toDF("sku", "name")
-    // near-max snapshot id: partitionId·2^33 would overflow (ANSI abort
-    // or negative colliding ids); dense numbering needs only |inserts|
-    val maxId = Long.MaxValue - 100L
-    val out = etl.Upsert.numberInsertsSparse(inc, Seq("sku"), maxId)
-      .select(col("__key")).as[Long].collect().sorted.toSeq
-    assert(out == (1L to 20L).map(maxId + _),
-      "expected the dense fallback's contiguous ids above the max")
-  }
-
-  test("sparse overflow margin derives from the declared partition " +
-      "ceiling, not a hard-coded 2^50") {
-    // default: 2^17-partition headroom -> (2^17+1)*2^33
-    assert(etl.Upsert.sparseMargin(spark) == ((1L << 17) + 1) << 33)
-    val key = "spark.graft.upsert.maxPartitions"
-    try {
-      // a deployment declaring 2^20 scan partitions widens the margin...
-      spark.conf.set(key, (1L << 20).toString)
-      assert(etl.Upsert.sparseMargin(spark) == ((1L << 20) + 1) << 33)
-      // ...and past 2^29 the sparse encoding cannot fit: always dense
-      spark.conf.set(key, (1L << 29).toString)
-      assert(etl.Upsert.sparseMargin(spark) == Long.MaxValue)
-      val inc = Seq(("a", "n")).toDF("sku", "name")
-      val out = etl.Upsert.numberInsertsSparse(inc, Seq("sku"), 10L)
-        .select(col("__key")).as[Long].collect().toSeq
-      assert(out == Seq(11L), "expected dense numbering under the " +
-        "over-ceiling declaration")
-    } finally spark.conf.unset(key)
   }
 }
