@@ -13,11 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vector-index deployment shape is train once, serve many). The pass
   * outputs are deterministic per (session, source dir) — the same
   * immutable-inputs argument as [[SheetStage]], applied one level up —
-  * so the first call materializes (via [[graft.Ckpt]]: localCheckpoint,
-  * or reliable checkpoint under the reliable-mode gate) and later calls
-  * reuse the pinned result. The oracles are NOT weakened: every query
-  * still hash-gates its own output; the memo only stops re-running
-  * upstream passes.
+  * so the first call materializes (via [[graft.Ckpt.onDisk]]: a
+  * session-lived pin whose local blocks sit on disk, not on the heap,
+  * or a reliable checkpoint under the reliable-mode gate) and later
+  * calls reuse the pinned result. The oracles are NOT weakened: every
+  * query still hash-gates its own output; the memo only stops
+  * re-running upstream passes.
   *
   * Keying mirrors `Tables.relations`: session UUID (identity fallback),
   * stopped sessions pruned on access, oldest-first eviction under
@@ -175,8 +176,8 @@ private[graft] object ChainCache {
   }
 
   /** First call per (session, canonical dir, name) materializes `build`
-    * with Ckpt; later calls return the pinned frame. `name` must be
-    * registered in [[passOwner]].
+    * with `Ckpt.onDisk`; later calls return the pinned frame. `name`
+    * must be registered in [[passOwner]].
     *
     * NOT computeIfAbsent for the build: memoized passes nest (the slug
     * pass builds the capstone, which is itself memoized on the SAME
@@ -210,7 +211,7 @@ private[graft] object ChainCache {
     val hit = entry.passes.get(key)
     if (hit != null) checked(hit)
     else {
-      val built = graft.Ckpt(build)
+      val built = graft.Ckpt.onDisk(build)
       val prev = entry.passes.putIfAbsent(key, (tag, built))
       if (prev != null) checked(prev) else built
     }

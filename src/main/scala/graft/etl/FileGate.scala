@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   *  - q117: the same contract for the XML provider (K2) and the provider
   *    registry dispatch (K3): write XML, read it back, match the source.
   *
-  * The sink queries write under /tmp/graft_gate (overwritten per run) —
-  * driver-local scratch, matching the reference's export-folder staging
-  * step (`DataExporter.cs:138-266`); deployment to remote targets is K4
+  * The sink queries write under /tmp/graft_gate, one dir per source dir
+  * (`SheetStage.dirFor`, overwritten per run) — driver-local scratch,
+  * matching the reference's export-folder staging step
+  * (`DataExporter.cs:138-266`); deployment to remote targets is K4
   * (`Deploy`). */
 object FileGate {
 
@@ -176,10 +177,7 @@ object FileGate {
         col("o_orderpriority")),
       orderBy = Seq(col("o_orderkey")),
       limit = Some(200)))
-    // scratch path scoped by SF-dir name: a Verify run and a test run at
-    // DIFFERENT SFs can no longer overwrite each other's round-trip files
-    // mid-read (concurrent same-SF runs still share, by design)
-    val path = s"/tmp/graft_gate/${new java.io.File(dir).getName}/csv_roundtrip"
+    val path = SheetStage.dirFor(dir, "csv_roundtrip")
     Providers("csv")(src.coalesce(1), path, None)
     CsvSource.read(s, path, CsvConfig(skip = 25, take = Some(150)))
       .select(
@@ -210,7 +208,7 @@ object FileGate {
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("decimal(18,2)").as("c_acctbal"), col("n_name"))
       .orderBy(col("c_custkey")).limit(150)
-    val path = s"/tmp/graft_gate/${new java.io.File(dir).getName}/xml_roundtrip"
+    val path = SheetStage.dirFor(dir, "xml_roundtrip")
     Providers("xml")(src.coalesce(1), path, None)
     ExportPipeline.readXml(s, path)
       .select(col("c_custkey").cast("long").as("c_custkey"), col("c_name"),
@@ -238,7 +236,7 @@ object FileGate {
       .select(col("s_suppkey"), col("s_name"),
         col("s_acctbal").cast("decimal(18,2)").as("acctbal"), col("n_name"))
       .orderBy(col("s_suppkey"))
-    val path = s"/tmp/graft_gate/${new java.io.File(dir).getName}/json_roundtrip"
+    val path = SheetStage.dirFor(dir, "json_roundtrip")
     Providers("json")(src.coalesce(1), path, None)
     s.read.schema("s_suppkey LONG, s_name STRING, acctbal DOUBLE, n_name STRING")
       .json(path)
@@ -266,7 +264,7 @@ object FileGate {
         col("l_linestatus")),
       orderBy = Seq(col("l_orderkey"), col("l_linenumber")),
       limit = Some(300)))
-    val path = s"/tmp/graft_gate/${new java.io.File(dir).getName}/orc_roundtrip"
+    val path = SheetStage.dirFor(dir, "orc_roundtrip")
     Providers("orc")(src.coalesce(1), path, None)
     s.read.orc(path)
       .orderBy(col("l_orderkey"), col("l_linenumber"))
@@ -295,7 +293,7 @@ object FileGate {
     * read itself stays partition-parallel and column-pruned either
     * way. */
   def schemaMergeRead(s: SparkSession, dir: String): DataFrame = {
-    val base = s"/tmp/graft_gate/${new java.io.File(dir).getName}/schema_merge"
+    val base = SheetStage.dirFor(dir, "schema_merge")
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -339,8 +337,7 @@ object FileGate {
     * skipping. The oracle restates the semantics over the source
     * table. */
   def partitionedRead(s: SparkSession, dir: String): DataFrame = {
-    val base = s"/tmp/graft_gate/${new java.io.File(dir).getName}" +
-      "/partitioned_events"
+    val base = SheetStage.dirFor(dir, "partitioned_events")
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -362,25 +359,25 @@ object FileGate {
 
   /** Bucketed-layout SLA join (q240): both facts written
     * `bucketBy(8, orderkey)` as EXTERNAL bucketed tables under the
-    * per-SF scratch dir, then q217's exact aggregate chain re-planned
-    * over the bucketed scans — the shuffle-free fact-fact join riding
-    * the correctness gate every round (values must equal the raw-parquet
-    * q217 oracle; PLANS.md "Round-14: q217-shape bucketed-layout A/B"
+    * source dir's scratch dir, then q217's exact aggregate chain
+    * re-planned over the bucketed scans — the shuffle-free fact-fact
+    * join riding the correctness gate every round (values must equal
+    * the raw-parquet q217 oracle; PLANS.md "Round-14: q217-shape bucketed-layout A/B"
     * carries the timings — 1.5× at sf0.1 widening to 2.8× at sf1 — and
     * LayoutSpec pins the zero-join-key-exchange plan). At 100 TB this is
     * the ingest-time layout decision: land orderkey-grained facts
     * bucketed once, and every order-grain join afterwards plans without
     * an exchange. */
   def bucketedSla(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"/tmp/graft_gate/$sf/bucketed"
+    val key = SheetStage.sourceKey(dir)
+    val base = SheetStage.dirFor(dir, "bucketed")
     val liT = graft.operators.Scale.writeBucketed(
       Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate"),
-      s"graft_li_bucketed_$sf", "l_orderkey", 8, Some(s"$base/lineitem"))
+      s"graft_li_bucketed_$key", "l_orderkey", 8, Some(s"$base/lineitem"))
     val ordT = graft.operators.Scale.writeBucketed(
       Tables.orders(s, dir)
         .select("o_orderkey", "o_orderdate", "o_orderpriority"),
-      s"graft_ord_bucketed_$sf", "o_orderkey", 8, Some(s"$base/orders"))
+      s"graft_ord_bucketed_$key", "o_orderkey", 8, Some(s"$base/orders"))
     graft.reports.Audits.slaChain(s.table(liT), s.table(ordT))
   }
 
@@ -391,9 +388,8 @@ object FileGate {
     * the rewrite lost and duplicated nothing; CompactionSpec asserts the
     * file-count mechanics (64 → ⌈bytes/target⌉). */
   def compaction(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val small = s"/tmp/graft_gate/$sf/small_events"
-    val big = s"/tmp/graft_gate/$sf/compacted_events"
+    val small = SheetStage.dirFor(dir, "small_events")
+    val big = SheetStage.dirFor(dir, "compacted_events")
     Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -431,7 +427,7 @@ object FileGate {
     * relies on. */
   def schemaEvolutionRead(s: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(s, dir)
-    val base = s"/tmp/graft_gate/${new java.io.File(dir).getName}/schema_evo"
+    val base = SheetStage.dirFor(dir, "schema_evo")
     c.filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("decimal(18,2)").as("c_acctbal"))

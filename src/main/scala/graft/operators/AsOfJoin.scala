@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, classic}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -142,8 +142,11 @@ object AsOfJoin {
     require(Set("backward", "forward", "nearest")(direction),
       s"direction must be backward|forward|nearest, got $direction")
     val spark = left.sparkSession
-    // works in plain sessions too, not only extension-installed ones
-    GraftBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
+    require(spark.asInstanceOf[classic.SparkSession]
+      .sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy),
+      "asOfNative needs the native as-of planner strategy: build the " +
+        "session with spark.sql.extensions=graft.GraftExtensions " +
+        "(graft.GraftSession.local does)")
     val carried = (rightTs +: valueCols).distinct
     // prune + pre-filter the right side BEFORE the custom node so the
     // parquet scan reads only the joined columns (no optimizer rule

@@ -78,10 +78,9 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans `AsOfJoinPlan` → `AsOfJoinExec`. Injected via
-  * `GraftExtensions` (injectPlannerStrategy) and idempotently added to
-  * `spark.experimental.extraStrategies` by `operators.AsOfJoin.asOfNative`
-  * for sessions built without the extension. */
+/** Plans `AsOfJoinPlan` → `AsOfJoinExec`. Injected only via
+  * `GraftExtensions` (injectPlannerStrategy); `operators.AsOfJoin.asOfNative`
+  * fails on a session built without the extension. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>

@@ -521,22 +521,22 @@ object TextQueries {
     * growth the envelope watches), `n_keys` the full pre-cap key space,
     * `kept` the keys surviving the df cap. q171 and q194 share one df
     * frame (tf-per-doc and distinct-per-doc document frequencies are
-    * the same count), so their rows differ only in name — reported
-    * separately anyway because their caps could diverge independently. */
-  private[graft] def postingMassStats(s: SparkSession, dir: String,
-      maxDf: Int = 20, winnowDfCap: Int = 20): DataFrame = {
+    * the same count) and one cap ([[GramMaxDf]]), so their rows differ
+    * only in name — one row per audited query. */
+  private[graft] def postingMassStats(s: SparkSession, dir: String)
+      : DataFrame = {
     // gram space (q171/q194): distinct-doc df per trigram
     val dg = gram3M(s, dir)
     val gUnits = dg.select(col("doc_id")).distinct()
       .agg(count(lit(1)).as("n_units"))
     val gStats = dg.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("n_keys"),
-        sum(when(col("df") <= maxDf,
+        sum(when(col("df") <= GramMaxDf,
           expr("df * (df - 1) div 2")).otherwise(0L)).as("mass"),
-        sum(when(col("df") <= maxDf, 1L).otherwise(0L)).as("kept"))
+        sum(when(col("df") <= GramMaxDf, 1L).otherwise(0L)).as("kept"))
       .crossJoin(broadcast(gUnits))
     def gRow(q: String) = gStats.select(lit(q).as("query"), col("n_units"),
-      col("n_keys"), col("mass"), lit(maxDf.toLong).as("cap"), col("kept"))
+      col("n_keys"), col("mass"), lit(GramMaxDf.toLong).as("cap"), col("kept"))
     // winnow fingerprint space (q174): the SAME pinned frame winnowPairs
     // builds (d19 memo — the audit literally audits the audited frame)
     val fps = winnowFpsM(s, dir)
@@ -544,12 +544,12 @@ object TextQueries {
       .agg(count(lit(1)).as("n_units"))
     val wRow = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("n_keys"),
-        sum(when(col("df") <= winnowDfCap,
+        sum(when(col("df") <= WinnowDfCap,
           expr("df * (df - 1) div 2")).otherwise(0L)).as("mass"),
-        sum(when(col("df") <= winnowDfCap, 1L).otherwise(0L)).as("kept"))
+        sum(when(col("df") <= WinnowDfCap, 1L).otherwise(0L)).as("kept"))
       .crossJoin(broadcast(wUnits))
       .select(lit("q174_winnow_candidates").as("query"), col("n_units"),
-        col("n_keys"), col("mass"), lit(winnowDfCap.toLong).as("cap"),
+        col("n_keys"), col("mass"), lit(WinnowDfCap.toLong).as("cap"),
         col("kept"))
     gRow("q171_sparse_cosine")
       .unionByName(gRow("q194_containment_pairs"))
@@ -558,33 +558,32 @@ object TextQueries {
 
   /** Oracle twin of [[postingMassStats]] (embed parenthesized). */
   private[graft] val postingMassStatsSql: String = {
-    val (maxDf, k, w, dfCap) = (20, WinnowK, WinnowW, 20)
     s"""WITH tok AS (SELECT doc_id, $toksSql AS t FROM documents),
        |gg AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
        |       FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
        |       WHERE len(t) >= 3),
        |gdf AS (SELECT g, COUNT(*) AS df FROM gg GROUP BY g),
        |gs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-       |              CAST(SUM(CASE WHEN df <= $maxDf
+       |              CAST(SUM(CASE WHEN df <= $GramMaxDf
        |                   THEN df * (df - 1) // 2 ELSE 0 END) AS BIGINT)
        |                AS mass,
-       |              CAST(SUM(CASE WHEN df <= $maxDf THEN 1 ELSE 0 END)
+       |              CAST(SUM(CASE WHEN df <= $GramMaxDf THEN 1 ELSE 0 END)
        |                   AS BIGINT) AS kept,
        |              (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) FROM gg)
        |                AS n_units
        |       FROM gdf),
        |wn AS (SELECT doc_id, $norm AS t FROM documents),
        |wg AS (SELECT doc_id, i AS pos,
-       |              substring(md5(substring(t, i, $k)), 1, 8) AS h
-       |       FROM wn, LATERAL unnest(generate_series(1, length(t) - ${k - 1}))
+       |              substring(md5(substring(t, i, $WinnowK)), 1, 8) AS h
+       |       FROM wn, LATERAL unnest(generate_series(1, length(t) - ${WinnowK - 1}))
        |         AS u(i)
-       |       WHERE length(t) >= $k),
+       |       WHERE length(t) >= $WinnowK),
        |wgc AS (SELECT doc_id, COUNT(*) AS gcnt FROM wg GROUP BY doc_id),
        |wwins AS (SELECT wg.doc_id, wg.pos - o.off AS win, wg.pos, wg.h
        |          FROM wg JOIN wgc USING (doc_id),
-       |               LATERAL unnest(generate_series(0, ${w - 1})) AS o(off)
+       |               LATERAL unnest(generate_series(0, ${WinnowW - 1})) AS o(off)
        |          WHERE wg.pos - o.off >= 1
-       |            AND wg.pos - o.off <= greatest(1, wgc.gcnt - ${w - 1})),
+       |            AND wg.pos - o.off <= greatest(1, wgc.gcnt - ${WinnowW - 1})),
        |wsel AS (SELECT doc_id, win, pos, h,
        |                ROW_NUMBER() OVER (PARTITION BY doc_id, win
        |                  ORDER BY h, pos DESC) AS rn
@@ -592,22 +591,22 @@ object TextQueries {
        |wfpd AS (SELECT DISTINCT doc_id, h FROM wsel WHERE rn = 1),
        |wdf AS (SELECT h, COUNT(*) AS df FROM wfpd GROUP BY h),
        |ws AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-       |              CAST(SUM(CASE WHEN df <= $dfCap
+       |              CAST(SUM(CASE WHEN df <= $WinnowDfCap
        |                   THEN df * (df - 1) // 2 ELSE 0 END) AS BIGINT)
        |                AS mass,
-       |              CAST(SUM(CASE WHEN df <= $dfCap THEN 1 ELSE 0 END)
+       |              CAST(SUM(CASE WHEN df <= $WinnowDfCap THEN 1 ELSE 0 END)
        |                   AS BIGINT) AS kept,
        |              (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) FROM wfpd)
        |                AS n_units
        |       FROM wdf)
        |SELECT 'q171_sparse_cosine' AS query, n_units, n_keys, mass,
-       |       CAST($maxDf AS BIGINT) AS cap, kept FROM gs
+       |       CAST($GramMaxDf AS BIGINT) AS cap, kept FROM gs
        |UNION ALL
        |SELECT 'q194_containment_pairs', n_units, n_keys, mass,
-       |       CAST($maxDf AS BIGINT), kept FROM gs
+       |       CAST($GramMaxDf AS BIGINT), kept FROM gs
        |UNION ALL
        |SELECT 'q174_winnow_candidates', n_units, n_keys, mass,
-       |       CAST($dfCap AS BIGINT), kept FROM ws""".stripMargin
+       |       CAST($WinnowDfCap AS BIGINT), kept FROM ws""".stripMargin
   }
 
   /** Oracle twin of [[ngramPostingStats]] (self-contained WITH…SELECT —
@@ -715,6 +714,13 @@ object TextQueries {
     * window width in grams. */
   private final val WinnowK = 16
   private final val WinnowW = 6
+
+  /** q174's pairing rules: the fingerprint document-frequency cap (also
+    * the cap q295's winnow audit row reports), the minimum shared
+    * fingerprints and the minimum overlap against the smaller sketch. */
+  private final val WinnowDfCap = 20
+  private final val WinnowMinShared = 3
+  private final val WinnowMinOverlap = 0.2
 
   /** The distinct (doc_id, winnow-hash) fingerprint frame. Shared by
     * q174's pairing and q295's winnow audit arm. */
@@ -1793,29 +1799,37 @@ object TextQueries {
        |FROM s
        |ORDER BY epoch, shard, pos""".stripMargin
 
+  /** Document-frequency cap of the trigram postings: q171 and q194
+    * pair only through grams in at most this many documents, and q295's
+    * gram audit rows report it as their cap. */
+  private final val GramMaxDf = 20
+  /** q171's top-k pairs by cosine. */
+  private final val SparseCosineK = 50
+  /** q194's containment threshold τ. */
+  private final val ContainmentTau = 0.5
+
   /** Sparse TF-IDF cosine similarity join (q171) — the inverted-index
     * similarity measure between documents: 3-gram shingle features,
     * integer-quantized idf weights, candidate pairs generated ONLY
-    * through shared features whose document frequency is ≤ maxDf (the
+    * through shared features whose document frequency is ≤ GramMaxDf (the
     * stop-list rule every sparse similarity join ships: a feature in
     * half the corpus pairs everything with everything and carries no
-    * signal — dropping it bounds the join at Σ df² ≤ maxDf·|postings|
-    * instead of quadratic). Complements the minhash path (q36 finds
-    * probable near-dups; this scores a weighted similarity exactly) and
-    * the dense path (q40 embeddings).
+    * signal — dropping it bounds the join at
+    * Σ df² ≤ GramMaxDf·|postings| instead of quadratic). Complements
+    * the minhash path (q36 finds probable near-dups; this scores a
+    * weighted similarity exactly) and the dense path (q40 embeddings).
     *
     * Determinism: idf quantizes to 1e-4-bit units from exact integer
     * (N, df) — the q122 pattern; weights and norms are exact long
     * sums; the final cosine divides doubles derived from those longs.
     * Norms are over the PRUNED vectors (both engines, same rule). */
-  def sparseCosinePairs(s: SparkSession, dir: String, maxDf: Int = 20,
-      k: Int = 50): DataFrame = {
+  def sparseCosinePairs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     // the (doc_id, g, tf) frame is the pinned shared frame (memo)
     val tf = gram3TfM(s, dir)
     val df = tf.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
+      .filter(col("df") <= GramMaxDf)
     val total = docs.agg(count(lit(1)).as("n"))
     val w = tf.join(df, Seq("g")).crossJoin(broadcast(total))
       .select(col("doc_id"), col("g"),
@@ -1837,7 +1851,7 @@ object TextQueries {
           (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))), 4)
           .as("cos"))
       .orderBy(col("cos").desc, col("id1"), col("id2"))
-      .limit(k)
+      .limit(SparseCosineK)
     scored.withColumn("rn", row_number().over(
         Window.orderBy(col("cos").desc, col("id1"), col("id2"))))
       .orderBy(col("rn"))
@@ -1851,20 +1865,19 @@ object TextQueries {
     * Broder-style containment measure a quote/subset-dedup pass runs.
     *
     * Feature space: distinct 3-gram shingles with document frequency
-    * ≤ maxDf — the q171 stop-list rule; both the intersection AND the
+    * ≤ GramMaxDf — the q171 stop-list rule; both the intersection AND the
     * denominators are over the pruned space (same rule both engines),
     * which bounds the candidate join at Σ df² and keeps the measure
     * self-consistent. Candidates arise ONLY through shared grams —
     * never all-pairs; each undirected pair scores both directions in
     * one pass from the two size joins. Counts are exact longs; each
     * score is one quotient of identical longs, rounded 4dp. */
-  def containmentPairs(s: SparkSession, dir: String, maxDf: Int = 20,
-      tau: Double = 0.5): DataFrame = {
+  def containmentPairs(s: SparkSession, dir: String): DataFrame = {
     // the distinct shingle set is the pinned shared frame (memo) — the
     // df filter, sizes and join sides all read it without re-shingling
     val sh = gram3M(s, dir)
     val dfq = sh.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
+      .filter(col("df") <= GramMaxDf)
     val p = sh.join(dfq.select(col("g")), Seq("g"))
       .ckpt // consumers: sizes + both join sides
     val sz = p.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -1880,17 +1893,17 @@ object TextQueries {
         col("i"), round(col("i") / col("n1").cast("double"), 4).as("score"))
       .unionByName(sized.select(col("id2").as("src"), col("id1").as("dst"),
         col("i"), round(col("i") / col("n2").cast("double"), 4).as("score")))
-    directed.filter(col("score") >= tau)
+    directed.filter(col("score") >= ContainmentTau)
       .select(col("src"), col("dst"), col("i").as("shared"), col("score"))
       .orderBy(col("src"), col("dst"))
   }
 
-  private def containmentOracle(maxDf: Int = 20, tau: Double = 0.5): String =
+  private def containmentOracle: String =
     s"""WITH tok AS (SELECT doc_id, $toksSql AS t FROM documents),
        |g AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
        |      FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
        |      WHERE len(t) >= 3),
-       |dfq AS (SELECT g FROM g GROUP BY g HAVING COUNT(*) <= $maxDf),
+       |dfq AS (SELECT g FROM g GROUP BY g HAVING COUNT(*) <= $GramMaxDf),
        |p AS (SELECT g.doc_id, g.g FROM g JOIN dfq USING (g)),
        |sz AS (SELECT doc_id, COUNT(*) AS n FROM p GROUP BY doc_id),
        |inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
@@ -1907,17 +1920,17 @@ object TextQueries {
        |  SELECT id2 AS src, id1 AS dst, i,
        |         round(i / CAST(n2 AS DOUBLE), 4) AS score FROM sized)
        |SELECT src, dst, i AS shared, score
-       |FROM directed WHERE score >= $tau
+       |FROM directed WHERE score >= $ContainmentTau
        |ORDER BY src, dst""".stripMargin
 
-  private def sparseCosineOracle(maxDf: Int = 20, k: Int = 50): String =
+  private def sparseCosineOracle: String =
     s"""WITH tok AS (SELECT doc_id, $toksSql AS t FROM documents),
        |g AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
        |      FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
        |      WHERE len(t) >= 3),
        |tf AS (SELECT doc_id, g, COUNT(*) AS tf FROM g GROUP BY 1, 2),
        |dfq AS (SELECT g, COUNT(*) AS df FROM tf GROUP BY g
-       |        HAVING COUNT(*) <= $maxDf),
+       |        HAVING COUNT(*) <= $GramMaxDf),
        |tot AS (SELECT COUNT(*) AS n FROM documents),
        |w AS (SELECT tf.doc_id, tf.g,
        |             CAST(tf.tf * CAST(round(log2(CAST(tot.n AS DOUBLE)
@@ -1937,7 +1950,7 @@ object TextQueries {
        |           FROM dots d
        |           JOIN nrm n1 ON d.id1 = n1.doc_id
        |           JOIN nrm n2 ON d.id2 = n2.doc_id
-       |           ORDER BY cos DESC, d.id1, d.id2 LIMIT $k)
+       |           ORDER BY cos DESC, d.id1, d.id2 LIMIT $SparseCosineK)
        |SELECT id1, id2, cos,
        |       CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, id1, id2) AS INT)
        |         AS rn
@@ -3550,33 +3563,32 @@ object TextQueries {
     * Fingerprints come from the one-pass `WinnowFingerprints` expression
     * (map-side; sketch density ~2/(w+1) per char — the only rows that
     * reach a shuffle). Pairing is the bucketed-postings shape shared with
-    * q36/q171: per-hash document lists, DF-CAPPED at `dfCap` (a ubiquitous
-    * boilerplate fingerprint would otherwise create one quadratic
-    * bucket; at the cap the pair volume is bounded by Σ df² ≤ dfCap ·
-    * Σ df — linear in sketch volume), pair score = shared fingerprint
-    * count, reported with the overlap coefficient against the smaller
-    * sketch. The md5-prefix gram hash is engine-portable, so the ENTIRE
-    * pipeline — sketch selection included — is value-checked by the
-    * window-enumeration oracle. */
-  def winnowPairs(s: SparkSession, dir: String,
-      dfCap: Int = 20, minShared: Int = 3, minOverlap: Double = 0.2): DataFrame = {
+    * q36/q171: per-hash document lists, DF-CAPPED at `WinnowDfCap` (a
+    * ubiquitous boilerplate fingerprint would otherwise create one
+    * quadratic bucket; at the cap the pair volume is bounded by
+    * Σ df² ≤ WinnowDfCap · Σ df — linear in sketch volume), pair
+    * score = shared fingerprint count, reported with the overlap
+    * coefficient against the smaller sketch. The md5-prefix gram hash
+    * is engine-portable, so the ENTIRE pipeline — sketch selection
+    * included — is value-checked by the window-enumeration oracle. */
+  def winnowPairs(s: SparkSession, dir: String): DataFrame = {
     // consumers: fc, df, both pair sides — and q295's winnow audit arm
     // reads the SAME frame, so it is session-pinned (d19 memo)
     val fps = winnowFpsM(s, dir)
     val fc = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
     val rareH = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap).select(col("h"))
+      .filter(col("df") <= WinnowDfCap).select(col("h"))
     val rare = fps.join(rareH, Seq("h"))
     val pairs = rare.select(col("h"), col("doc_id").as("id1"))
       .join(rare.select(col("h"), col("doc_id").as("id2")), Seq("h"))
       .filter(col("id1") < col("id2"))
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
+      .filter(col("shared_fps") >= WinnowMinShared)
     pairs
       .join(fc.select(col("doc_id").as("id1"), col("nfp").as("nf1")), Seq("id1"))
       .join(fc.select(col("doc_id").as("id2"), col("nfp").as("nf2")), Seq("id2"))
       .filter(col("shared_fps") * lit(1.0) / least(col("nf1"), col("nf2"))
-        >= minOverlap)
+        >= WinnowMinOverlap)
       .select(col("id1"), col("id2"), col("shared_fps"),
         round(col("shared_fps") * lit(1.0) / least(col("nf1"), col("nf2")), 4)
           .as("overlap"))
@@ -3769,8 +3781,7 @@ object TextQueries {
     * joins each of the w windows covering it, per-window argmin by
     * (hash ASC, pos DESC), distinct selections, then the same df-capped
     * postings pairing. */
-  private def winnowOracle(dfCap: Int = 20,
-      minShared: Int = 3, minOverlap: Double = 0.2): String =
+  private def winnowOracle: String =
     s"""WITH n AS (SELECT doc_id, $norm AS t FROM documents),
        |g AS (SELECT doc_id, i AS pos, substring(md5(substring(t, i, $WinnowK)), 1, 8) AS h
        |      FROM n, LATERAL unnest(generate_series(1, length(t) - ${WinnowK - 1}))
@@ -3792,13 +3803,13 @@ object TextQueries {
        |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS shared
        |          FROM fpd a JOIN fpd b ON a.h = b.h AND a.doc_id < b.doc_id
        |          JOIN df ON df.h = a.h
-       |          WHERE df.df <= $dfCap
-       |          GROUP BY 1, 2 HAVING COUNT(*) >= $minShared)
+       |          WHERE df.df <= $WinnowDfCap
+       |          GROUP BY 1, 2 HAVING COUNT(*) >= $WinnowMinShared)
        |SELECT p.id1, p.id2, CAST(p.shared AS BIGINT) AS shared_fps,
        |       round(p.shared * 1.0 / least(f1.nfp, f2.nfp), 4) AS overlap
        |FROM pairs p JOIN fc f1 ON f1.doc_id = p.id1
        |             JOIN fc f2 ON f2.doc_id = p.id2
-       |WHERE p.shared * 1.0 / least(f1.nfp, f2.nfp) >= $minOverlap
+       |WHERE p.shared * 1.0 / least(f1.nfp, f2.nfp) >= $WinnowMinOverlap
        |ORDER BY p.id1, p.id2""".stripMargin
 
   /** Mojibake (double-encoded UTF-8) audit + repair (q274) — the ingest
@@ -3852,7 +3863,7 @@ object TextQueries {
     Q("q274_mojibake_audit", (s, d) => mojibakeAudit(s, d),
       Some(mojibakeOracle)),
     Q("q174_winnow_candidates", (s, d) => winnowPairs(s, d),
-      Some(winnowOracle())),
+      Some(winnowOracle)),
     Q("q178_weighted_sample", (s, d) => weightedSample(s, d),
       Some(weightedSampleOracle())),
     Q("q185_pmi_collocations", (s, d) => pmiCollocations(s, d),
@@ -4215,9 +4226,9 @@ object TextQueries {
     Q("q169_corpus_datasheet", (s, d) => corpusDatasheet(s, d),
       Some(corpusDatasheetOracle)),
     Q("q194_containment_pairs", (s, d) => containmentPairs(s, d),
-      Some(containmentOracle())),
+      Some(containmentOracle)),
     Q("q171_sparse_cosine", (s, d) => sparseCosinePairs(s, d),
-      Some(sparseCosineOracle())),
+      Some(sparseCosineOracle)),
     Q("q172_quality_dedup", (s, d) => qualityAwareDedup(s, d),
       Some(qualityAwareDedupOracle)),
     Q("q173_langid_confusion", (s, d) => langIdConfusion(s, d),

@@ -59,12 +59,4 @@ object GraftBridge {
     * event posted so far reached every listener (a job's end event is
     * posted before its action returns, so a drain after it sees it). */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  /** Idempotently add a planner strategy to the session's experimental
-    * hooks — the runtime fallback for sessions built without
-    * `spark.sql.extensions=graft.GraftExtensions`. */
-  def addStrategy(spark: SparkSession, s: execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(s)) exp.extraStrategies = exp.extraStrategies :+ s
-  }
 }

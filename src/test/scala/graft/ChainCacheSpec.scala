@@ -65,6 +65,37 @@ class ChainCacheSpec extends AnyFunSuite {
     assert(builds == 1)
   }
 
+  test("memo passes hold no heap blocks; per-query pins stay in memory") {
+    import graft.Ckpt.Ops
+    val s2 = spark.newSession()
+    val tmp = java.nio.file.Files.createTempDirectory("chaincache-disk")
+      .toFile.getAbsolutePath
+    val pass = etl.ChainCache.memo(s2, tmp, "sim_kmeans_hotcell_k2_i1",
+      tag = "k=2,iters=1")(s2.range(1000).toDF())
+    val pin = s2.range(1000).toDF().ckpt
+    def storage(df: org.apache.spark.sql.DataFrame) = {
+      val id = df.queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      assert(id.isDefined, df.queryExecution.logical.toString)
+      s2.sparkContext.getRDDStorageInfo.find(_.id == id.get)
+    }
+    val reliable =
+      s2.conf.get("spark.graft.checkpoint.reliable", "false").toBoolean
+    if (reliable) {
+      // a reliable checkpoint lives in the checkpoint dir, never in blocks
+      assert(storage(pass).forall(_.memSize == 0), storage(pass))
+    } else {
+      val p = storage(pass)
+      assert(p.exists(i => i.memSize == 0 && i.diskSize > 0),
+        s"memo pass must sit on disk only: $p")
+      val q = storage(pin)
+      assert(q.exists(i => i.storageLevel.useMemory && i.memSize > 0),
+        s"a per-query pin must keep its memory storage level: $q")
+    }
+    assert(pass.count() == 1000 && pin.count() == 1000)
+  }
+
   test("every pass's owner sorts before all its consumers (bench cold-ownership)") {
     // Bench reports owners' COLD first-in-session times, which is only
     // true if the owner runs before any consumer of its pass — and Bench

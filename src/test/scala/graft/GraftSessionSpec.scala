@@ -30,7 +30,13 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("the planner strategies include the native as-of join") {
-    assert(state.planner.strategies.contains(plans.AsOfJoinStrategy))
+    // GraftSession.local's own session and a newSession() of it: the
+    // strategy comes from GraftExtensions, never a runtime experimental hook
+    for (s <- Seq(TestSpark.spark, fresh)) {
+      val c = s.asInstanceOf[classic.SparkSession]
+      assert(c.sessionState.planner.strategies.contains(plans.AsOfJoinStrategy))
+      assert(!c.experimental.extraStrategies.contains(plans.AsOfJoinStrategy))
+    }
   }
 
   test("SPARK_GRAFT_CONF: key=value entries, empty entries skipped") {

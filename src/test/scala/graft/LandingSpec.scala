@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Landed snapshots (q260's bucketed customer table, q269/q270's SCD2
-  * dimension) and the SCD2 fresh-key offset belong to ONE source dir:
-  * a second dir with the same basename in the same session must land
-  * and read its own data, never the first dir's. */
+  * dimension), the SCD2 fresh-key offset and FileGate's scratch layouts
+  * (q240's bucketed tables, q244's compacted files) belong to ONE source
+  * dir: a second dir with the same basename in the same session must
+  * land and read its own data, never the first dir's. */
 class LandingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -43,6 +44,46 @@ class LandingSpec extends AnyFunSuite {
     } finally {
       val key = etl.SheetStage.sourceKey(b)
       Seq("graft_cust_bucketed", "graft_scd2_dim")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t}_$key"))
+      Seq(new java.io.File(s"/tmp/graft_gate/$key"), root)
+        .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    }
+  }
+
+  test("q240/q244 scratch layouts are keyed by the canonical source dir") {
+    val a = TestSpark.sfDir
+    // a second dir with the SAME basename holding the even order keys and
+    // even event ids only
+    val root = java.nio.file.Files.createTempDirectory("graft_gate_key").toFile
+    val b = new java.io.File(root, new java.io.File(a).getName).getPath
+    def copy(t: String, keep: org.apache.spark.sql.Column): Unit =
+      spark.read.parquet(s"$a/$t.parquet").filter(keep)
+        .write.parquet(s"$b/$t.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    def eventsAgg(dir: String) = Tables.events(spark, dir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double")
+          .as("total_value"))
+    try {
+      copy("lineitem", col("l_orderkey") % 2 === 0)
+      copy("orders", col("o_orderkey") % 2 === 0)
+      copy("events", col("event_id") % 2 === 0)
+      // both dirs construct (and so write their layouts) before either
+      // frame is read
+      val built = Seq(a, b).map(d => (d,
+        etl.FileGate.bucketedSla(spark, d), etl.FileGate.compaction(spark, d)))
+      val expected = Seq(a, b).map(d =>
+        (rows(reports.Audits.slaPercentiles(spark, d)), rows(eventsAgg(d))))
+      assert(expected(0) != expected(1), "the two dirs must differ")
+      built.zip(expected).foreach { case ((d, q240, q244), (q217, agg)) =>
+        assert(rows(q240) == q217, s"q240 on $d diverged from its q217")
+        assert(rows(q244) == agg, s"q244 on $d diverged from its events")
+      }
+    } finally {
+      val key = etl.SheetStage.sourceKey(b)
+      Seq("graft_li_bucketed", "graft_ord_bucketed")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t}_$key"))
       Seq(new java.io.File(s"/tmp/graft_gate/$key"), root)
         .foreach(org.apache.commons.io.FileUtils.deleteDirectory)

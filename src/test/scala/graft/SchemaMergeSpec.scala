@@ -11,8 +11,7 @@ class SchemaMergeSpec extends AnyFunSuite {
   test("merged read carries the evolved column; pre-evolution rows are " +
       "null-filled, post-evolution rows keep their values") {
     etl.FileGate.schemaMergeRead(spark, TestSpark.sfDir).collect() // write gens
-    val base = s"/tmp/graft_gate/${new java.io.File(TestSpark.sfDir).getName}" +
-      "/schema_merge"
+    val base = etl.SheetStage.dirFor(TestSpark.sfDir, "schema_merge")
     val merged = spark.read.option("mergeSchema", "true")
       .parquet(s"$base/gen1", s"$base/gen2")
     assert(merged.columns.contains("o_orderpriority"),
