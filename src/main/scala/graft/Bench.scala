@@ -67,7 +67,7 @@ object Bench {
     val passTotals = passes.map(_.map(_._2).sum).map(t => f"$t%.2f").mkString("[", ",", "]")
     // verbose line first (full query names, methodology) for humans reading
     // the whole log…
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cold_total_sec":$coldTotal,"warm_total_sec":$warmTotal,"stage_sec":$stageSec,"pass_totals_sec":$passTotals,"methodology":"per-query full physical-plan execution (queryExecution.toRdd.count) at local[$cpus]; one-time order-preserving row-group layout staging (stage_sec, excluded from query times; spark.graft.bench.stageLayout=false reverts), one untimed warmup pass (codegen/JIT), then three measured passes, per-query median reported (ChainCache-memoized chain queries report their cold first-in-session time instead: warm passes only scan the pinned frame); first post-warmup pass total in cold_total_sec"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cold_total_sec":$coldTotal,"warm_total_sec":$warmTotal,"stage_sec":$stageSec,"pass_totals_sec":$passTotals,"methodology":"per-query full physical-plan execution (queryExecution.toRdd.count) at local[$cpus]; one-time order-preserving row-group layout staging (stage_sec, excluded from query times), one untimed warmup pass (codegen/JIT), then three measured passes, per-query median reported (ChainCache-memoized chain queries report their cold first-in-session time instead: warm passes only scan the pinned frame); first post-warmup pass total in cold_total_sec"}""")
     // …and the COMPLETE compact per-query dict to a FILE (the driver's
     // stdout tail keeps only ~2000 chars — 261 entries × ~13 chars never
     // fit, which left BENCH_rN.json unparseable; the file always has all

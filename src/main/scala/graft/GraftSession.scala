@@ -12,8 +12,6 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.graft.checkpoint.reliable`: `Ckpt` pins with reliable
   *    checkpoints instead of `localCheckpoint` (deployment setting).
   *  - `spark.graft.checkpoint.dir`: where reliable checkpoints go.
-  *  - `spark.graft.bench.stageLayout`: [[prepare]]'s layout staging
-  *    (default on).
   *  - `spark.graft.scan.stagedDir`, `spark.graft.scan.stagedSrc`: the
   *    staged copy `Tables.stageLayout` wrote and the source dir it
   *    belongs to (state, not a user setting).
@@ -67,36 +65,29 @@ object GraftSession {
     }
 
   /** Bench's set-up before the first measured query; returns the layout
-    * staging time in seconds (0 when staging is off).
+    * staging time in seconds.
     *
     * Warmup initializes the codegen/shuffle machinery, and every table's
     * footer is touched, so the first measured query pays query cost, not
     * JVM startup.
     *
-    * Layout staging (`spark.graft.bench.stageLayout`, default on): the
-    * generated tables arrive as ONE row group each, which serializes
-    * every query's first stage (Spark parallelizes across row groups,
-    * never within one — measured 5× on the 600k-row lineitem at 32
-    * threads). A deployment fixes that once at ingest; the bench does
+    * Layout staging: the generated tables arrive as ONE row group each,
+    * which serializes every query's first stage (Spark parallelizes
+    * across row groups, never within one — measured 5× on the 600k-row
+    * lineitem at 32 threads). A deployment fixes that once at ingest; the bench does
     * the same up front — an order-preserving row-group split into /tmp,
     * mtime-keyed so reruns reuse it — and sizes maxPartitionBytes to
     * the row-group size so the splits actually parallelize. The
-    * correctness gate (Verify) keeps reading the ORIGINAL files. Off
-    * tokens are parsed leniently — a tuning run passing "off"/"0" must
-    * disable staging, not crash in String.toBoolean. */
+    * correctness gate (Verify) keeps reading the ORIGINAL files. */
   def prepare(spark: SparkSession, sfDir: String): Double = {
     spark.range(100000).selectExpr("id % 10 AS k", "id AS v")
       .groupBy("k").count().count()
-    val stageOn = !spark.conf.getOption("spark.graft.bench.stageLayout")
-      .exists(v => Set("false", "0", "off", "no").contains(v.trim.toLowerCase))
-    val stageSec = if (stageOn) {
-      val t0 = System.nanoTime()
-      val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-      val blockBytes = 1L << 20
-      Tables.stageLayout(spark, sfDir, s"/tmp/graft_stage/$sfName", blockBytes)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", blockBytes.toString)
-      (System.nanoTime() - t0) / 1e9
-    } else 0.0
+    val t0 = System.nanoTime()
+    val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
+    val blockBytes = 1L << 20
+    Tables.stageLayout(spark, sfDir, s"/tmp/graft_stage/$sfName", blockBytes)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", blockBytes.toString)
+    val stageSec = (System.nanoTime() - t0) / 1e9
     Tables.names.foreach { t =>
       try Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }

@@ -30,7 +30,6 @@ object SearchService {
 
   def register(scope: String, p: SearchProvider): Unit = providers.put(scope, p)
   def unregister(scope: String): Unit = providers.remove(scope)
-  def providerFor(scope: String): Option[SearchProvider] = providers.get(scope)
 
   /** `SearchAsync(query, direct)`: provider → fallback chain. */
   def search(df: DataFrame, q: Search.Query, scope: String = Scope,

@@ -87,10 +87,9 @@ object ExportCapstone {
   private val PartName = "^part-(\\d+)-.*?(?:-c(\\d+))?\\.[A-Za-z0-9.]+$".r
 
   def exportCapstone(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val outDir = s"/tmp/graft_gate/$sf/export_capstone/out"
-    val deployDir = s"/tmp/graft_gate/$sf/export_capstone/deploy"
-    val zipPath = s"/tmp/graft_gate/$sf/export_capstone/$ProfileName.zip"
+    val root = SheetStage.dirFor(dir, "export_capstone")
+    val outDir = s"$root/out"
+    val deployDir = s"$root/deploy"
 
     // ---- profile extract: open orders of 1995, projected
     val profile = ExportPipeline.Profile(
@@ -183,7 +182,7 @@ object ExportCapstone {
     if (java.nio.file.Files.isDirectory(dd))
       Deploy.outputFiles(deployDir).foreach(java.nio.file.Files.delete)
     new Deploy.FolderPublisher(deployDir).publish(renamed)
-    Deploy.zipOutput(deployDir, zipPath)
+    Deploy.zipOutput(deployDir, s"$root/$ProfileName.zip")
     renamed.foreach(java.nio.file.Files.deleteIfExists(_)) // profile.Cleanup
 
     // ---- completion email queue row

@@ -128,8 +128,7 @@ object ImportCapstone {
     * (`FindEqualPicture`). 5 rows — broadcast side. */
   private def mediaKeyMap(s: SparkSession, dir: String): DataFrame = {
     ensureMediaFixture()
-    val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val staged = s"/tmp/graft_gate/$sf/import_capstone_media"
+    val staged = SheetStage.dirFor(dir, "import_capstone_media")
     val urls = (0 to 4).map(k => s"file://$MediaSrcDir/img_$k.bin")
     val fetched = Download.fetchAll(urls, staged).filter(_._3)
     import s.implicits._

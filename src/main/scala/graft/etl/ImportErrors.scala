@@ -21,21 +21,6 @@ object ImportErrors {
   /** One typed conversion: target column name, converter, description. */
   final case class Conv(column: String, convert: Column => Column, kind: String)
 
-  /** The 12-column golden-fixture conversion set (FIXTURES.md §1). */
-  def standardConversions: Seq[Conv] = Seq(
-    Conv("Id", Conversions.intOf, "int"),
-    Conv("Bool", Conversions.boolToken, "bool"),
-    Conv("Date", Conversions.usDate, "date MM/dd/yyyy"),
-    Conv("OADate", c => Conversions.oaDateToTs(try_cast_double(c)), "oadate"),
-    Conv("UnixDate", c => Conversions.unixToTs(try_cast_long(c)), "unixdate"),
-    Conv("Int", Conversions.intOf, "int"),
-    Conv("Double", c => Conversions.decimalOf(c), "double"),
-    Conv("Guid", Conversions.guid, "guid"),
-    Conv("IntList", Conversions.intList, "array<int>"))
-
-  private def try_cast_double(c: Column): Column = c.try_cast("double")
-  private def try_cast_long(c: Column): Column = c.try_cast("long")
-
   /** Typed view: applies each conversion in place (columns not listed stay
     * raw strings). */
   def typed(staging: DataFrame, convs: Seq[Conv]): DataFrame =

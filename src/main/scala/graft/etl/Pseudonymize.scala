@@ -84,6 +84,7 @@ object Pseudonymize {
       |LEFT JOIN link ON seg.c_mktsegment = link.c_mktsegment
       |ORDER BY seg""".stripMargin
 
+  private final val KAnonymityK = 5L
   /** k-anonymity audit (q243): the release-side complement of q206's
     * pseudonymization — pseudonyms hide WHO a row is, but the
     * quasi-identifier columns left in an export (here nation × market
@@ -96,7 +97,7 @@ object Pseudonymize {
     * classes, a second reduces classes to the size histogram —
     * bounded by the distinct class sizes, not the corpus. Map-side
     * partials both times; no windows, no joins. */
-  def kAnonymity(s: SparkSession, dir: String, k: Long = 5L): DataFrame =
+  def kAnonymity(s: SparkSession, dir: String): DataFrame =
     Tables.customer(s, dir)
       .groupBy(col("c_nationkey"), col("c_mktsegment"))
       .agg(count(lit(1)).as("class_size"))
@@ -104,10 +105,10 @@ object Pseudonymize {
       .agg(count(lit(1)).as("n_classes"))
       .select(col("class_size"), col("n_classes"),
         (col("class_size") * col("n_classes")).as("n_customers"),
-        (col("class_size") < k).cast("int").as("unsafe"))
+        (col("class_size") < KAnonymityK).cast("int").as("unsafe"))
       .orderBy(col("class_size"))
 
-  private def kAnonymityOracle(k: Long = 5L): String =
+  private def kAnonymityOracle: String =
     s"""WITH cls AS (
        |  SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT)
        |    AS class_size
@@ -116,7 +117,7 @@ object Pseudonymize {
        |      FROM cls GROUP BY 1)
        |SELECT class_size, n_classes,
        |       CAST(class_size * n_classes AS BIGINT) AS n_customers,
-       |       CAST(CASE WHEN class_size < $k THEN 1 ELSE 0 END AS INT)
+       |       CAST(CASE WHEN class_size < $KAnonymityK THEN 1 ELSE 0 END AS INT)
        |         AS unsafe
        |FROM h
        |ORDER BY class_size""".stripMargin
@@ -125,5 +126,5 @@ object Pseudonymize {
     Q("q206_pseudonymize", (s, d) => pseudonymizeAudit(s, d),
       Some(pseudonymOracle)),
     Q("q243_k_anonymity", (s, d) => kAnonymity(s, d),
-      Some(kAnonymityOracle())))
+      Some(kAnonymityOracle)))
 }

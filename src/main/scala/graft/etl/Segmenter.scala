@@ -74,12 +74,6 @@ object Segmenter {
         (col("__graft_pos") / segmentSize).cast("long"))
       .drop("__graft_pos")
 
-  /** Scale path: segment by key range (keyset contract, `FastPager`) —
-    * distributed, no global window; segments are value-aligned rather
-    * than exactly-N-rows. */
-  def bySegmentOfKey(df: DataFrame, keyCol: String, keysPerSegment: Long): DataFrame =
-    df.withColumn("segment_index", floor(col(keyCol) / keysPerSegment))
-
   /** Segment metadata frame: per-segment row count and key bounds —
     * CurrentSegment/TotalSegments analog as data. */
   def segmentStats(segmented: DataFrame, keyCol: String): DataFrame =

@@ -26,17 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Media record schema: opaque payload + typed metadata struct — the
-    * binary analog of the reference's media tables (MediaSearcher surface,
-    * SURVEY §2.3 F2). */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType, nullable = true),
-      StructField("n_bytes", LongType, nullable = true),
-      StructField("digest", StringType, nullable = true))), nullable = true)))
-
   /** Wrap a text frame as media rows: payload = utf-8 bytes (stand-in for
     * image/audio bytes), metadata derived inline (pure expressions). */
   def attachBinary(df: DataFrame, idCol: String, textCol: String): DataFrame =

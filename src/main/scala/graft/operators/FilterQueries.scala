@@ -45,10 +45,11 @@ object FilterQueries {
       .orderBy(col("c_custkey"))
   }
 
+  private final val SearchTerm = "red"
   /** F8: case-insensitive term search OR'd over several columns
     * (`ApplySearchTerm`, LinqCatalogSearchService.cs:556-600). */
-  def termSearch(s: SparkSession, dir: String, term: String = "red"): DataFrame =
-    DomainFilters.applySubstring(Tables.part(s, dir), term, "p_name", "p_type")
+  def termSearch(s: SparkSession, dir: String): DataFrame =
+    DomainFilters.applySubstring(Tables.part(s, dir), SearchTerm, "p_name", "p_type")
       .select(col("p_partkey"), col("p_name"), col("p_type"))
       .orderBy(col("p_partkey"))
 
@@ -132,18 +133,19 @@ object FilterQueries {
       .orderBy(col("l_returnflag"), col("rn"))
   }
 
+  private final val TopPerFlagK = 3
   /** Top-3 per flag via the heap-based bounded top-k AGGREGATE (the
     * O(n log k) alternative to q22's sort-based window ranking — same
     * result, same oracle; at fact-table scale the per-partition sort pass
     * disappears and the shuffle carries k rows per (partition, group)).
     * Descending price is encoded by negating the leading struct field. */
-  def topPerFlagAgg(s: SparkSession, dir: String, k: Int = 3): DataFrame =
+  def topPerFlagAgg(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
       .agg(graft.functions.TopKAgg.topK(struct(
         (-col("l_extendedprice")).as("np"),
         col("l_orderkey").as("ok"),
-        col("l_linenumber").as("ln")), k).as("top"))
+        col("l_linenumber").as("ln")), TopPerFlagK).as("top"))
       .select(col("l_returnflag"), posexplode(col("top")))
       .select(
         col("l_returnflag"),
@@ -517,9 +519,9 @@ object FilterQueries {
         |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
         |ORDER BY c_custkey""".stripMargin)),
     Q("q13_term_search", (s, d) => termSearch(s, d), Some(
-      """SELECT p_partkey, p_name, p_type
+      s"""SELECT p_partkey, p_name, p_type
         |FROM part
-        |WHERE lower(p_name) LIKE '%red%' OR lower(p_type) LIKE '%red%'
+        |WHERE lower(p_name) LIKE '%$SearchTerm%' OR lower(p_type) LIKE '%$SearchTerm%'
         |ORDER BY p_partkey""".stripMargin)),
     Q("q14_filter_dsl", (s, d) => dslFilter(s, d), Some(
       """SELECT l_returnflag, COUNT(*) AS cnt,

@@ -34,14 +34,6 @@ object DomainFilters {
     Seq(f1, f2).flatten.foldLeft(df)(_ filter _)
   }
 
-  /** Numeric range; each bound optional. */
-  def applyRange(df: DataFrame, column: String,
-      min: Option[Double], max: Option[Double]): DataFrame = {
-    val f1 = min.map(v => df(column) >= v)
-    val f2 = max.map(v => df(column) <= v)
-    Seq(f1, f2).flatten.foldLeft(df)(_ filter _)
-  }
-
   /** Case-insensitive substring filter over one or more columns, OR'd —
     * the `ApplyBillingFilter` shape (substring on names,
     * OrderQueryExtensions.cs:199-225). */

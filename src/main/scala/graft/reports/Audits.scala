@@ -116,6 +116,7 @@ object Audits {
       |FROM d, t
       |ORDER BY digit""".stripMargin
 
+  private final val DriftMeanTolC = 500L
   /** Snapshot statistics drift (q205): the event log split at its
     * calendar midpoint into an early and a late half, per-event-type
     * distribution statistics (volume, null-value rate, mean value)
@@ -134,8 +135,7 @@ object Audits {
     * final per-type rollup all run over that histogram — a naive
     * formulation scans the corpus twice (once for min/max, once tagged)
     * and measured near-linear (exp 0.89) for exactly that reason. */
-  def snapshotDrift(s: SparkSession, dir: String,
-      meanTolC: Long = 500): DataFrame = {
+  def snapshotDrift(s: SparkSession, dir: String): DataFrame = {
     val h = Tables.events(s, dir)
       .select(col("ts").cast("date").as("d"), col("event_type"), col("value"))
       .groupBy(col("event_type"), col("d"))
@@ -171,11 +171,11 @@ object Audits {
           expr("abs(sum_b) div nullif(n_b - null_b, 0)")).as("mean_b_c"))
       .withColumn("mean_shift_c", col("mean_b_c") - col("mean_a_c"))
       .withColumn("drifted",
-        (abs(col("mean_shift_c")) > meanTolC).cast("int"))
+        (abs(col("mean_shift_c")) > DriftMeanTolC).cast("int"))
       .orderBy(col("event_type"))
   }
 
-  private def driftOracle(meanTolC: Long = 500): String =
+  private def driftOracle: String =
     s"""WITH ev AS (SELECT CAST(ts AS DATE) AS d, event_type, value FROM events),
        |mid AS (SELECT MIN(d) + CAST((MAX(d) - MIN(d)) // 2 AS INT) AS mid
        |        FROM ev),
@@ -203,7 +203,7 @@ object Audits {
        |      FROM a)
        |SELECT event_type, n_a, n_b, null_bp_a, null_bp_b, mean_a_c, mean_b_c,
        |       CAST(mean_b_c - mean_a_c AS BIGINT) AS mean_shift_c,
-       |       CAST(CASE WHEN abs(mean_b_c - mean_a_c) > $meanTolC
+       |       CAST(CASE WHEN abs(mean_b_c - mean_a_c) > $DriftMeanTolC
        |            THEN 1 ELSE 0 END AS INT) AS drifted
        |FROM b
        |ORDER BY event_type""".stripMargin
@@ -325,6 +325,7 @@ object Audits {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
+  private final val SkewK = 10
   /** Join-key skew audit (q213): the per-key frequency profile of a
     * join/aggregation key (here `l_partkey`) — the diagnostic a pipeline
     * runs BEFORE picking a salting factor or trusting AQE's skew-join
@@ -339,12 +340,12 @@ object Audits {
     * basis points; `freq·n_keys` stays below 2⁶³ through ~10⁹ keys ×
     * 10⁹-row hot keys — beyond that, pre-divide the mean (audit
     * precision, not correctness, is at stake). */
-  def skewAudit(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def skewAudit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val freq = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("freq"))
     val tots = freq.agg(count(lit(1)).as("n_keys"), sum(col("freq")).as("total"))
-    freq.orderBy(col("freq").desc, col("l_partkey")).limit(k)
+    freq.orderBy(col("freq").desc, col("l_partkey")).limit(SkewK)
       .crossJoin(broadcast(tots))
       .select(col("l_partkey").as("key"), col("freq"),
         expr("freq * 10000 div total").as("share_bp"),
@@ -355,7 +356,7 @@ object Audits {
       .orderBy(col("rn"))
   }
 
-  private def skewOracle(k: Int = 10): String =
+  private def skewOracle: String =
     s"""WITH f AS (SELECT l_partkey AS key, CAST(COUNT(*) AS BIGINT) AS freq
        |           FROM lineitem GROUP BY 1),
        |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
@@ -370,7 +371,7 @@ object Audits {
        |             CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, key) AS INT)
        |               AS rn
        |      FROM f, t) x
-       |WHERE rn <= $k
+       |WHERE rn <= $SkewK
        |ORDER BY rn""".stripMargin
 
   /** Monthly seasonality index (q214): revenue per calendar month next to
@@ -616,24 +617,25 @@ object Audits {
       |FROM l, t
       |ORDER BY decile""".stripMargin
 
+  private final val SaltedSalts = 8
+  private final val SaltedTopK = 15
   /** Skew-safe salted top-k aggregate (q227): the q213 audit's
     * remediation, oracle-gated — per-part quantity/revenue totals
     * aggregated through `Scale.saltedAgg` (partial aggregate on
     * (key, salt) splits any hot key across reducers in the first
-    * shuffle, final aggregate on key merges the ≤`salts` partials).
+    * shuffle, final aggregate on key merges the ≤`SaltedSalts` partials).
     * Values are EXACTLY those of the plain aggregate — which is what
     * the plain-SQL oracle proves — because counts and decimal sums are
     * associative; salting changes row routing, never results.
     *
     * Scale shape: two hash aggregates with map-side partials (the
     * second over ≤ keys·salts rows); top-k is TakeOrderedAndProject. */
-  def saltedTopParts(s: SparkSession, dir: String, salts: Int = 8,
-      k: Int = 15): DataFrame = {
+  def saltedTopParts(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val agg = graft.operators.Scale.saltedAgg(
       Tables.lineitem(s, dir).select(col("l_partkey"), col("l_quantity"),
         col("l_extendedprice")),
-      "l_partkey", salts,
+      "l_partkey", SaltedSalts,
       Seq(
         (count(lit(1)), (c: org.apache.spark.sql.Column) => sum(c), "n_lines"),
         (sum(col("l_quantity").cast("decimal(18,2)")),
@@ -646,7 +648,7 @@ object Audits {
     // oracle's ROW_NUMBER, flipping ranks.
     agg
       .orderBy(col("rev").desc, col("l_partkey"))
-      .limit(k)
+      .limit(SaltedTopK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("rev").desc, col("l_partkey"))))
       .select(col("l_partkey"), col("n_lines"),
@@ -655,7 +657,7 @@ object Audits {
       .orderBy(col("rn"))
   }
 
-  private def saltedTopOracle(k: Int = 15): String =
+  private def saltedTopOracle: String =
     s"""SELECT l_partkey, n_lines, total_qty, total_rev, rn FROM (
        |  SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
        |         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
@@ -666,7 +668,7 @@ object Audits {
        |                SUM(CAST(l_extendedprice AS DECIMAL(18,2))) DESC,
        |                l_partkey) AS INT) AS rn
        |  FROM lineitem GROUP BY l_partkey) t
-       |WHERE rn <= $k
+       |WHERE rn <= $SaltedTopK
        |ORDER BY rn""".stripMargin
 
   /** Daily-volume trend slope (q228): exact integer least squares over
@@ -803,7 +805,7 @@ object Audits {
   val qs: Seq[Q] = Seq(
     Q("q271_mad_anomaly", (s, d) => madAnomaly(s, d), Some(madOracle)),
     Q("q227_salted_topk", (s, d) => saltedTopParts(s, d),
-      Some(saltedTopOracle())),
+      Some(saltedTopOracle)),
     Q("q228_daily_trend", (s, d) => dailyTrend(s, d),
       Some(dailyTrendOracle)),
     Q("q217_sla_percentiles", (s, d) => slaPercentiles(s, d),
@@ -811,7 +813,7 @@ object Audits {
     Q("q219_revenue_concentration", (s, d) => revenueConcentration(s, d),
       Some(concentrationOracle)),
     Q("q204_sales_cube", (s, d) => salesCube(s, d), Some(cubeOracle)),
-    Q("q213_skew_audit", (s, d) => skewAudit(s, d), Some(skewOracle())),
+    Q("q213_skew_audit", (s, d) => skewAudit(s, d), Some(skewOracle)),
     Q("q268_kll_quantile_rollup", (s, d) => priceQuantileRollup(s, d),
       Some(kllRollupOracle)),
     Q("q214_seasonality", (s, d) => seasonalityIndex(s, d),
@@ -819,7 +821,7 @@ object Audits {
     Q("q215_contingency", (s, d) => contingencyAudit(s, d),
       Some(contingencyOracle)),
     Q("q205_snapshot_drift", (s, d) => snapshotDrift(s, d),
-      Some(driftOracle())),
+      Some(driftOracle)),
     Q("q210_winsorized_stats", (s, d) => winsorizedStats(s, d),
       Some(winsorizeOracle)),
     Q("q211_benford_audit", (s, d) => benfordAudit(s, d),

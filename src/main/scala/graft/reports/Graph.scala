@@ -89,6 +89,8 @@ object Graph {
     math.max(minSupport.toLong, minSupport * sMass / math.max(sKeys, 1L))
   }
 
+  private final val PageRankIters = 3
+  private final val PageRankK = 20
   /** PageRank (q152): 3 damped supersteps over the co-purchase graph,
     * top-20 parts by final rank.
     *
@@ -104,8 +106,7 @@ object Graph {
     * node-sized rank frame into the edges (never re-shuffled) and runs the
     * ONE dst-keyed partial-sum aggregate PageRank needs. The top-k is
     * TakeOrderedAndProject (sort+limit), never a corpus-wide window. */
-  def copurchasePageRank(s: SparkSession, dir: String, iters: Int = 3,
-      k: Int = 20): DataFrame = {
+  def copurchasePageRank(s: SparkSession, dir: String): DataFrame = {
     // degree rides the broadcast NODE-sized rank frame (1e7 nodes ≈
     // 240 MB; past that, join edges pre-partitioned by src). Edges
     // re-derive per superstep from the PINNED pair-support frame: two
@@ -116,8 +117,8 @@ object Graph {
       .ckpt
     // pin every 4th superstep (d19): a rank frame has ONE consumer, so a
     // 3-step run plans as one job and lineage stays bounded at any count
-    val ranks = graft.Iterate(deg.withColumn("rank", lit(1000000L)), iters,
-        graft.Iterate.PinEvery(4)) { ranks =>
+    val ranks = graft.Iterate(deg.withColumn("rank", lit(1000000L)),
+        PageRankIters, graft.Iterate.PinEvery(4)) { ranks =>
       val contrib = edges.join(broadcast(ranks), edges("src") === ranks("node"))
         .select(col("dst"), expr("rank div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
@@ -128,7 +129,7 @@ object Graph {
     }
     val top = ranks
       .orderBy(col("rank").desc, col("node"))
-      .limit(k)
+      .limit(PageRankK)
     top.withColumn("rn",
         row_number().over(Window.orderBy(col("rank").desc, col("node"))))
       .select(col("node").as("part_id"), col("deg"),
@@ -138,7 +139,7 @@ object Graph {
 
   /** q152 oracle: the whole integer PageRank run unrolled — edge build,
     * degrees, and all three supersteps — in DuckDB SQL. */
-  private def pagerankOracle(iters: Int = 3, k: Int = 20): String = {
+  private def pagerankOracle: String = {
     def step(prev: String, out: String): String =
       s"""$out AS (
          |  SELECT e.dst AS node,
@@ -147,7 +148,8 @@ object Graph {
          |  FROM e JOIN $prev r ON e.src = r.node
          |         JOIN deg d ON e.src = d.src
          |  GROUP BY e.dst)""".stripMargin
-    val steps = (1 to iters).map(i => step(s"r${i - 1}", s"r$i")).mkString(",\n")
+    val steps = (1 to PageRankIters).map(i => step(s"r${i - 1}", s"r$i"))
+      .mkString(",\n")
     s"""WITH p AS (
        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
        |  FROM lineitem a JOIN lineitem b
@@ -161,14 +163,19 @@ object Graph {
        |  SELECT r.node AS part_id, d.deg AS deg, r.rank AS rank3,
        |         CAST(ROW_NUMBER() OVER (ORDER BY r.rank DESC, r.node)
        |              AS INT) AS rn
-       |  FROM r$iters r JOIN deg d ON r.node = d.src) t
-       |WHERE rn <= $k
+       |  FROM r$PageRankIters r JOIN deg d ON r.node = d.src) t
+       |WHERE rn <= $PageRankK
        |ORDER BY rn""".stripMargin
   }
 
+  /** Orders two parts must share to form an edge of the q175/q188-q197
+    * graph or a frequent pair of q183 (q295 audits that floor). */
+  private final val MinSupport = 2
+
+  private final val TrianglesK = 10
   /** Triangle counting (q175) over the SUPPORT-FILTERED co-purchase
     * graph: an edge {a,b} exists when parts a and b appear together in at
-    * least `minSupport` distinct orders (the standard noise filter before
+    * least `MinSupport` distinct orders (the standard noise filter before
     * clustering-coefficient / community analysis of a cross-sell graph —
     * one shared basket is coincidence, repeated co-purchase is signal).
     * Output: the top-k parts by triangle participation (each triangle
@@ -187,13 +194,12 @@ object Graph {
     * because orientation is a total order. Triangle identity is
     * orientation-invariant, so the id-ordered DuckDB oracle reproduces
     * the result set exactly. */
-  def copurchaseTriangles(s: SparkSession, dir: String, minSupport: Int = 2,
-      k: Int = 10): DataFrame = {
+  def copurchaseTriangles(s: SparkSession, dir: String): DataFrame = {
     // support filter over the pinned pair frame (memo); the ckpt stays
     // because three consumers (deg + both orientation joins) read the
     // FILTERED set
     val pairs = pairSupportM(s, dir)
-      .filter(col("support") >= minSupport)
+      .filter(col("support") >= MinSupport)
       .select(col("a"), col("b"))
       .ckpt
     val deg = pairs.select(col("a").as("n"))
@@ -231,7 +237,7 @@ object Graph {
     // k-row result — never a corpus-wide single-partition window
     corners
       .orderBy(col("tris").desc, col("part_id"))
-      .limit(k)
+      .limit(TrianglesK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("tris").desc, col("part_id"))))
       .crossJoin(broadcast(total))
@@ -241,12 +247,12 @@ object Graph {
 
   /** q175 oracle: id-ordered triangle enumeration (orientation-invariant
     * — must equal the degree-oriented distributed run exactly). */
-  private def trianglesOracle(minSupport: Int = 2, k: Int = 10): String =
+  private def trianglesOracle: String =
     s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
        |p AS (SELECT a.l_partkey AS a, b.l_partkey AS b
        |      FROM op a JOIN op b
        |        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |      GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
+       |      GROUP BY 1, 2 HAVING COUNT(*) >= $MinSupport),
        |t AS (SELECT e1.a AS x, e1.b AS u, e2.b AS v
        |      FROM p e1 JOIN p e2 ON e1.a = e2.a AND e1.b < e2.b
        |      JOIN p e3 ON e3.a = e1.b AND e3.b = e2.b),
@@ -260,9 +266,10 @@ object Graph {
        |  SELECT part_id, tris,
        |         CAST(ROW_NUMBER() OVER (ORDER BY tris DESC, part_id) AS INT) AS rn
        |  FROM pc) r, tot
-       |WHERE rn <= $k
+       |WHERE rn <= $TrianglesK
        |ORDER BY rn""".stripMargin
 
+  private final val ItemsetsK = 20
   /** Frequent itemsets via Apriori (q183): L2 = co-purchase pairs with
     * support ≥ minSupport; candidate triples C3 = L2-wedges whose closing
     * pair is ALSO in L2 (the Apriori pruning rule: every subset of a
@@ -279,8 +286,7 @@ object Graph {
     * bounded per-order sorted-set explode (q55/q152/q175). Measured in
     * the DuckDB oracle at sf0.1: 0.23 s candidate-pruned vs 8.2 s raw
     * triple enumeration — the same ratio the distributed plan banks on. */
-  def frequentItemsets(s: SparkSession, dir: String, minSupport: Int = 2,
-      k: Int = 20): DataFrame = {
+  def frequentItemsets(s: SparkSession, dir: String): DataFrame = {
     // op and the pair-support frame are the pinned shared passes (d19
     // memo; this query owns gr_op_distinct + gr_pair_stats, consumes
     // q152's gr_pair_support). The corpus-derived support floor (see
@@ -288,7 +294,7 @@ object Graph {
     // non-densifying corpora) reads the pinned 1-row stats frame;
     // derivation and oracle unchanged.
     val op = opDistinctM(s, dir)
-    val floorV = statsFloorOf(s, dir, minSupport)
+    val floorV = statsFloorOf(s, dir, MinSupport)
     val l2 = pairSupportM(s, dir)
       .filter(col("support") >= lit(floorV)).ckpt
     val e1 = l2.select(col("a"), col("b").as("u"))
@@ -306,13 +312,13 @@ object Graph {
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= lit(floorV))
     val l2top = l2
-      .orderBy(col("support").desc, col("a"), col("b")).limit(k)
+      .orderBy(col("support").desc, col("a"), col("b")).limit(ItemsetsK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("support").desc, col("a"), col("b"))))
       .select(lit(2).as("isize"), col("a"), col("b"),
         lit(null).cast("long").as("c"), col("support"), col("rn"))
     val l3top = l3
-      .orderBy(col("support").desc, col("a"), col("b"), col("c")).limit(k)
+      .orderBy(col("support").desc, col("a"), col("b"), col("c")).limit(ItemsetsK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("support").desc, col("a"), col("b"), col("c"))))
       .select(lit(3).as("isize"), col("a"), col("b"), col("c"),
@@ -320,15 +326,15 @@ object Graph {
     l2top.unionByName(l3top).orderBy(col("isize"), col("rn"))
   }
 
-  private def itemsetsOracle(minSupport: Int = 2, k: Int = 20): String =
+  private def itemsetsOracle: String =
     s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
        |l20 AS (SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS support
        |        FROM op a JOIN op b
        |          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
        |        GROUP BY 1, 2),
        |st AS (SELECT SUM(support) AS s_mass, COUNT(*) AS s_keys FROM l20),
-       |fl AS (SELECT GREATEST($minSupport,
-       |                       $minSupport * (SELECT s_mass FROM st)
+       |fl AS (SELECT GREATEST($MinSupport,
+       |                       $MinSupport * (SELECT s_mass FROM st)
        |                         // GREATEST((SELECT s_keys FROM st), 1))
        |         AS floor_v),
        |l2 AS (SELECT * FROM l20
@@ -352,8 +358,8 @@ object Graph {
        |                      AS INT) AS rn
        |          FROM t3)
        |SELECT isize, a, b, c, CAST(support AS BIGINT) AS support, rn
-       |FROM (SELECT * FROM l2top WHERE rn <= $k
-       |      UNION ALL SELECT * FROM l3top WHERE rn <= $k)
+       |FROM (SELECT * FROM l2top WHERE rn <= $ItemsetsK
+       |      UNION ALL SELECT * FROM l3top WHERE rn <= $ItemsetsK)
        |ORDER BY isize, rn""".stripMargin
 
   /** Support-filtered symmetrized co-purchase edges (the q175 graph,
@@ -371,6 +377,8 @@ object Graph {
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
   }
 
+  private final val LpaRounds = 3
+  private final val LpaK = 20
   /** Community detection via SYNCHRONOUS label propagation (q188):
     * label₀(v) = v; each round every node adopts the most frequent label
     * among its neighbours' previous-round labels, ties broken by the
@@ -385,17 +393,16 @@ object Graph {
     * static edge frame (edges are never re-shuffled, the q152 superstep
     * shape). The argmax is max(struct(cnt, -label)) — an aggregate, not
     * a partitioned window sort. */
-  def lpaCommunities(s: SparkSession, dir: String, minSupport: Int = 2,
-      rounds: Int = 3, k: Int = 20): DataFrame = {
-    val edges = supportEdges(s, dir, minSupport).ckpt
+  def lpaCommunities(s: SparkSession, dir: String): DataFrame = {
+    val edges = supportEdges(s, dir, MinSupport).ckpt
     val init = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab")).ckpt
     // pin every 4th round, as q152 (d19): a label frame has ONE consumer
-    val labels = graft.Iterate(init, rounds, graft.Iterate.PinEvery(4))(
+    val labels = graft.Iterate(init, LpaRounds, graft.Iterate.PinEvery(4))(
       lpaStep(edges))
     labels.groupBy(col("lab")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("n_members").desc, col("lab"))
-      .limit(k)
+      .limit(LpaK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("n_members").desc, col("lab"))))
       .select(col("lab").as("community"), col("n_members"), col("rn"))
@@ -414,8 +421,7 @@ object Graph {
   /** q188 oracle: the synchronous rounds unrolled — per-round label
     * counts with a QUALIFY argmax (cnt DESC, lab ASC = the same
     * (cnt, -lab) struct-max order). */
-  private def lpaOracle(minSupport: Int = 2, rounds: Int = 3,
-      k: Int = 20): String = {
+  private def lpaOracle: String = {
     def step(prev: String, out: String): String =
       s"""$out AS (
          |  SELECT e.dst AS node, r.lab AS lab
@@ -423,13 +429,14 @@ object Graph {
          |  GROUP BY e.dst, r.lab
          |  QUALIFY ROW_NUMBER() OVER (PARTITION BY e.dst
          |    ORDER BY COUNT(*) DESC, r.lab) = 1)""".stripMargin
-    val steps = (1 to rounds).map(i => step(s"l${i - 1}", s"l$i")).mkString(",\n")
+    val steps = (1 to LpaRounds).map(i => step(s"l${i - 1}", s"l$i"))
+      .mkString(",\n")
     s"""WITH p AS (
        |  SELECT a.l_partkey AS a, b.l_partkey AS b
        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
        |  JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $MinSupport),
        |e AS (SELECT a AS src, b AS dst FROM p
        |      UNION ALL SELECT b AS src, a AS dst FROM p),
        |l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
@@ -438,14 +445,16 @@ object Graph {
        |  SELECT lab AS community, CAST(COUNT(*) AS BIGINT) AS n_members,
        |         CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, lab) AS INT)
        |           AS rn
-       |  FROM l$rounds GROUP BY lab) t
-       |WHERE rn <= $k
+       |  FROM l$LpaRounds GROUP BY lab) t
+       |WHERE rn <= $LpaK
        |ORDER BY rn""".stripMargin
   }
 
+  private final val BfsSeeds = 3
+  private final val BfsMaxHops = 3
   /** Multi-source BFS hop distances (q189): distance from the seed set
-    * (the `nSeeds` smallest part ids in the graph — deterministic at any
-    * SF) within `maxHops` rounds, reported as a hop-count histogram with
+    * (the `BfsSeeds` smallest part ids in the graph — deterministic at any
+    * SF) within `BfsMaxHops` rounds, reported as a hop-count histogram with
     * `-1` = not reached within the horizon.
     *
     * Scale shape: the frontier-free "relax all" formulation — per round
@@ -456,14 +465,13 @@ object Graph {
     * formulation sends less data per round but adds a set-difference
     * join; at a fixed 3-hop horizon relax-all is strictly fewer
     * shuffles.) */
-  def bfsHops(s: SparkSession, dir: String, minSupport: Int = 2,
-      nSeeds: Int = 3, maxHops: Int = 3): DataFrame = {
-    val edges = supportEdges(s, dir, minSupport).ckpt
+  def bfsHops(s: SparkSession, dir: String): DataFrame = {
+    val edges = supportEdges(s, dir, MinSupport).ckpt
     val nodes = edges.select(col("src").as("node")).distinct().ckpt
-    val seeds = nodes.orderBy(col("node")).limit(nSeeds)
+    val seeds = nodes.orderBy(col("node")).limit(BfsSeeds)
       .select(col("node"), lit(0).as("dist")).ckpt
     // pin every round: the next round reads it twice (broadcast + union)
-    val dist = graft.Iterate(seeds, maxHops, graft.Iterate.PinEvery(1))(
+    val dist = graft.Iterate(seeds, BfsMaxHops, graft.Iterate.PinEvery(1))(
       bfsStep(edges))
     nodes.join(dist, Seq("node"), "left_outer")
       .select(coalesce(col("dist"), lit(-1)).as("hops"))
@@ -481,8 +489,7 @@ object Graph {
 
   /** q189 oracle: relax-all rounds unrolled in CTEs over the same
     * support-filtered graph. */
-  private def bfsOracle(minSupport: Int = 2, nSeeds: Int = 3,
-      maxHops: Int = 3): String = {
+  private def bfsOracle: String = {
     def step(prev: String, out: String): String =
       s"""$out AS (
          |  SELECT node, MIN(dist) AS dist FROM (
@@ -490,27 +497,29 @@ object Graph {
          |    FROM e JOIN $prev r ON e.src = r.node
          |    UNION ALL SELECT node, dist FROM $prev) u
          |  GROUP BY node)""".stripMargin
-    val steps = (1 to maxHops).map(i => step(s"d${i - 1}", s"d$i")).mkString(",\n")
+    val steps = (1 to BfsMaxHops).map(i => step(s"d${i - 1}", s"d$i"))
+      .mkString(",\n")
     s"""WITH p AS (
        |  SELECT a.l_partkey AS a, b.l_partkey AS b
        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
        |  JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $MinSupport),
        |e AS (SELECT a AS src, b AS dst FROM p
        |      UNION ALL SELECT b AS src, a AS dst FROM p),
        |nodes AS (SELECT DISTINCT src AS node FROM e),
        |d0 AS (SELECT node, 0 AS dist FROM nodes
-       |       ORDER BY node LIMIT $nSeeds),
+       |       ORDER BY node LIMIT $BfsSeeds),
        |$steps
        |SELECT hops, n_nodes FROM (
        |  SELECT CAST(COALESCE(d.dist, -1) AS INT) AS hops,
        |         CAST(COUNT(*) AS BIGINT) AS n_nodes
-       |  FROM nodes n LEFT JOIN d$maxHops d ON n.node = d.node
+       |  FROM nodes n LEFT JOIN d$BfsMaxHops d ON n.node = d.node
        |  GROUP BY 1) t
        |ORDER BY hops""".stripMargin
   }
 
+  private final val LinkPredictionK = 20
   /** Link prediction via the Resource-Allocation index (q190): for every
     * NON-adjacent pair (u < v) with at least one common neighbour,
     * RA(u,v) = Σ_{z ∈ N(u)∩N(v)} 1/deg(z) — Zhou/Lü/Zhang's
@@ -526,9 +535,8 @@ object Graph {
     * (u,v)-keyed aggregate sums the scores, and existing edges drop out
     * via a left-anti join onto the oriented edge list. Nothing
     * corpus-quadratic: candidates are wedge-generated, never all-pairs. */
-  def linkPrediction(s: SparkSession, dir: String, minSupport: Int = 2,
-      k: Int = 20): DataFrame = {
-    val edges = supportEdges(s, dir, minSupport).ckpt
+  def linkPrediction(s: SparkSession, dir: String): DataFrame = {
+    val edges = supportEdges(s, dir, MinSupport).ckpt
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("z"), col("deg"))
     // wedges through z, endpoints id-ordered u < v
@@ -543,7 +551,7 @@ object Graph {
       .select(col("src").as("u"), col("dst").as("v"))
     scored.join(existing, Seq("u", "v"), "left_anti")
       .orderBy(col("ra_micro").desc, col("u"), col("v"))
-      .limit(k)
+      .limit(LinkPredictionK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("ra_micro").desc, col("u"), col("v"))))
       .select(col("u"), col("v"), col("cn"), col("ra_micro"), col("rn"))
@@ -552,13 +560,13 @@ object Graph {
 
   /** q190 oracle: id-ordered wedge enumeration with the same integer
     * micro-unit scoring. */
-  private def linkPredictionOracle(minSupport: Int = 2, k: Int = 20): String =
+  private def linkPredictionOracle: String =
     s"""WITH p AS (
        |  SELECT a.l_partkey AS a, b.l_partkey AS b
        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
        |  JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $MinSupport),
        |e AS (SELECT a AS src, b AS dst FROM p
        |      UNION ALL SELECT b AS src, a AS dst FROM p),
        |deg AS (SELECT src AS z, COUNT(*) AS deg FROM e GROUP BY src),
@@ -576,9 +584,11 @@ object Graph {
        |         CAST(ROW_NUMBER() OVER (ORDER BY ra_micro DESC, u, v) AS INT)
        |           AS rn
        |  FROM cand) t
-       |WHERE rn <= $k
+       |WHERE rn <= $LinkPredictionK
        |ORDER BY rn""".stripMargin
 
+  private final val KCoreK = 3
+  private final val KCoreRounds = 4
   /** k-core decomposition by iterative peeling (q197): starting from the
     * support-filtered co-purchase graph, each round removes every node
     * with current degree < k and keeps only edges between survivors; a
@@ -592,11 +602,10 @@ object Graph {
     * BROADCASTS) and two semi-joins that filter the edge frame by
     * surviving endpoints; the stats rows are 1-row aggregates. No
     * driver-side graph state. */
-  def kCorePeeling(s: SparkSession, dir: String, minSupport: Int = 2,
-      k: Int = 3, rounds: Int = 4): DataFrame = {
+  def kCorePeeling(s: SparkSession, dir: String): DataFrame = {
     // pin every round: read by the next round's degree, semi-joins, stats
-    val edges = graft.Iterate.trace(supportEdges(s, dir, minSupport).ckpt,
-      rounds, graft.Iterate.PinEvery(1))(kCoreStep(k))
+    val edges = graft.Iterate.trace(supportEdges(s, dir, MinSupport).ckpt,
+      KCoreRounds, graft.Iterate.PinEvery(1))(kCoreStep(KCoreK))
     edges.zipWithIndex.map { case (e, round) =>
       e.agg(countDistinct(col("src")).as("n_nodes"),
           (count(lit(1)) / 2).cast("long").as("n_edges"))
@@ -618,17 +627,17 @@ object Graph {
   }
 
   /** q197 oracle: the peeling rounds unrolled. */
-  private def kCoreOracle(minSupport: Int = 2, k: Int = 3,
-      rounds: Int = 4): String = {
+  private def kCoreOracle: String = {
     def step(prev: String, out: String): String =
       s"""$out AS (
          |  SELECT e.src, e.dst FROM $prev e
          |  WHERE e.src IN (SELECT src FROM $prev GROUP BY src
-         |                  HAVING COUNT(*) >= $k)
+         |                  HAVING COUNT(*) >= $KCoreK)
          |    AND e.dst IN (SELECT src FROM $prev GROUP BY src
-         |                  HAVING COUNT(*) >= $k))""".stripMargin
-    val steps = (1 to rounds).map(i => step(s"e${i - 1}", s"e$i")).mkString(",\n")
-    val arms = (0 to rounds).map(i =>
+         |                  HAVING COUNT(*) >= $KCoreK))""".stripMargin
+    val steps = (1 to KCoreRounds).map(i => step(s"e${i - 1}", s"e$i"))
+      .mkString(",\n")
+    val arms = (0 to KCoreRounds).map(i =>
       s"""SELECT $i AS round,
          |       CAST(COUNT(DISTINCT src) AS BIGINT) AS n_nodes,
          |       CAST(COUNT(*) // 2 AS BIGINT) AS n_edges FROM e$i""".stripMargin)
@@ -638,7 +647,7 @@ object Graph {
        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
        |  JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $MinSupport),
        |e0 AS (SELECT a AS src, b AS dst FROM p
        |       UNION ALL SELECT b AS src, a AS dst FROM p),
        |$steps
@@ -646,6 +655,8 @@ object Graph {
        |ORDER BY round""".stripMargin
   }
 
+  private final val HitsIters = 2
+  private final val HitsK = 10
   /** HITS hubs/authorities (q201) over the BIPARTITE customer→part
     * purchase graph (Kleinberg's algorithm on the natural two-mode graph:
     * authority parts = products bought by well-connected customers, hub
@@ -668,8 +679,7 @@ object Graph {
     * a 1-row scalar-aggregate broadcast. Overflow ceiling: raw ≤
     * max-degree · 10⁶ < 2⁶³ for any degree below 9·10¹². Final top-k per
     * side is sort+limit (TakeOrderedAndProject), never a corpus window. */
-  def purchaseHits(s: SparkSession, dir: String, iters: Int = 2,
-      k: Int = 10): DataFrame = {
+  def purchaseHits(s: SparkSession, dir: String): DataFrame = {
     val edges = graft.Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(graft.Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")),
@@ -700,12 +710,12 @@ object Graph {
     var hubs = edges.select(col("c")).distinct()
       .select(col("c"), lit(1000000L).as("score"))
     var auths: DataFrame = null
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to HitsIters) {
       auths = halfStep(hubs, "c", "p")
       hubs = halfStep(auths, "p", "c")
     }
     def top(df: DataFrame, key: String, side: String): DataFrame = df
-      .orderBy(col("score").desc, col(key)).limit(k)
+      .orderBy(col("score").desc, col(key)).limit(HitsK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("score").desc, col(key))))
       .select(lit(side).as("side"), col(key).as("node_id"),
@@ -715,7 +725,7 @@ object Graph {
   }
 
   /** q201 oracle: the max-normalized integer half-steps unrolled. */
-  private def hitsOracle(iters: Int = 2, k: Int = 10): String = {
+  private def hitsOracle: String = {
     def auth(prevH: String, out: String): String =
       s"""${out}r AS (SELECT e.p, SUM(h.score) AS raw
          |  FROM e JOIN $prevH h ON e.c = h.c GROUP BY e.p),
@@ -726,7 +736,7 @@ object Graph {
          |  FROM e JOIN $prevA a ON e.p = a.p GROUP BY e.c),
          |$out AS (SELECT c, CAST(raw AS HUGEINT) * 1000000 // (SELECT MAX(raw) FROM ${out}r)
          |           AS score FROM ${out}r)""".stripMargin
-    val steps = (1 to iters).map(i =>
+    val steps = (1 to HitsIters).map(i =>
       auth(s"h${i - 1}", s"a$i") + ",\n" + hub(s"a$i", s"h$i")).mkString(",\n")
     s"""WITH e AS (
        |  SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -736,15 +746,17 @@ object Graph {
        |SELECT side, node_id, score, rn FROM (
        |  SELECT 'authority' AS side, p AS node_id, CAST(score AS BIGINT) AS score,
        |         CAST(ROW_NUMBER() OVER (ORDER BY score DESC, p) AS INT) AS rn
-       |  FROM a$iters
+       |  FROM a$HitsIters
        |  UNION ALL
        |  SELECT 'hub', c, CAST(score AS BIGINT),
        |         CAST(ROW_NUMBER() OVER (ORDER BY score DESC, c) AS INT)
-       |  FROM h$iters) t
-       |WHERE rn <= $k
+       |  FROM h$HitsIters) t
+       |WHERE rn <= $HitsK
        |ORDER BY side, rn""".stripMargin
   }
 
+  private final val LiftMinSupport = 3
+  private final val LiftK = 15
   /** Basket-affinity lift (q224): for co-purchased part pairs with
     * support ≥ minSupport, lift = P(a,b)/(P(a)·P(b)) ranked by the EXACT
     * integer key `support·N·10⁶ div (fa·fb)` — the association-rule
@@ -759,8 +771,7 @@ object Graph {
     * per-part basket frequencies are one aggregate of the distinct
     * (order, part) frame and BROADCAST onto the support-filtered pair
     * table; N is a 1-row broadcast; top-k is TakeOrderedAndProject. */
-  def basketLift(s: SparkSession, dir: String, minSupport: Int = 3,
-      k: Int = 15): DataFrame = {
+  def basketLift(s: SparkSession, dir: String): DataFrame = {
     // op and the pair-support frame are the pinned shared passes (d19
     // memo: gr_op_distinct owned by q183, gr_pair_support by q152)
     val op = opDistinctM(s, dir)
@@ -782,7 +793,7 @@ object Graph {
     // the pinned 1-row stats frame (statsFloorOf); derivation and
     // oracle unchanged.
     val pairs = pairSupportM(s, dir)
-      .filter(col("support") >= lit(statsFloorOf(s, dir, minSupport)))
+      .filter(col("support") >= lit(statsFloorOf(s, dir, LiftMinSupport)))
       .crossJoin(broadcast(n))
     val freq = op.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
     pairs
@@ -797,7 +808,7 @@ object Graph {
         expr("cast(cast(support as decimal(38,0)) * n_baskets * 1000000" +
           " div (fa * fb) as bigint)").as("lift_micro"))
       .orderBy(col("lift_micro").desc, col("a"), col("b"))
-      .limit(k)
+      .limit(LiftK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("lift_micro").desc, col("a"), col("b"))))
       .orderBy(col("rn"))
@@ -831,8 +842,10 @@ object Graph {
     // restores the 1-row maxRows bound the memo's checkpoint erases, so
     // the broadcast cross join below stays PlanAudit-provably bounded
     val supStats = pairStatsM(s, dir).limit(1)
-    val cap224 = greatest(lit(3L), expr("3 * s_mass div greatest(s_keys, 1)"))
-    val cap183 = greatest(lit(2L), expr("2 * s_mass div greatest(s_keys, 1)"))
+    val cap224 = greatest(lit(LiftMinSupport.toLong),
+      expr(s"$LiftMinSupport * s_mass div greatest(s_keys, 1)"))
+    val cap183 = greatest(lit(MinSupport.toLong),
+      expr(s"$MinSupport * s_mass div greatest(s_keys, 1)"))
     val stats = sup.crossJoin(broadcast(supStats))
       .agg(count(lit(1)).as("n_keys"),
         sum(when(col("support") >= cap224, 1L).otherwise(0L)).as("kept224"),
@@ -865,9 +878,9 @@ object Graph {
        |         AND a.l_partkey < b2.l_partkey
        |        GROUP BY 1, 2),
        |st AS (SELECT SUM(support) AS s_mass, COUNT(*) AS s_keys FROM sup),
-       |caps AS (SELECT GREATEST(3, 3 * s_mass // GREATEST(s_keys, 1))
+       |caps AS (SELECT GREATEST($LiftMinSupport, $LiftMinSupport * s_mass // GREATEST(s_keys, 1))
        |                  AS cap224,
-       |                GREATEST(2, 2 * s_mass // GREATEST(s_keys, 1))
+       |                GREATEST($MinSupport, $MinSupport * s_mass // GREATEST(s_keys, 1))
        |                  AS cap183
        |         FROM st),
        |ss AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
@@ -898,7 +911,7 @@ object Graph {
        |  SELECT * FROM (${graft.text.TextQueries.postingMassStatsSql}) tpm)
        |ORDER BY query""".stripMargin
 
-  private def basketLiftOracle(minSupport: Int = 3, k: Int = 15): String =
+  private def basketLiftOracle: String =
     s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
        |p0 AS (SELECT a.l_partkey AS a, b.l_partkey AS b,
        |              CAST(COUNT(*) AS BIGINT) AS support
@@ -907,8 +920,8 @@ object Graph {
        |       GROUP BY 1, 2),
        |st AS (SELECT SUM(support) AS s_mass, COUNT(*) AS s_keys FROM p0),
        |p AS (SELECT * FROM p0
-       |      WHERE support >= GREATEST($minSupport,
-       |        $minSupport * (SELECT s_mass FROM st)
+       |      WHERE support >= GREATEST($LiftMinSupport,
+       |        $LiftMinSupport * (SELECT s_mass FROM st)
        |          // GREATEST((SELECT s_keys FROM st), 1))),
        |f AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS f
        |      FROM op GROUP BY 1),
@@ -925,28 +938,28 @@ object Graph {
        |                DESC, p.a, p.b) AS INT) AS rn
        |  FROM p JOIN f fa ON p.a = fa.l_partkey
        |         JOIN f fb ON p.b = fb.l_partkey, nb) t
-       |WHERE rn <= $k
+       |WHERE rn <= $LiftK
        |ORDER BY rn""".stripMargin
 
   val qs: Seq[Q] = Seq(
     Q("q224_basket_lift", (s, d) => basketLift(s, d),
-      Some(basketLiftOracle())),
+      Some(basketLiftOracle)),
     Q("q201_hits_scores", (s, d) => purchaseHits(s, d),
-      Some(hitsOracle())),
+      Some(hitsOracle)),
     Q("q197_kcore_peeling", (s, d) => kCorePeeling(s, d),
-      Some(kCoreOracle())),
+      Some(kCoreOracle)),
     Q("q152_copurchase_pagerank", (s, d) => copurchasePageRank(s, d),
-      Some(pagerankOracle())),
+      Some(pagerankOracle)),
     Q("q175_triangle_count", (s, d) => copurchaseTriangles(s, d),
-      Some(trianglesOracle())),
+      Some(trianglesOracle)),
     Q("q183_frequent_itemsets", (s, d) => frequentItemsets(s, d),
-      Some(itemsetsOracle())),
+      Some(itemsetsOracle)),
     Q("q188_lpa_communities", (s, d) => lpaCommunities(s, d),
-      Some(lpaOracle())),
+      Some(lpaOracle)),
     Q("q189_bfs_hops", (s, d) => bfsHops(s, d),
-      Some(bfsOracle())),
+      Some(bfsOracle)),
     Q("q190_link_prediction", (s, d) => linkPrediction(s, d),
-      Some(linkPredictionOracle())),
+      Some(linkPredictionOracle)),
     Q("q295_pair_mass_audit", (s, d) => pairMassAudit(s, d),
       Some(pairMassAuditOracle)))
 }

@@ -44,8 +44,9 @@ object Reports {
     * pandas bridge — equal decimals cast to double are bit-identical). */
   private def decSum(c: Column): Column = sum(dec(c)).cast("double")
 
+  private final val BestsellersK = 100
   /** A2+J1+W1+W5: bestsellers — fact-fact equi-join, group, multi-agg, top-k. */
-  def bestsellers(s: SparkSession, dir: String, k: Int = 100): DataFrame = {
+  def bestsellers(s: SparkSession, dir: String, k: Int = BestsellersK): DataFrame = {
     val li = Tables.lineitem(s, dir)
     val o = Tables.orders(s, dir).filter(col("o_orderstatus") === "F")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -57,28 +58,31 @@ object Reports {
       .limit(k)
   }
 
+  private final val TopCustomersK = 50
   /** A1: top customers by spend with order count. */
-  def topCustomers(s: SparkSession, dir: String, k: Int = 50): DataFrame =
+  def topCustomers(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(
         decSum(col("o_totalprice")).as("total_spent"),
         count(lit(1)).as("order_cnt"))
       .orderBy(col("total_spent").desc, col("o_custkey"))
-      .limit(k)
+      .limit(TopCustomersK)
 
+  private final val AlsoPurchasedPart = 1L
+  private final val AlsoPurchasedK = 10
   /** J9+A3: also-purchased — parts co-occurring in orders with a target part.
     * The semi-join side (orders containing the target) is small → broadcast. */
-  def alsoPurchased(s: SparkSession, dir: String, targetPart: Long = 1L, k: Int = 10): DataFrame = {
+  def alsoPurchased(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
-    val withTarget = li.filter(col("l_partkey") === targetPart)
+    val withTarget = li.filter(col("l_partkey") === AlsoPurchasedPart)
       .select(col("l_orderkey")).distinct()
     li.join(broadcast(withTarget), Seq("l_orderkey"))
-      .filter(col("l_partkey") =!= targetPart)
+      .filter(col("l_partkey") =!= AlsoPurchasedPart)
       .groupBy(col("l_partkey"))
       .agg(decSum(col("l_quantity")).as("total_qty"))
       .orderBy(col("total_qty").desc, col("l_partkey"))
-      .limit(k)
+      .limit(AlsoPurchasedK)
   }
 
   /** J6+A5: never-sold parts — anti-join of the part dimension against the
@@ -111,15 +115,16 @@ object Reports {
         countDistinct(col("l_partkey")).as("distinct_parts"),
         countDistinct(col("l_suppkey")).as("distinct_supps"))
 
+  private final val BigSpendersMin = 400000.0
   /** J7+A6: HAVING semi-join — customers whose order sum crosses a threshold,
     * then joined back to the dimension (dimension side broadcastable). */
-  def bigSpenders(s: SparkSession, dir: String, minSpent: Double = 400000.0): DataFrame = {
+  def bigSpenders(s: SparkSession, dir: String): DataFrame = {
     val perCust = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(
         decSum(col("o_totalprice")).as("total_spent"),
         count(lit(1)).as("order_cnt"))
-      .filter(col("total_spent") >= minSpent)
+      .filter(col("total_spent") >= BigSpendersMin)
     Tables.customer(s, dir)
       .join(perCust, col("c_custkey") === col("o_custkey"))
       .select(col("c_custkey"), col("c_name"), col("total_spent"), col("order_cnt"))
@@ -147,18 +152,19 @@ object Reports {
       .orderBy(col("month"))
   }
 
+  private final val WeeklyTz = "Europe/Berlin"
   /** A7 "last 28 days as 4 weeks" pane with user-timezone bucketing
     * (DashboardOrdersViewComponent.cs:51: UTC→user TZ conversion BEFORE
     * bucketing; SURVEY §7.4 risk 6): weeks counted back from the newest
     * order, dates taken in the user's zone. The max-date anchor is a
     * broadcast scalar; the aggregation is one hash shuffle on the bucket. */
-  def ordersWeekly(s: SparkSession, dir: String, tz: String = "Europe/Berlin"): DataFrame = {
+  def ordersWeekly(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
     val mx = o.agg(max(col("o_orderdate")).as("m"))
     o.crossJoin(broadcast(mx))
       .filter(col("o_orderdate") > col("m") - expr("INTERVAL 28 DAYS"))
-      .withColumn("local_dt", from_utc_timestamp(col("o_orderdate"), tz))
-      .withColumn("local_m", from_utc_timestamp(col("m"), tz))
+      .withColumn("local_dt", from_utc_timestamp(col("o_orderdate"), WeeklyTz))
+      .withColumn("local_m", from_utc_timestamp(col("m"), WeeklyTz))
       .groupBy(floor(datediff(col("local_m"), col("local_dt")) / 7)
         .cast("int").as("weeks_ago"))
       .agg(count(lit(1)).as("cnt"),
@@ -515,14 +521,14 @@ object Reports {
   val qs: Seq[Q] = Seq(
     Q("q191_rfm_segments", (s, d) => rfmSegments(s, d), Some(rfmOracle)),
     Q("q01_bestsellers", (s, d) => bestsellers(s, d), Some(
-      """SELECT l_partkey,
+      s"""SELECT l_partkey,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty,
         |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_amount
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderstatus = 'F'
         |GROUP BY l_partkey
         |ORDER BY total_qty DESC, total_amount DESC, l_partkey
-        |LIMIT 100""".stripMargin)),
+        |LIMIT $BestsellersK""".stripMargin)),
     Q("q02_top_customers", (s, d) => topCustomers(s, d), Some(
       """SELECT o_custkey,
         |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,

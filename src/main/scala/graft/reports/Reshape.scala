@@ -67,6 +67,7 @@ object Reshape {
         col("cnt"))
       .orderBy(col("flag"))
 
+  private final val TrailingSpendDays = 7
   /** RANGE-framed time window: 7-day trailing spend per customer at each
     * order — the time-based sibling of q67's ROWS frame. The frame bound
     * is an event-TIME range (`rangeBetween` over epoch seconds), so
@@ -74,10 +75,10 @@ object Reshape {
     * rows-framed trailing sums are nondeterministic under timestamp
     * ties, range-framed ones are not. One shuffle (customer), per-group
     * sort, exact decimal accumulation cast at the boundary. */
-  def trailingSpend(s: SparkSession, dir: String, days: Int = 7): DataFrame = {
+  def trailingSpend(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(unix_timestamp(col("o_orderdate")))
-      .rangeBetween(-days.toLong * 86400L, 0L)
+      .rangeBetween(-TrailingSpendDays.toLong * 86400L, 0L)
     Tables.orders(s, dir)
       .withColumn("trailing_spend",
         sum(dec(col("o_totalprice"))).over(w).cast("double"))
@@ -89,6 +90,8 @@ object Reshape {
 
   /** INTERSECT / EXCEPT: nations present in both customer and supplier
     * bases vs customer-only, tagged and unioned. */
+  private final val AnomalyDays = 7
+  private final val AnomalyMinPrior = 5
   /** Trailing-window anomaly detection (q161) — per user, flag events
     * whose value sits more than 2σ from the mean of that user's PRIOR
     * events in a 7-day RANGE window (current row and its ts-ties
@@ -107,9 +110,8 @@ object Reshape {
     * Scale shape: one user-keyed shuffle + per-user range frame
     * (bounded by events-per-user·window, not corpus); map-only
     * everywhere else. */
-  def valueAnomaly(s: SparkSession, dir: String, days: Int = 7,
-      minPrior: Int = 5): DataFrame = {
-    val windowUs = days * 86400000000L
+  def valueAnomaly(s: SparkSession, dir: String): DataFrame = {
+    val windowUs = AnomalyDays * 86400000000L
     val e = graft.Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("tus"),
@@ -123,15 +125,15 @@ object Reshape {
       .withColumn("s_prior", sum(col("vc")).over(w))
       .withColumn("q_prior", sum(col("vc") * col("vc")).over(w))
       .select(col("user_id"), col("event_id"), col("vc"), col("n_prior"),
-        when(col("n_prior") >= minPrior &&
+        when(col("n_prior") >= AnomalyMinPrior &&
             pow(col("vc").cast("double") * n - sPr, 2) >
               lit(4d) * (n * q - sPr * sPr), 1)
           .otherwise(0).cast("int").as("is_anomaly"))
       .orderBy(col("user_id"), col("event_id"))
   }
 
-  private def valueAnomalyOracle(days: Int = 7, minPrior: Int = 5): String = {
-    val windowUs = days * 86400000000L
+  private def valueAnomalyOracle: String = {
+    val windowUs = AnomalyDays * 86400000000L
     s"""WITH e AS (
        |  SELECT user_id, event_id, epoch_us(ts) AS tus,
        |         CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc
@@ -144,7 +146,7 @@ object Reshape {
        |        PARTITION BY user_id ORDER BY tus
        |        RANGE BETWEEN $windowUs PRECEDING AND 1 PRECEDING))
        |SELECT user_id, event_id, vc, n_prior,
-       |       CAST(CASE WHEN n_prior >= $minPrior AND
+       |       CAST(CASE WHEN n_prior >= $AnomalyMinPrior AND
        |            POWER(CAST(vc AS DOUBLE) * n_prior - s_prior, 2) >
        |            4.0 * (CAST(n_prior AS DOUBLE) * CAST(q_prior AS DOUBLE)
        |                   - CAST(s_prior AS DOUBLE) * CAST(s_prior AS DOUBLE))
@@ -243,7 +245,7 @@ object Reshape {
 
   val qs: Seq[Q] = Seq(
     Q("q161_value_anomaly", (s, d) => valueAnomaly(s, d),
-      Some(valueAnomalyOracle())),
+      Some(valueAnomalyOracle)),
     Q("q168_value_percentiles", (s, d) => valuePercentiles(s, d),
       Some(valuePercentilesOracle)),
     Q("q114_salted_agg", (s, d) => saltedFlagTotals(s, d), Some(

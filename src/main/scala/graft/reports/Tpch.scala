@@ -183,13 +183,14 @@ object Tpch {
       .orderBy(col("revenue").desc, col("n_name"))
   }
 
+  private final val CopurchaseK = 3
   /** Co-purchase top-k for EVERY part (the also-purchased report as one
     * distributed computation instead of a per-product query): directed
     * part pairs co-occurring in an order, counted, ranked per source part.
     * Scale shape: the self-join shuffles on l_orderkey once; pair counts
     * are a hash aggregate; ranking is a partitioned window with partial
     * top-k (WindowGroupLimit) before the shuffle. */
-  def copurchaseTopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def copurchaseTopK(s: SparkSession, dir: String): DataFrame = {
     // Basket form instead of a self-join: collect the distinct part set
     // per order (ONE shuffle, with map-side partial set-union — safe
     // because basket size is bounded by order size, not corpus size),
@@ -217,7 +218,7 @@ object Tpch {
       .groupBy(col("part_a"))
       .agg(graft.functions.TopKAgg.topK(
         struct((-col("n_orders")).as("neg"), col("part_b").as("part_b"),
-          col("n_orders").as("n_orders")), k).as("tk"))
+          col("n_orders").as("n_orders")), CopurchaseK).as("tk"))
       .select(col("part_a"), posexplode(col("tk")))
       .select(col("part_a"), col("col.part_b").as("part_b"),
         col("col.n_orders").as("n_orders"), (col("pos") + 1).cast("int").as("rn"))
@@ -316,6 +317,8 @@ object Tpch {
       .orderBy(col("c_nationkey"))
   }
 
+  private final val VolumeNation1 = "NATION_10"
+  private final val VolumeNation2 = "NATION_12"
   /** Q7 shape — volume shipping between two nations: the fact table is
     * pruned FIRST by the broadcast supplier⋈nation join (only the two
     * nations' suppliers survive — a ~2/25 selectivity applied before the
@@ -323,10 +326,9 @@ object Tpch {
     * to the broadcast customer side; the cross-pair (n1→n2 or n2→n1)
     * residual runs on the joined row. Revenue is the exact unscaled-cents
     * kernel. */
-  def volumeShipping(s: SparkSession, dir: String,
-      n1: String = "NATION_10", n2: String = "NATION_12"): DataFrame = {
+  def volumeShipping(s: SparkSession, dir: String): DataFrame = {
     val nat = Tables.nation(s, dir)
-      .filter(col("n_name").isin(n1, n2))
+      .filter(col("n_name").isin(VolumeNation1, VolumeNation2))
       .select(col("n_nationkey"), col("n_name"))
     val supp = Tables.supplier(s, dir)
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
@@ -343,23 +345,27 @@ object Tpch {
     li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .filter((col("supp_nation") === n1 && col("cust_nation") === n2) ||
-        (col("supp_nation") === n2 && col("cust_nation") === n1))
+      .filter((col("supp_nation") === VolumeNation1 &&
+          col("cust_nation") === VolumeNation2) ||
+        (col("supp_nation") === VolumeNation2 &&
+          col("cust_nation") === VolumeNation1))
       .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
       .agg(MoneyFns.sumUnscaled(col("rev_u"), 4).as("revenue"))
       .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 
+  private final val MarketNation = "NATION_3"
+  private final val MarketRegion = "AMERICA"
+  private final val MarketType = "ECONOMY"
   /** Q8 shape — market share: one nation's suppliers' share of a region's
     * revenue for one part type, per order year. The share divides two
     * branches of the SAME exact decimal sum (conditional numerator), so
     * the quotient is engine-stable. The part filter broadcasts and prunes
     * the fact scan before any shuffle. */
-  def marketShare(s: SparkSession, dir: String, nation: String = "NATION_3",
-      region: String = "AMERICA", ptype: String = "ECONOMY"): DataFrame = {
-    val p = Tables.part(s, dir).filter(col("p_type") === ptype)
+  def marketShare(s: SparkSession, dir: String): DataFrame = {
+    val p = Tables.part(s, dir).filter(col("p_type") === MarketType)
       .select(col("p_partkey"))
-    val reg = Tables.region(s, dir).filter(col("r_name") === region)
+    val reg = Tables.region(s, dir).filter(col("r_name") === MarketRegion)
     val natC = Tables.nation(s, dir)
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"))
@@ -382,7 +388,7 @@ object Tpch {
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("o_year"))
       .agg((MoneyFns.sumUnscaled(
-        when(col("supp_nation") === nation, col("rev_u")), 4) /
+        when(col("supp_nation") === MarketNation, col("rev_u")), 4) /
         MoneyFns.sumUnscaled(col("rev_u"), 4)).as("mkt_share"),
         count(lit(1)).as("cnt"))
       .orderBy(col("o_year"))
@@ -434,16 +440,17 @@ object Tpch {
       .orderBy(col("s_suppkey"))
   }
 
+  private final val LargeOrderQty = 150.0
   /** Q18 shape — large-quantity orders: IN over a grouped HAVING. The
     * quantity sum per order is ONE fact shuffle; the orders join reuses
     * that orderkey partitioning; customer broadcasts onto the k surviving
     * rows. Quantities are integer-valued doubles, so the sums and the
     * threshold compare exactly. */
-  def largeOrders(s: SparkSession, dir: String, minQty: Double = 150.0): DataFrame = {
+  def largeOrders(s: SparkSession, dir: String): DataFrame = {
     val big = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("total_qty"))
-      .filter(col("total_qty") > minQty)
+      .filter(col("total_qty") > LargeOrderQty)
     big.join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_name"))),

@@ -1,6 +1,6 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -38,12 +38,4 @@ object Descriptors {
       .withColumn("completed_order_count", coalesce(col("__cc"), lit(0L)))
       .drop("__oc", "__sa", "__cc")
   }
-
-  /** Age in whole years from a birthdate column at a fixed reference date
-    * (deterministic analog of the reference's DateTime.Now-based age). */
-  def ageYears(birthDate: Column, asOf: Column): Column =
-    floor(months_between(asOf, birthDate) / 12).cast("int")
-
-  /** Days since an activity timestamp at a fixed reference date. */
-  def daysSince(ts: Column, asOf: Column): Column = datediff(asOf, ts)
 }

@@ -20,6 +20,8 @@ object SimilarityQueries {
   private def bookMemo(s: SparkSession, dir: String): Ann.BookMemo =
     (name, tag, build) => graft.etl.ChainCache.memo(s, dir, name, tag)(build())
 
+  private final val KmeansK = 8
+  private final val KmeansIters = 2
   /** The corpus-wide k-means training (q137's gear, shared by q138/
     * q140/q144f/q156/q252; q144's corpus-derived k pins under the
     * scaled name). The name keys on the CALLER'S INTENT, not the
@@ -29,8 +31,8 @@ object SimilarityQueries {
     * data-independent. The memo tag carries (k, iters) so a collision
     * of one name with two hyperparameter sets fails loudly instead of
     * silently serving wrong-k centroids. */
-  private def trainedCorpus(s: SparkSession, dir: String, k: Int = 8,
-      iters: Int = 2, scaled: Boolean = false): DataFrame = {
+  private def trainedCorpus(s: SparkSession, dir: String, k: Int = KmeansK,
+      scaled: Boolean = false): DataFrame = {
     val name =
       if (scaled) "sim_kmeans_corpus_scaled_i2" else "sim_kmeans_corpus_k8_i2"
     // the scaled path (k ∝ corpus) trains with the PRUNED assignment —
@@ -39,12 +41,12 @@ object SimilarityQueries {
     val train = () =>
       if (scaled)
         Ann.kmeansTrainPruned(Tables.embeddings(s, dir), "vec_id",
-          "embedding", k, iters)
+          "embedding", k, KmeansIters)
       else
         Ann.kmeansTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
-          k, iters)
+          k, KmeansIters)
     graft.etl.ChainCache.memo(s, dir, name,
-      tag = s"k=$k,iters=$iters,pruned=$scaled")(train())
+      tag = s"k=$k,iters=$KmeansIters,pruned=$scaled")(train())
       // re-annotate the ≤k bound: Ckpt erases maxRows, and PlanAudit
       // proves the downstream broadcast nested-loop joins are bounded
       // from exactly this annotation (the kmeansTrain limit(k) note)
@@ -77,6 +79,11 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rn"))
   }
 
+  /** The neighbours each query vector gets in the ANN recall queries (q41,
+    * q125, q250, q256). */
+  private final val AnnK = 10
+
+  private final val LshBits = 4
   /** The REGISTERED, fully oracle-checked form of the LSH-ANN operator
     * (q41): identical pipeline to `Ann.lshTopK` — signature both sides,
     * bucket equi-join, exact cosine rescore, per-query top-k — but the
@@ -86,10 +93,9 @@ object SimilarityQueries {
     * explode + aggregate pass and joins back onto the vectors; the
     * production path computes it per-row in one JIT'd expression with no
     * explosion (that trade is exactly why the fast path exists). */
-  def annLshPortable(s: SparkSession, dir: String, bits: Int = 4,
-      k: Int = 10): DataFrame = {
+  def annLshPortable(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val sigs = srpSigs(e, bits).withColumnRenamed("srp_sig", "__sig")
+    val sigs = srpSigs(e, LshBits).withColumnRenamed("srp_sig", "__sig")
     val sigd = e.join(sigs, Seq("vec_id"))
     val q = sigd.filter(col("vec_id") < 3).limit(3)
       .select(col("vec_id").as("query_id"), col("embedding").as("__qv"),
@@ -102,12 +108,12 @@ object SimilarityQueries {
       .orderBy(col("cos").desc, col("vec_id"))
     scored
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= AnnK)
       .select(col("query_id"), col("vec_id"), col("cos"), col("rn"))
       .orderBy(col("query_id"), col("rn"))
   }
 
-  private def annLshPortableOracle(bits: Int = 4, k: Int = 10): String =
+  private def annLshPortableOracle: String =
     s"""WITH el AS (
        |  SELECT vec_id,
        |         generate_subscripts(embedding, 1) - 1 AS j,
@@ -116,10 +122,10 @@ object SimilarityQueries {
        |  FROM embeddings
        |), sums AS (
        |  SELECT vec_id,
-       |    ${srpSumsSql(bits)}
+       |    ${srpSumsSql(LshBits)}
        |  FROM el GROUP BY vec_id
        |), sig AS (
-       |  SELECT vec_id, ${srpSigSql(bits)} AS s FROM sums
+       |  SELECT vec_id, ${srpSigSql(LshBits)} AS s FROM sums
        |), v AS (
        |  SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS emb, sig.s
        |  FROM embeddings e JOIN sig USING (vec_id)
@@ -134,7 +140,7 @@ object SimilarityQueries {
        |         ROW_NUMBER() OVER (PARTITION BY query_id
        |                            ORDER BY cos DESC, vec_id) AS rn
        |  FROM scored) t
-       |WHERE rn <= $k
+       |WHERE rn <= $AnnK
        |ORDER BY query_id, rn""".stripMargin
 
   /** IVF-pruned ANN for the same queries. Unlike the LSH variant this IS
@@ -160,24 +166,25 @@ object SimilarityQueries {
   /** Embedding-cosine near-dup pairs over the deterministic subset — the
     * exact verifier path of embedding dedup (the corpus-scale path blocks
     * by LSH signature first and verifies candidates with this scoring). */
+  private final val NearDupCap = 100
   /** q75: brute-force near-dup audit over a COUNT-CAPPED sample — the
-    * first `cap` vectors by (md5(vec_id), vec_id), the same bound-not-
+    * first `NearDupCap` vectors by (md5(vec_id), vec_id), the same bound-not-
     * rate rule the r8 fix applied to the text audits (q35/q69/q84/q99).
     * The previous `vec_id % 5` filter was a RATE: its pair count grew
     * quadratically with the corpus (measured exponent 0.8 in the r10
     * sf1 scale-proof); the capped sample is O(cap²) at ANY corpus size.
     * The production near-dup paths remain q41/q144/q147. */
-  def embeddingNearDups(s: SparkSession, dir: String,
-      cap: Int = 100): DataFrame = {
+  def embeddingNearDups(s: SparkSession, dir: String): DataFrame = {
     val sample = Tables.embeddings(s, dir)
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(cap)
+      .limit(NearDupCap)
     Ann.nearDupPairs(sample,
         // capped sample → explicit broadcast is safe by construction
         "vec_id", "embedding", minCos = 0.35, broadcastRight = true)
       .orderBy(col("id1"), col("id2"))
   }
 
+  private final val SrpBits = 16
   /** Sign-random-projection signature with ENGINE-NEUTRAL hyperplanes —
     * the cross-engine verification twin of q41's `SigExpr.srpSignature`
     * custom expression. Same SRP logic (signature bit b = sign of the
@@ -197,8 +204,8 @@ object SimilarityQueries {
     * carrying 16 long counters with map-side partials — no joins, no
     * driver state. The production path (q41) does the whole signature in
     * one JIT-compiled expression with zero explosion. */
-  def srpPortable(s: SparkSession, dir: String, bits: Int = 16): DataFrame =
-    srpSigs(Tables.embeddings(s, dir), bits).orderBy(col("vec_id"))
+  def srpPortable(s: SparkSession, dir: String): DataFrame =
+    srpSigs(Tables.embeddings(s, dir), SrpBits).orderBy(col("vec_id"))
 
   /** The portable SRP signature frame (vec_id, srp_sig bit string) —
     * shared by q107 (signatures, 16 bits) and q41 (LSH bucketing,
@@ -231,9 +238,9 @@ object SimilarityQueries {
     (0 until bits).map(b => s"CASE WHEN s$b > 0 THEN '1' ELSE '0' END")
       .mkString("concat(", ", ", ")")
 
-  private def srpPortableOracle(bits: Int = 16): String = {
-    val sums = srpSumsSql(bits)
-    val sig = srpSigSql(bits)
+  private def srpPortableOracle: String = {
+    val sums = srpSumsSql(SrpBits)
+    val sig = srpSigSql(SrpBits)
     s"""WITH el AS (
        |  SELECT vec_id,
        |         generate_subscripts(embedding, 1) - 1 AS j,
@@ -261,7 +268,7 @@ object SimilarityQueries {
     * path — one ArrayData pass, no boxed lambdas); the composable HOF
     * form below stays as the spec cross-check (AnnSpec asserts
     * expression == HOF element for element). */
-  def quantizedRecall(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def quantizedRecall(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val deq = e.select(col("vec_id"),
       graft.functions.VectorExpr.quantDequantI8(col("embedding")).as("dq"))
@@ -270,10 +277,10 @@ object SimilarityQueries {
     // index actually serves, query included) — both through the ONE
     // ranking implementation so the contracts cannot drift
     val exact = Ann.bruteForceTopK(e, e.filter(col("vec_id") < 3).limit(3),
-        "vec_id", "embedding", k)
+        "vec_id", "embedding", AnnK)
       .select(col("query_id"), col("vec_id"))
     val quant = Ann.bruteForceTopK(deq, deq.filter(col("vec_id") < 3).limit(3),
-        "vec_id", "dq", k)
+        "vec_id", "dq", AnnK)
       .select(col("query_id"), col("vec_id"))
     exact.join(quant.withColumnRenamed("vec_id", "qvid"),
         exact("query_id") === quant("query_id") &&
@@ -286,6 +293,7 @@ object SimilarityQueries {
       .orderBy(col("query_id"))
   }
 
+  private val MatryoshkaDims = Seq(16, 32)
   /** Matryoshka prefix-dimension recall audit (q250): serving ANN on
     * TRUNCATED embeddings — the MRL deployment pattern where the first
     * d dims of a matryoshka-trained vector are a usable sub-embedding,
@@ -298,18 +306,17 @@ object SimilarityQueries {
     * Scale shape: each ranking is the q40 brute shape (broadcast
     * queries, partial top-k below the shuffle); the exact frame
     * checkpoints once and feeds every prefix's recall join. */
-  def matryoshkaRecall(s: SparkSession, dir: String, k: Int = 10,
-      dims: Seq[Int] = Seq(16, 32)): DataFrame = {
+  def matryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val exact = Ann.bruteForceTopK(e, e.filter(col("vec_id") < 3).limit(3),
-        "vec_id", "embedding", k)
+        "vec_id", "embedding", AnnK)
       .select(col("query_id"), col("vec_id"))
       .ckpt // consumers: one recall join per prefix width
-    dims.map { d =>
+    MatryoshkaDims.map { d =>
       val t = e.select(col("vec_id"),
         expr(s"slice(embedding, 1, $d)").as("emb"))
       val topd = Ann.bruteForceTopK(t, t.filter(col("vec_id") < 3).limit(3),
-          "vec_id", "emb", k)
+          "vec_id", "emb", AnnK)
         .select(col("query_id"), col("vec_id").as("qvid"))
       exact.join(topd,
           exact("query_id") === topd("query_id") &&
@@ -322,8 +329,7 @@ object SimilarityQueries {
     }.reduce(_.unionByName(_)).orderBy(col("query_id"), col("dims"))
   }
 
-  private def matryoshkaOracle(k: Int = 10,
-      dims: Seq[Int] = Seq(16, 32)): String = {
+  private def matryoshkaOracle: String = {
     def rank(vtab: String, vcol: String, out: String) =
       s"""$out AS (
          |  SELECT query_id, vec_id FROM (
@@ -333,11 +339,11 @@ object SimilarityQueries {
          |             v.vec_id) AS rn
          |    FROM $vtab v JOIN $vtab q ON q.vec_id < 3
          |      AND v.vec_id <> q.vec_id) t
-         |  WHERE rn <= $k)"""
-    val prefixCtes = dims.map(d =>
+         |  WHERE rn <= $AnnK)"""
+    val prefixCtes = MatryoshkaDims.map(d =>
       s"""t$d AS (SELECT vec_id, e[1:$d] AS d FROM v),
          |${rank(s"t$d", "d", s"r$d")}""")
-    val armSelects = dims.map(d =>
+    val armSelects = MatryoshkaDims.map(d =>
       s"""SELECT e.query_id, CAST($d AS INT) AS dims,
          |       COUNT(*) AS k_exact,
          |       CAST(SUM(CASE WHEN r.vec_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -368,7 +374,7 @@ object SimilarityQueries {
     * Scale shape: both rankings are the q40 brute shape (queries
     * broadcast; rank-≤-k pushes down as a partial WindowGroupLimit
     * below the shuffle), sharing ONE scored frame. */
-  def filteredAnn(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def filteredAnn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 3).limit(3)
@@ -381,10 +387,10 @@ object SimilarityQueries {
     val wQ = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     val pre = scored.filter(col("label") === col("qlab"))
-      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= k)
+      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= AnnK)
       .select(col("query_id"), col("vec_id"))
     val post = scored
-      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= k)
+      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= AnnK)
       .filter(col("label") === col("qlab"))
       .select(col("query_id"), col("vec_id").as("pvid"))
     val nPre = pre.groupBy(col("query_id")).agg(count(lit(1)).as("n_pre"))
@@ -405,7 +411,7 @@ object SimilarityQueries {
       .orderBy(col("query_id"))
   }
 
-  private def filteredAnnOracle(k: Int = 10): String =
+  private def filteredAnnOracle: String =
     s"""WITH v AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
        |  FROM embeddings),
@@ -418,12 +424,12 @@ object SimilarityQueries {
        |         SELECT query_id, vec_id,
        |                ROW_NUMBER() OVER (PARTITION BY query_id
        |                  ORDER BY cos DESC, vec_id) AS rn
-       |         FROM sc WHERE label = qlab) t WHERE rn <= $k),
+       |         FROM sc WHERE label = qlab) t WHERE rn <= $AnnK),
        |post AS (SELECT query_id, vec_id FROM (
        |          SELECT query_id, vec_id, label, qlab,
        |                 ROW_NUMBER() OVER (PARTITION BY query_id
        |                   ORDER BY cos DESC, vec_id) AS rn
-       |          FROM sc) t WHERE rn <= $k AND label = qlab),
+       |          FROM sc) t WHERE rn <= $AnnK AND label = qlab),
        |np AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_pre
        |       FROM pre GROUP BY query_id),
        |ns AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_post
@@ -452,7 +458,7 @@ object SimilarityQueries {
     transform(embedding, x => round(x.cast("double") / scale, 0) * scale)
   }
 
-  private def quantizedRecallOracle(k: Int = 10): String =
+  private def quantizedRecallOracle: String =
     s"""WITH v AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
        |), dq AS (
@@ -467,14 +473,14 @@ object SimilarityQueries {
        |           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
        |             round(list_cosine_similarity(v.e, q.e), 4) DESC, v.vec_id) AS rn
        |    FROM v JOIN v q ON q.vec_id < 3 AND v.vec_id <> q.vec_id) t
-       |  WHERE rn <= $k
+       |  WHERE rn <= $AnnK
        |), quant AS (
        |  SELECT query_id, vec_id FROM (
        |    SELECT q.vec_id AS query_id, v.vec_id,
        |           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
        |             round(list_cosine_similarity(v.d, q.d), 4) DESC, v.vec_id) AS rn
        |    FROM dq v JOIN dq q ON q.vec_id < 3 AND v.vec_id <> q.vec_id) t
-       |  WHERE rn <= $k
+       |  WHERE rn <= $AnnK
        |)
        |SELECT e.query_id,
        |       COUNT(*) AS k_exact,
@@ -688,6 +694,7 @@ object SimilarityQueries {
        |FROM sab, hot GROUP BY hot.hot_cell, sab.sub
        |ORDER BY cell_label""".stripMargin
 
+  private final val SemanticMinCos = 0.35
   /** Semantic dedup over trained clusters (q144): the SemDeDup
     * composition — q137's k-means trainer partitions the embedding
     * space, near-duplicate pairs are scored ONLY within each cluster
@@ -712,8 +719,8 @@ object SimilarityQueries {
     val k = math.max(8L, e.count() / 250L).toInt
     val g = math.ceil(math.sqrt(k.toDouble)).toInt
     val cents = trainedCorpus(s, dir, k = k, scaled = true)
-    Ann.semanticDupVerdicts(e, "vec_id", "embedding", cents, minCos = 0.35,
-        prunedG = Some(g))
+    Ann.semanticDupVerdicts(e, "vec_id", "embedding", cents,
+      minCos = SemanticMinCos, prunedG = Some(g))
       .orderBy(col("vec_id"))
   }
 
@@ -726,7 +733,8 @@ object SimilarityQueries {
   def semanticDedupFixedK(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val cents = trainedCorpus(s, dir)
-    Ann.semanticDupVerdicts(e, "vec_id", "embedding", cents, minCos = 0.35)
+    Ann.semanticDupVerdicts(e, "vec_id", "embedding", cents,
+      minCos = SemanticMinCos)
   }
 
   /** One two-level PRUNED assignment round (`Ann.prunedAssign`
@@ -780,7 +788,7 @@ object SimilarityQueries {
        |    GROUP BY 1, 2) t
        |  GROUP BY cent_id)""".stripMargin
 
-  private def semanticDedupOracle(minCos: Double = 0.35): String =
+  private def semanticDedupOracle: String =
     s"""WITH v AS MATERIALIZED (
        |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |-- seeds: the k smallest vec_ids, k = max(8, n/250) — the same
@@ -807,13 +815,14 @@ object SimilarityQueries {
        |  SELECT DISTINCT b.vec_id
        |  FROM assigned a JOIN assigned b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE round(list_cosine_similarity(a.e, b.e), 4) >= $minCos)
+       |  WHERE round(list_cosine_similarity(a.e, b.e), 4) >= $SemanticMinCos)
        |SELECT a.vec_id, a.cell,
        |       CAST(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END AS INT)
        |         AS is_dup
        |FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
        |ORDER BY a.vec_id""".stripMargin
 
+  private final val DecontamMinCos = 0.35
   /** Semantic decontamination (q147) — the embedding-space twin of the
     * q86 n-gram benchmark decontamination: corpus vectors whose cosine
     * to ANY benchmark vector reaches the threshold are contaminated
@@ -827,8 +836,7 @@ object SimilarityQueries {
     * map-side so the one shuffle carries |corpus| pre-reduced rows. At a
     * benchmark too large to broadcast, the LSH-bucketed q41 machinery
     * takes over — this is the exact-verification gear. */
-  def semanticDecontamination(s: SparkSession, dir: String,
-      minCos: Double = 0.35): DataFrame = {
+  def semanticDecontamination(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val bench = e.filter(col("vec_id") < 20).limit(20)
       .select(col("vec_id").as("__bid"), col("embedding").as("__bv"))
@@ -840,11 +848,14 @@ object SimilarityQueries {
           col("__n") * col("__bn"))), 4))
       .groupBy(col("vec_id"))
       .agg(max(col("__cos")).as("max_cos"),
-        sum(when(col("__cos") >= minCos, 1L).otherwise(0L)).as("n_hits"))
+        sum(when(col("__cos") >= DecontamMinCos, 1L).otherwise(0L)).as("n_hits"))
       .withColumn("contaminated", (col("n_hits") > 0).cast("int"))
       .orderBy(col("vec_id"))
   }
 
+  private final val HardNegMinCos = 0.25
+  private final val HardNegK = 10
+  private final val HardNegAnchors = 8
   /** Hard-negative mining (q150) — the contrastive-training data op: for
     * each anchor vector, the top-k most-similar vectors of a DIFFERENT
     * label above a similarity floor. High-cosine different-label rows are
@@ -860,8 +871,9 @@ object SimilarityQueries {
     * anchor, never the corpus. At 100 TB the broadcast-NL scoring pass is
     * the exhaustive gear; the LSH/IVF candidate paths (q41/q85) swap in
     * upstream and feed the same band-filter + top-k tail. */
-  def hardNegatives(s: SparkSession, dir: String, minCos: Double = 0.25,
-      k: Int = 10, anchorBound: Int = 8): DataFrame = {
+  def hardNegatives(s: SparkSession, dir: String,
+      minCos: Double = HardNegMinCos, k: Int = HardNegK,
+      anchorBound: Int = HardNegAnchors): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val anchors = e.filter(col("vec_id") < anchorBound).limit(anchorBound)
       .select(col("vec_id").as("query_id"), col("embedding").as("__qv"),
@@ -881,12 +893,8 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rn"))
   }
 
-  /** Oracle for `hardNegatives`, interpolated from the SAME parameter
-    * values as the Spark path (defaults shared via the signature) so a
-    * non-default call can regenerate a matching oracle instead of
-    * silently diverging from a hardcoded one. */
-  private[graft] def hardNegativesOracle(minCos: Double = 0.25, k: Int = 10,
-      anchorBound: Int = 8): String =
+  /** q150's oracle: `hardNegatives` at its defaults (the same constants). */
+  private[graft] def hardNegativesOracle(): String =
     s"""SELECT query_id, vec_id, neg_label, cos, rn FROM (
        |  SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
        |         e.label AS neg_label,
@@ -898,24 +906,24 @@ object SimilarityQueries {
        |           e.vec_id) AS rn
        |  FROM embeddings e
        |  JOIN embeddings q
-       |    ON q.vec_id < $anchorBound AND e.vec_id <> q.vec_id
+       |    ON q.vec_id < $HardNegAnchors AND e.vec_id <> q.vec_id
        |       AND e.label <> q.label
        |  WHERE round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
        |                                     CAST(q.embedding AS DOUBLE[])), 4)
-       |        >= $minCos) t
-       |WHERE rn <= $k
+       |        >= $HardNegMinCos) t
+       |WHERE rn <= $HardNegK
        |ORDER BY query_id, rn""".stripMargin
 
-  private def decontaminationOracle(minCos: Double = 0.35): String =
+  private def decontaminationOracle: String =
     s"""WITH v AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |b AS (SELECT vec_id AS bid, e AS bv FROM v WHERE vec_id < 20),
        |x AS (SELECT c.vec_id, round(list_cosine_similarity(c.e, b.bv), 4) AS cos
        |      FROM v c CROSS JOIN b WHERE c.vec_id >= 20)
        |SELECT vec_id, MAX(cos) AS max_cos,
-       |       CAST(SUM(CASE WHEN cos >= $minCos THEN 1 ELSE 0 END) AS BIGINT)
+       |       CAST(SUM(CASE WHEN cos >= $DecontamMinCos THEN 1 ELSE 0 END) AS BIGINT)
        |         AS n_hits,
-       |       CAST(CASE WHEN SUM(CASE WHEN cos >= $minCos THEN 1 ELSE 0 END) > 0
+       |       CAST(CASE WHEN SUM(CASE WHEN cos >= $DecontamMinCos THEN 1 ELSE 0 END) > 0
        |            THEN 1 ELSE 0 END AS INT) AS contaminated
        |FROM x GROUP BY vec_id
        |ORDER BY vec_id""".stripMargin
@@ -972,11 +980,11 @@ object SimilarityQueries {
        |       round(CAST(CAST(pr AS BIGINT) AS DOUBLE) / 1000000000000, 4) AS pc1
        |FROM p ORDER BY vec_id""".stripMargin
 
-  private def kmeansOracle(k: Int = 8): String = {
+  private def kmeansOracle: String = {
     s"""WITH v AS (
        |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |c0 AS (
-       |  SELECT vid AS cent_id, e AS cv FROM v ORDER BY vid LIMIT $k),
+       |  SELECT vid AS cent_id, e AS cv FROM v ORDER BY vid LIMIT $KmeansK),
        |${iter("c0", "a1", "c1")},
        |${iter("c1", "a2", "c2")}
        |SELECT cent_id, generate_subscripts(cv, 1) - 1 AS pos,
@@ -1216,6 +1224,9 @@ object SimilarityQueries {
        |ORDER BY a.vec_id""".stripMargin
   }
 
+  private final val MmrK = 10
+  private final val MmrPool = 30
+  private final val MmrLambda = 0.7
   /** Maximal Marginal Relevance re-ranking (q184) — the diversity-aware
     * selection every retrieval/RAG pipeline runs AFTER top-k search
     * (Carbonell & Goldstein, SIGIR'98): greedily pick k results maximizing
@@ -1223,7 +1234,7 @@ object SimilarityQueries {
     * don't crowd the result list. The first pick is the plain relevance
     * argmax; ties break by vec_id.
     *
-    * Scale shape: the candidate POOL per query is bounded (top-`pool` from
+    * Scale shape: the candidate POOL per query is bounded (top-`MmrPool` from
     * the existing brute-force/ANN search — the expensive corpus-wide stage
     * that already has its own scale path), so the pool² pairwise-similarity
     * frame and the O(k·pool) greedy are per-query-bounded work: sims key
@@ -1232,11 +1243,10 @@ object SimilarityQueries {
     * corpus-sized state. All scoring arithmetic runs on 4dp-rounded
     * cosines (the q40 parity contract), so the entire greedy — every
     * intermediate argmax — is value-checked by the unrolled oracle. */
-  def mmrRerank(s: SparkSession, dir: String, k: Int = 10, pool: Int = 30,
-      lam: Double = 0.7): DataFrame = {
+  def mmrRerank(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val cands = Ann.bruteForceTopK(e, e.filter(col("vec_id") < 3).limit(3),
-      "vec_id", "embedding", k = pool)
+      "vec_id", "embedding", k = MmrPool)
     val cv = cands.join(e, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"), col("cos").as("rel"),
         col("embedding"))
@@ -1262,11 +1272,12 @@ object SimilarityQueries {
         }
         val remaining = scala.collection.mutable.SortedSet(rel.keys.toSeq: _*)
         val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        while (sel.size < k && remaining.nonEmpty) {
+        while (sel.size < MmrK && remaining.nonEmpty) {
           val best = remaining.iterator.map { c =>
             val sc =
               if (sel.isEmpty) rel(c)
-              else lam * rel(c) - (1 - lam) * sel.iterator.map(x => sim((c, x._1))).max
+              else MmrLambda * rel(c) -
+                (1 - MmrLambda) * sel.iterator.map(x => sim((c, x._1))).max
             (c, sc)
           }.minBy { case (c, sc) => (-sc, c) }
           sel += best
@@ -1283,8 +1294,8 @@ object SimilarityQueries {
 
   /** q184 oracle: the greedy UNROLLED — k chained (max-sim, score, argmax)
     * CTE triples over the same 4dp-rounded pool/sims frames. */
-  private def mmrOracle(k: Int = 10, pool: Int = 30, lam: Double = 0.7): String = {
-    val steps = (2 to k).map { i =>
+  private def mmrOracle: String = {
+    val steps = (2 to MmrK).map { i =>
       s"""m$i AS MATERIALIZED (
          |        SELECT s.query_id, s.va AS vec_id, MAX(s.sim) AS ms
          |        FROM sims s JOIN sel${i - 1} t
@@ -1296,9 +1307,9 @@ object SimilarityQueries {
          |p$i AS MATERIALIZED (
          |        SELECT query_id, vec_id, sc FROM (
          |          SELECT m.query_id, m.vec_id,
-         |                 $lam * p.rel - ${1 - lam} * m.ms AS sc,
+         |                 $MmrLambda * p.rel - ${1 - MmrLambda} * m.ms AS sc,
          |                 ROW_NUMBER() OVER (PARTITION BY m.query_id
-         |                   ORDER BY $lam * p.rel - ${1 - lam} * m.ms DESC,
+         |                   ORDER BY $MmrLambda * p.rel - ${1 - MmrLambda} * m.ms DESC,
          |                            m.vec_id) AS rn
          |          FROM m$i m JOIN pool p
          |            ON p.query_id = m.query_id AND p.vec_id = m.vec_id) z
@@ -1322,7 +1333,7 @@ object SimilarityQueries {
        |               DESC, e.vec_id) AS rn
        |    FROM ev e
        |    JOIN ev q ON q.vec_id < 3 AND e.vec_id <> q.vec_id) t
-       |  WHERE rn <= $pool),
+       |  WHERE rn <= $MmrPool),
        |sims AS MATERIALIZED (
        |  SELECT p1.query_id, p1.vec_id AS va, p2.vec_id AS vb,
        |         round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
@@ -1341,10 +1352,12 @@ object SimilarityQueries {
        |  WHERE rn = 1),
        |$steps
        |SELECT query_id, vec_id, CAST(rk AS INT) AS rn, round(mmr, 4) AS mmr
-       |FROM sel$k
+       |FROM sel$MmrK
        |ORDER BY query_id, rk""".stripMargin
   }
 
+  private final val KnnQueries = 40
+  private final val KnnK = 10
   /** kNN label-agreement evaluation (q195) — the embedding-quality probe
     * an embedding-training pipeline runs per checkpoint: over a
     * count-capped query sample (first nQ vectors by (md5(id), id) — the
@@ -1358,18 +1371,17 @@ object SimilarityQueries {
     * (Ann.bruteForceTopK's shape); everything downstream operates on
     * nQ·k rows. All ratios divide exact integer counts; the vote argmax
     * is max(struct(cnt, -label)) — an aggregate, not a sort. */
-  def knnLabelEval(s: SparkSession, dir: String, nQ: Int = 40,
-      k: Int = 10): DataFrame = {
+  def knnLabelEval(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val queries = e
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(nQ)
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(KnnQueries)
       .ckpt // consumers: topk probe + label join
     // re-annotate the nQ bound: .ckpt severed the logical lineage (a
     // checkpointed frame has unknown maxRows) and the probe set feeds
     // bruteForceTopK's broadcast side
     val topk = Ann.bruteForceTopK(e,
-      queries.select("vec_id", "embedding").limit(nQ),
-      "vec_id", "embedding", k)
+      queries.select("vec_id", "embedding").limit(KnnQueries),
+      "vec_id", "embedding", KnnK)
     val ql = queries.select(col("vec_id").as("query_id"),
       col("label").as("qlabel"))
     val votes = topk
@@ -1387,15 +1399,15 @@ object SimilarityQueries {
     perQuery.groupBy(col("qlabel").as("label"))
       .agg(count(lit(1)).as("n_queries"),
         round(sum(col("hits")).cast("double") /
-          (count(lit(1)) * lit(k.toLong)), 4).as("hit_rate"),
+          (count(lit(1)) * lit(KnnK.toLong)), 4).as("hit_rate"),
         round(sum((col("pred") === col("qlabel")).cast("long"))
           .cast("double") / count(lit(1)), 4).as("vote_acc"))
       .orderBy(col("label"))
   }
 
-  private def knnLabelEvalOracle(nQ: Int = 40, k: Int = 10): String =
+  private def knnLabelEvalOracle: String =
     s"""WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-       |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $nQ),
+       |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $KnnQueries),
        |topk AS (
        |  SELECT query_id, qlabel, nlabel FROM (
        |    SELECT q.vec_id AS query_id, q.label AS qlabel,
@@ -1406,7 +1418,7 @@ object SimilarityQueries {
        |               CAST(q.embedding AS DOUBLE[])), 4) DESC,
        |             e.vec_id) AS rn
        |    FROM embeddings e JOIN q ON e.vec_id <> q.vec_id) t
-       |  WHERE rn <= $k),
+       |  WHERE rn <= $KnnK),
        |votes AS (SELECT query_id, qlabel, nlabel, COUNT(*) AS c
        |          FROM topk GROUP BY 1, 2, 3),
        |pm AS (SELECT query_id, qlabel, nlabel AS pred FROM votes
@@ -1416,7 +1428,7 @@ object SimilarityQueries {
        |                SUM(CASE WHEN nlabel = qlabel THEN c ELSE 0 END) AS h
        |         FROM votes GROUP BY 1, 2)
        |SELECT qlabel AS label, CAST(COUNT(*) AS BIGINT) AS n_queries,
-       |       ROUND(CAST(SUM(h) AS DOUBLE) / (COUNT(*) * $k), 4) AS hit_rate,
+       |       ROUND(CAST(SUM(h) AS DOUBLE) / (COUNT(*) * $KnnK), 4) AS hit_rate,
        |       ROUND(CAST(SUM(CASE WHEN pred = qlabel THEN 1 ELSE 0 END)
        |             AS DOUBLE) / COUNT(*), 4) AS vote_acc
        |FROM pm JOIN hits USING (query_id, qlabel)
@@ -1586,16 +1598,16 @@ object SimilarityQueries {
     Q("q216_embedding_drift", (s, d) => embeddingDrift(s, d),
       Some(embeddingDriftOracle)),
     Q("q195_knn_label_eval", (s, d) => knnLabelEval(s, d),
-      Some(knnLabelEvalOracle())),
-    Q("q184_mmr_rerank", (s, d) => mmrRerank(s, d), Some(mmrOracle())),
+      Some(knnLabelEvalOracle)),
+    Q("q184_mmr_rerank", (s, d) => mmrRerank(s, d), Some(mmrOracle)),
     Q("q144_semantic_dedup", (s, d) => semanticDedup(s, d),
-      Some(semanticDedupOracle())),
+      Some(semanticDedupOracle)),
     Q("q146_pca_projection", (s, d) => pcaProjection(s, d),
       Some(pcaOracle())),
     Q("q150_hard_negatives", (s, d) => hardNegatives(s, d),
       Some(hardNegativesOracle())),
     Q("q147_semantic_decontamination", (s, d) => semanticDecontamination(s, d),
-      Some(decontaminationOracle())),
+      Some(decontaminationOracle)),
     Q("q140_embedding_outliers", (s, d) => embeddingOutliers(s, d),
       Some(outlierOracle())),
     Q("q138_ivf_trained", (s, d) => annIvfTrained(s, d),
@@ -1605,17 +1617,17 @@ object SimilarityQueries {
     Q("q252_ivf_rebalance", (s, d) => ivfRebalance(s, d),
       Some(ivfRebalanceOracle())),
     Q("q137_kmeans_train", (s, d) => kmeansCentroids(s, d),
-      Some(kmeansOracle())),
+      Some(kmeansOracle)),
     Q("q153_pq_search", (s, d) => pqSearch(s, d), Some(pqOracle())),
     Q("q156_ivfpq_search", (s, d) => ivfPqSearch(s, d), Some(ivfPqOracle())),
     Q("q125_quantized_recall", (s, d) => quantizedRecall(s, d),
-      Some(quantizedRecallOracle())),
+      Some(quantizedRecallOracle)),
     Q("q250_matryoshka_recall", (s, d) => matryoshkaRecall(s, d),
-      Some(matryoshkaOracle())),
+      Some(matryoshkaOracle)),
     Q("q256_filtered_ann", (s, d) => filteredAnn(s, d),
-      Some(filteredAnnOracle())),
+      Some(filteredAnnOracle)),
     Q("q107_srp_portable", (s, d) => srpPortable(s, d),
-      Some(srpPortableOracle())),
+      Some(srpPortableOracle)),
     Q("q75_embedding_neardup", (s, d) => embeddingNearDups(s, d), Some(
       """WITH s AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
         |           FROM embeddings
@@ -1639,7 +1651,7 @@ object SimilarityQueries {
         |WHERE rn <= 10
         |ORDER BY query_id, rn""".stripMargin)),
     Q("q41_ann_lsh", (s, d) => annLshPortable(s, d),
-      Some(annLshPortableOracle())),
+      Some(annLshPortableOracle)),
     Q("q85_ivf_topk", (s, d) => annIvf(s, d), Some(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |cents AS (SELECT vec_id AS cent_id, e AS cv FROM v ORDER BY vec_id LIMIT 16),

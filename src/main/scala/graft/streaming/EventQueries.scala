@@ -223,15 +223,16 @@ object EventQueries {
       .orderBy(col("err_id"))
   }
 
+  private final val RollupSlices = 4
   /** Incremental (snapshot + delta) rollup driven through
-    * `etl.Incremental`: the event history is processed as `slices`
+    * `etl.Incremental`: the event history is processed as `RollupSlices`
     * successive high-water-marked deltas, each aggregated alone and
     * merged into the running snapshot — the cron re-run pattern
     * (SURVEY §2.10). The DuckDB oracle is the ONE-SHOT aggregate over
     * the full history, so the gate proves fold == full recompute
     * exactly (additive long counts + decimal sums; the average derives
     * at read time). */
-  def incrementalRollup(s: SparkSession, dir: String, slices: Int = 4): DataFrame = {
+  def incrementalRollup(s: SparkSession, dir: String): DataFrame = {
     import graft.etl.Incremental
     val events = graft.Tables.events(s, dir)
       .filter(col("ts").isNotNull)
@@ -256,8 +257,8 @@ object EventQueries {
     }
     val (first, end) = bounds.get
     val (lo, hi) = (first.getTime, end.getTime)
-    val marks = (1 until slices).map(i =>
-      new java.sql.Timestamp(lo + (hi - lo) * i / slices)) :+ end
+    val marks = (1 until RollupSlices).map(i =>
+      new java.sql.Timestamp(lo + (hi - lo) * i / RollupSlices)) :+ end
     var snapshot: Option[org.apache.spark.sql.DataFrame] = None
     var hwm: Option[java.sql.Timestamp] = None
     marks.foreach { m =>
@@ -320,6 +321,7 @@ object EventQueries {
       .orderBy(col("cohort_week"), col("week_offset"))
   }
 
+  private final val SessionPathsK = 20
   /** Session path mining (q186): the most common 3-event sequences WITHIN
     * q39's gap-based sessions — the navigation-pattern rollup funnels
     * (q89) can't express because funnels fix the step types up front.
@@ -331,8 +333,8 @@ object EventQueries {
     * by the user partitioning — no second shuffle); the trigram count is
     * a low-cardinality hash aggregate (|event types|³ keys) and top-k is
     * TakeOrderedAndProject. */
-  def sessionPaths(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    sessionPathsOf(Tables.events(s, dir), k)
+  def sessionPaths(s: SparkSession, dir: String): DataFrame =
+    sessionPathsOf(Tables.events(s, dir), SessionPathsK)
 
   def sessionPathsOf(events: DataFrame, k: Int = 20): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -357,6 +359,7 @@ object EventQueries {
       .orderBy(col("rn"))
   }
 
+  private val AutocorrLags = Seq(1, 7)
   /** Autocorrelation of the daily event-count series (q193): Pearson r
     * at lag 1 and lag 7 — the seasonality probe a capacity-planning /
     * anomaly pipeline runs before picking a forecasting window (lag-7
@@ -373,13 +376,12 @@ object EventQueries {
     * Scale shape: one corpus-sized hash aggregate builds the day
     * histogram (calendar-bounded rows); everything after runs on that
     * tiny frame — the lag joins and moment sums are statistics-sized. */
-  def dailyAutocorr(s: SparkSession, dir: String,
-      lags: Seq[Int] = Seq(1, 7)): DataFrame = {
+  def dailyAutocorr(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
       .ckpt // consumers: one pair-join per lag
-    val perLag = lags.map { lag =>
+    val perLag = AutocorrLags.map { lag =>
       val a = daily.select(col("day"), col("cnt").as("x"))
       val b = daily.select(date_add(col("day"), lag).as("day"),
         col("cnt").as("y"))
@@ -400,8 +402,8 @@ object EventQueries {
     perLag.reduce(_.unionByName(_)).orderBy(col("lag"))
   }
 
-  private def autocorrOracle(lags: Seq[Int] = Seq(1, 7)): String = {
-    val arms = lags.map(lag =>
+  private def autocorrOracle: String = {
+    val arms = AutocorrLags.map(lag =>
       s"""SELECT $lag AS lag, CAST(n AS BIGINT) AS n_pairs,
          |       ROUND(CAST(n * sxy - sx * sy AS DOUBLE) /
          |             sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
@@ -493,6 +495,7 @@ object EventQueries {
       |  FROM conv GROUP BY 2)
       |ORDER BY model, credited""".stripMargin
 
+  private final val CusumK = 5
   /** CUSUM changepoint scan over the daily event-count series (q200):
     * dev_i = c_i·D − T (count deviation from the mean, scaled by D to
     * stay integer: c_i·D − T = D·(c_i − T/D)); the running sum's extreme
@@ -503,7 +506,7 @@ object EventQueries {
     * Scale shape: one corpus hash aggregate builds the day histogram;
     * the cumulative walk and ranking run over the calendar-bounded day
     * frame (the q193/q168 discipline). */
-  def cusumChangepoint(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
@@ -516,7 +519,7 @@ object EventQueries {
         Window.orderBy(col("day")).rowsBetween(Window.unboundedPreceding,
           Window.currentRow)))
     dev
-      .orderBy(abs(col("cusum")).desc, col("day")).limit(k)
+      .orderBy(abs(col("cusum")).desc, col("day")).limit(CusumK)
       .withColumn("rn", row_number().over(
         Window.orderBy(abs(col("cusum")).desc, col("day"))))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
@@ -524,7 +527,7 @@ object EventQueries {
       .orderBy(col("rn"))
   }
 
-  private def cusumOracle(k: Int = 5): String =
+  private def cusumOracle: String =
     s"""WITH daily AS (
        |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS cnt
        |  FROM events GROUP BY 1),
@@ -540,16 +543,16 @@ object EventQueries {
        |         CAST(ROW_NUMBER() OVER (ORDER BY abs(cusum) DESC, day)
        |              AS INT) AS rn
        |  FROM c) t
-       |WHERE rn <= $k
+       |WHERE rn <= $CusumK
        |ORDER BY rn""".stripMargin
 
   val qs: Seq[Q] = Seq(
     Q("q199_attribution", (s, d) => conversionAttribution(s, d),
       Some(attributionOracle)),
     Q("q200_cusum_changepoint", (s, d) => cusumChangepoint(s, d),
-      Some(cusumOracle())),
+      Some(cusumOracle)),
     Q("q193_daily_autocorr", (s, d) => dailyAutocorr(s, d),
-      Some(autocorrOracle())),
+      Some(autocorrOracle)),
     Q("q186_session_paths", (s, d) => sessionPaths(s, d), Some(
       """WITH e AS (
         |  SELECT user_id, event_id, ts, event_type,

@@ -428,11 +428,12 @@ object EventStreams {
       }
   }
 
+  private final val StreamWindow = "1 hour"
   /** Run a windowed-count stream to a named in-memory sink until all
     * currently-available input is processed (local smoke path). */
-  def runToMemory(spark: SparkSession, sourceDir: String, queryName: String,
-      window: String = "1 hour"): DataFrame = {
-    val q = windowedCounts(readEventStream(spark, sourceDir), window)
+  def runToMemory(spark: SparkSession, sourceDir: String,
+      queryName: String): DataFrame = {
+    val q = windowedCounts(readEventStream(spark, sourceDir), StreamWindow)
       .writeStream
       .outputMode("complete")
       .format("memory")

@@ -64,6 +64,7 @@ object Lifecycle {
       |FROM h
       |ORDER BY month_k""".stripMargin
 
+  private final val MarkovK = 25
   /** First-order Markov transition matrix (q203) over in-session event
     * sequences: P(next = b | current = a) in integer basis points, next
     * to the unconditional base rate of b — the (p − base) delta is the
@@ -74,7 +75,7 @@ object Lifecycle {
     * exchange (plan-asserted); everything downstream operates on the
     * transition MATRIX — |event types|² rows at any corpus size — via
     * broadcast joins of its own marginals. */
-  def markovTransitions(s: SparkSession, dir: String, k: Int = 25): DataFrame = {
+  def markovTransitions(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val trans = Tables.events(s, dir)
@@ -100,13 +101,13 @@ object Lifecycle {
         expr("col_tot * 10000 div tot").as("base_bp"))
       .withColumn("delta_bp", col("p_bp") - col("base_bp"))
       .orderBy(col("cnt").desc, col("cur"), col("nxt"))
-      .limit(k)
+      .limit(MarkovK)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("cnt").desc, col("cur"), col("nxt"))))
       .orderBy(col("rn"))
   }
 
-  private def markovOracle(k: Int = 25): String =
+  private def markovOracle: String =
     s"""WITH e AS (
        |  SELECT user_id, event_id, ts, event_type,
        |         CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
@@ -136,7 +137,7 @@ object Lifecycle {
        |              AS INT) AS rn
        |  FROM tr JOIN rt ON tr.cur = rt.cur
        |          JOIN ct ON tr.nxt = ct.nxt, tot) t
-       |WHERE rn <= $k
+       |WHERE rn <= $MarkovK
        |ORDER BY rn""".stripMargin
 
   /** Interval-coverage concurrency (q212): per day, the PEAK number of
@@ -622,6 +623,7 @@ object Lifecycle {
       |FROM cum JOIN cs USING (cym)
       |ORDER BY cohort_ym, age""".stripMargin
 
+  private final val StreaksK = 15
   /** Activity streaks (q233): longest runs of CONSECUTIVE active days
     * per user — the islands-and-gaps pattern (`day − row_number()` is
     * constant within a consecutive run), the engagement metric behind
@@ -631,7 +633,7 @@ object Lifecycle {
     * the row_number window partitions BY USER (per-user day counts are
     * observation-bounded — never a global sort); streaks aggregate on
     * the derived island key; top-k is TakeOrderedAndProject. */
-  def activityStreaks(s: SparkSession, dir: String, k: Int = 15): DataFrame = {
+  def activityStreaks(s: SparkSession, dir: String): DataFrame = {
     val ud = Tables.events(s, dir)
       .select(col("user_id"), col("ts").cast("date").as("day"))
       .distinct()
@@ -643,13 +645,13 @@ object Lifecycle {
         date_format(col("start_day"), "yyyy-MM-dd").as("start_day"),
         col("streak_days"))
       .orderBy(col("streak_days").desc, col("user_id"), col("start_day"))
-      .limit(k)
+      .limit(StreaksK)
       .withColumn("rn", row_number().over(Window.orderBy(
         col("streak_days").desc, col("user_id"), col("start_day"))))
       .orderBy(col("rn"))
   }
 
-  private def streaksOracle(k: Int = 15): String =
+  private def streaksOracle: String =
     s"""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
        |            FROM events),
        |i AS (SELECT user_id, day,
@@ -664,7 +666,7 @@ object Lifecycle {
        |         CAST(ROW_NUMBER() OVER (ORDER BY streak_days DESC, user_id,
        |                start_day) AS INT) AS rn
        |  FROM st) t
-       |WHERE rn <= $k
+       |WHERE rn <= $StreaksK
        |ORDER BY rn""".stripMargin
 
   /** Rolling 7-day median event value (q235): for every day, the EXACT
@@ -773,7 +775,7 @@ object Lifecycle {
     Q("q237_event_dashboard", (s, d) => eventDashboard(s, d),
       Some(eventDashboardOracle)),
     Q("q233_activity_streaks", (s, d) => activityStreaks(s, d),
-      Some(streaksOracle())),
+      Some(streaksOracle)),
     Q("q235_rolling_median", (s, d) => rollingMedian(s, d),
       Some(rollingMedianOracle)),
     Q("q229_windowed_funnel", (s, d) => windowedFunnel(s, d),
@@ -790,7 +792,7 @@ object Lifecycle {
     Q("q202_churn_lifetable", (s, d) => churnLifeTable(s, d),
       Some(lifeTableOracle)),
     Q("q203_markov_transitions", (s, d) => markovTransitions(s, d),
-      Some(markovOracle())),
+      Some(markovOracle)),
     Q("q212_session_concurrency", (s, d) => sessionConcurrency(s, d),
       Some(concurrencyOracle)))
 }

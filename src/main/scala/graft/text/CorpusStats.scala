@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStats {
 
+  private final val Chi2MinFreq = 5
   /** Chi-square token-distribution drift per source (q196): for each
     * source s, χ² = Σ_{t ∈ V} (o_st − e_st)² / e_st against the pooled
     * corpus distribution (e_st = n_s · c_t / N), over the bounded
@@ -32,14 +33,13 @@ object CorpusStats {
     * (map-side partials), the vocabulary frame aggregates once and
     * BROADCASTS, per-source totals are |sources| rows. Nothing
     * corpus-quadratic; the final statistic is sources-sized. */
-  def chi2SourceDrift(s: SparkSession, dir: String,
-      minFreq: Int = 5): DataFrame = {
+  def chi2SourceDrift(s: SparkSession, dir: String): DataFrame = {
     val st = Tables.documents(s, dir)
       .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("o"))
       .ckpt // consumers: vocab counts + per-source join
     val vocab = st.groupBy(col("tok")).agg(sum(col("o")).as("ct"))
-      .filter(col("ct") >= minFreq)
+      .filter(col("ct") >= Chi2MinFreq)
     val bySrc = st.groupBy(col("source")).agg(sum(col("o")).as("ns"))
     val totals = vocab.agg(sum(col("ct")).as("cv"))
       .crossJoin(st.agg(sum(col("o")).as("nn")))
@@ -64,14 +64,14 @@ object CorpusStats {
       .orderBy(col("source"))
   }
 
-  private def chi2Oracle(minFreq: Int = 5): String =
+  private def chi2Oracle: String =
     s"""WITH st AS (
        |  SELECT source, tok, COUNT(*) AS o
        |  FROM (SELECT source, unnest(${TextQueries.toksSql}) AS tok
        |        FROM documents) u
        |  GROUP BY 1, 2),
        |vocab AS (SELECT tok, SUM(o) AS ct FROM st GROUP BY tok
-       |          HAVING SUM(o) >= $minFreq),
+       |          HAVING SUM(o) >= $Chi2MinFreq),
        |bysrc AS (SELECT source, SUM(o) AS ns FROM st GROUP BY source),
        |tot AS (SELECT (SELECT SUM(ct) FROM vocab) AS cv,
        |               (SELECT SUM(o) FROM st) AS nn),
@@ -214,7 +214,7 @@ object CorpusStats {
     Q("q231_source_diversity", (s, d) => sourceDiversity(s, d),
       Some(sourceDiversityOracle)),
     Q("q196_chi2_drift", (s, d) => chi2SourceDrift(s, d),
-      Some(chi2Oracle())),
+      Some(chi2Oracle)),
     Q("q198_vocab_growth", (s, d) => vocabGrowth(s, d),
       Some(vocabGrowthOracle)))
 }

@@ -32,6 +32,7 @@ object Retrieval {
   private[text] def queryTerms: Seq[(Int, String)] =
     benchQueries.flatMap { case (id, text) => text.split(' ').distinct.map(id -> _) }
 
+  private final val Bm25K = 10
   /** BM25 top-k retrieval (q148): Okapi BM25 with k1=1.2, b=0.75 and the
     * +1-smoothed idf `ln((N - df + 0.5)/(df + 0.5) + 1)` (the Lucene
     * variant, non-negative by construction).
@@ -55,7 +56,7 @@ object Retrieval {
     * search engine); top-k per query is the bounded-heap aggregate
     * (`TopKAgg.topK`) — ≤k rows shuffle per (task × query), never a
     * per-query sort of the full candidate set. */
-  def bm25TopK(s: SparkSession, dir: String, k: Int = 10): DataFrame =
+  def bm25TopK(s: SparkSession, dir: String, k: Int = Bm25K): DataFrame =
     // the integer score frame is pinned once per session (memo) — the
     // index-scoring pass of a search engine runs once, each consumer
     // (q148's k=10 register, q257's kIn=20 fusion arm) takes its own
@@ -123,7 +124,7 @@ object Retrieval {
   private def queryTermsValuesSql: String =
     queryTerms.map { case (id, t) => s"($id, '$t')" }.mkString(", ")
 
-  private def bm25OracleSql(k: Int = 10): String = {
+  private def bm25OracleSql(k: Int): String = {
     val toksSql = TextQueries.toksSql
     s"""WITH qt(query_id, token) AS (VALUES $queryTermsValuesSql),
        |tf AS (SELECT doc_id, tok AS token, COUNT(*) AS tf
@@ -155,6 +156,8 @@ object Retrieval {
        |ORDER BY query_id, rn""".stripMargin
   }
 
+  private final val HeavyHittersK = 50
+  private final val HeavyHittersSketchCap = 200
   /** Heavy hitters with an exact answer (q181): a Misra–Gries sketch pass
     * proposes candidates (cap-bounded state, map-side mergeable — the
     * vocabulary never shuffles), then an exact count confirms them over a
@@ -164,14 +167,13 @@ object Retrieval {
     * EXACT, the sketch only prunes the key space (the LSH-then-verify
     * discipline applied to frequency estimation; at 100 TB the exact
     * full-vocabulary aggregate this replaces is itself TB-sized state). */
-  def heavyHitters(s: SparkSession, dir: String, k: Int = 50,
-      sketchCap: Int = 200): DataFrame = {
+  def heavyHitters(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(explode(TextFunctions.tokensOf(
         TextFunctions.normalize(col("text")))).as("token"))
       .ckpt // two passes: sketch, exact confirm
     val sketch = toks.agg(
-      graft.functions.MisraGriesAgg.mgCandidates(col("token"), sketchCap)
+      graft.functions.MisraGriesAgg.mgCandidates(col("token"), HeavyHittersSketchCap)
         .as("cand"),
       count(lit(1)).as("n_tokens"))
     val cands = sketch.select(explode(col("cand")).as("token"),
@@ -179,21 +181,22 @@ object Retrieval {
     toks.join(broadcast(cands), Seq("token"))
       .groupBy(col("token"), col("n_tokens"))
       .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") * k > col("n_tokens"))
+      .filter(col("cnt") * HeavyHittersK > col("n_tokens"))
       .select(col("token"), col("cnt"), col("n_tokens"))
       .orderBy(col("cnt").desc, col("token"))
   }
 
-  private def heavyHittersOracle(k: Int = 50): String =
+  private def heavyHittersOracle: String =
     s"""WITH tok AS (SELECT unnest(${TextQueries.toksSql}) AS token
        |             FROM documents),
        |n AS (SELECT COUNT(*) AS n_tokens FROM tok),
        |c AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token)
        |SELECT c.token, c.cnt, n.n_tokens
        |FROM c, n
-       |WHERE c.cnt * $k > n.n_tokens
+       |WHERE c.cnt * $HeavyHittersK > n.n_tokens
        |ORDER BY c.cnt DESC, c.token""".stripMargin
 
+  private final val Phrase = "big order scan"
   /** Positional phrase search (q182): exact consecutive-token phrase
     * matching through a positional inverted index — the retrieval
     * operation BM25's bag-of-words scoring cannot express. Postings are
@@ -204,7 +207,7 @@ object Retrieval {
     * reuse the partitioning. Overlapping matches count per start
     * position. */
   def phraseSearch(s: SparkSession, dir: String,
-      phrase: String = "big order scan"): DataFrame = {
+      phrase: String = Phrase): DataFrame = {
     val words = phrase.split(" ").toSeq
     val postings = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(TextFunctions.tokensOf(
@@ -223,8 +226,8 @@ object Retrieval {
       .orderBy(col("doc_id"))
   }
 
-  private def phraseSearchOracle(phrase: String = "big order scan"): String = {
-    val words = phrase.split(" ")
+  private def phraseSearchOracle: String = {
+    val words = Phrase.split(" ")
     val joins = (1 until words.length).map(i =>
       s"JOIN t t$i ON t$i.doc_id = p0.doc_id AND t$i.pos = p0.pos + $i " +
         s"AND t$i.token = '${words(i)}'").mkString("\n|       ")
@@ -241,6 +244,13 @@ object Retrieval {
        |ORDER BY doc_id""".stripMargin
   }
 
+  /** Composite chunk key multiplier: a chunk would alias across
+    * documents only past 10⁶ chunks/doc (~48M tokens at stride 48 —
+    * no real document); the encode guard below still fails loudly
+    * rather than aliasing if one ever appears. */
+  private val ChunkKeyMult = 1000000L
+
+  private final val ChunkedK = 5
   /** Chunked retrieval with document rollup (q248): the complete RAG
     * read path — the q245 chunk frame becomes the retrieval unit, BM25
     * scores each (query, chunk) with chunk-level df/length statistics,
@@ -253,13 +263,8 @@ object Retrieval {
     * query terms); the rollup adds ONE (query, doc) aggregate over the
     * already-reduced score frame and a bounded-heap top-k — no new
     * corpus-sized shuffle beyond q148's own. */
-  /** Composite chunk key multiplier: a chunk would alias across
-    * documents only past 10⁶ chunks/doc (~48M tokens at stride 48 —
-    * no real document); the encode guard below still fails loudly
-    * rather than aliasing if one ever appears. */
-  private val ChunkKeyMult = 1000000L
-
-  def chunkedRetrieval(s: SparkSession, dir: String, k: Int = 5): DataFrame =
+  def chunkedRetrieval(s: SparkSession, dir: String,
+      k: Int = ChunkedK): DataFrame =
     // the per-(query, parent-doc) rolled score frame is pinned once per
     // session (memo); q248's k=5 register and q257's kIn=20 fusion arm
     // each take their own bounded-heap top-k over it
@@ -303,7 +308,7 @@ object Retrieval {
         col("col.best_chunk").as("best_chunk"))
       .orderBy(col("query_id"), col("rn"))
 
-  private def chunkedRetrievalOracle(k: Int = 5): String = {
+  private def chunkedRetrievalOracle(k: Int): String = {
     val toksSql = TextQueries.toksSql
     s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |t0 AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) > 0),
@@ -348,6 +353,8 @@ object Retrieval {
        |ORDER BY query_id, rn""".stripMargin
   }
 
+  private final val RrfK = 10
+  private final val RrfKIn = 20
   /** Reciprocal-rank-fusion hybrid retrieval (q257): the two retrieval
     * strategies the suite already gates — whole-document BM25 (q148)
     * and chunk-grain BM25 with max-pooling rollup (q248) — fused per
@@ -360,11 +367,10 @@ object Retrieval {
     * Scale shape: both arms are the q148 inverted-index shape; fusion
     * adds one (query, doc)-keyed outer join over two k-bounded lists —
     * per-query-constant rows — and a bounded-heap top-k. */
-  def rrfFusion(s: SparkSession, dir: String, k: Int = 10,
-      kIn: Int = 20): DataFrame = {
-    val a = bm25TopK(s, dir, kIn)
+  def rrfFusion(s: SparkSession, dir: String): DataFrame = {
+    val a = bm25TopK(s, dir, RrfKIn)
       .select(col("query_id"), col("doc_id"), col("rn").as("rn_a"))
-    val b = chunkedRetrieval(s, dir, kIn)
+    val b = chunkedRetrieval(s, dir, RrfKIn)
       .select(col("query_id"), col("doc_id"), col("rn").as("rn_b"))
     a.join(b, Seq("query_id", "doc_id"), "full_outer")
       .select(col("query_id"), col("doc_id"),
@@ -374,7 +380,7 @@ object Retrieval {
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKAgg.topK(
         struct((-col("rrf_micro")).as("neg"), col("doc_id").as("doc_id")),
-        k).as("tk"))
+        RrfK).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
       .select(col("query_id"), col("col.doc_id").as("doc_id"),
         (col("pos") + 1).cast("int").as("rn"),
@@ -382,9 +388,9 @@ object Retrieval {
       .orderBy(col("query_id"), col("rn"))
   }
 
-  private def rrfFusionOracle(k: Int = 10, kIn: Int = 20): String =
-    s"""WITH a AS (${bm25OracleSql(kIn)}),
-       |b AS (${chunkedRetrievalOracle(kIn)}),
+  private def rrfFusionOracle: String =
+    s"""WITH a AS (${bm25OracleSql(RrfKIn)}),
+       |b AS (${chunkedRetrievalOracle(RrfKIn)}),
        |f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
        |             COALESCE(a.doc_id, b.doc_id) AS doc_id,
        |             COALESCE(1000000 // (60 + a.rn), 0)
@@ -397,17 +403,17 @@ object Retrieval {
        |             ROW_NUMBER() OVER (PARTITION BY query_id
        |               ORDER BY rrf_micro DESC, doc_id) AS rn
        |      FROM f) t
-       |WHERE rn <= $k
+       |WHERE rn <= $RrfK
        |ORDER BY query_id, rn""".stripMargin
 
   def qs: Seq[Q] = Seq(
     Q("q257_rrf_fusion", (s, d) => rrfFusion(s, d),
-      Some(rrfFusionOracle())),
+      Some(rrfFusionOracle)),
     Q("q248_chunked_retrieval", (s, d) => chunkedRetrieval(s, d),
-      Some(chunkedRetrievalOracle())),
-    Q("q148_bm25_topk", (s, d) => bm25TopK(s, d), Some(bm25OracleSql())),
+      Some(chunkedRetrievalOracle(ChunkedK))),
+    Q("q148_bm25_topk", (s, d) => bm25TopK(s, d), Some(bm25OracleSql(Bm25K))),
     Q("q181_heavy_hitters", (s, d) => heavyHitters(s, d),
-      Some(heavyHittersOracle())),
+      Some(heavyHittersOracle)),
     Q("q182_phrase_search", (s, d) => phraseSearch(s, d),
-      Some(phraseSearchOracle())))
+      Some(phraseSearchOracle)))
 }

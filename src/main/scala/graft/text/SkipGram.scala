@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   * aggregate with map-side partials; top-k is TakeOrderedAndProject. */
 object SkipGram {
 
+  private final val SkipGramWindow = 2
+  private final val SkipGramT = 1e-3
+  private final val SkipGramK = 50
   /** q192: top-k skip-gram pairs (window ±2, subsample t = 1e-3). */
-  def skipgramPairs(s: SparkSession, dir: String, window: Int = 2,
-      t: Double = 1e-3, k: Int = 50): DataFrame = {
+  def skipgramPairs(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"),
         posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "tok")))
@@ -39,7 +41,7 @@ object SkipGram {
     val rates = freq.crossJoin(broadcast(tot))
       .withColumn("thr", floor(
         least(lit(1.0),
-          sqrt(lit(t) * col("total") / col("freq"))) * 65536).cast("int"))
+          sqrt(lit(SkipGramT) * col("total") / col("freq"))) * 65536).cast("int"))
       .select(col("tok"), col("thr"))
     val bucket = conv(substring(md5(
       concat_ws(":", col("doc_id"), col("pos"))), 1, 4), 16, 10).cast("int")
@@ -50,7 +52,7 @@ object SkipGram {
           .partitionBy(col("doc_id")).orderBy(col("pos"))))
       .select(col("doc_id"), col("idx"), col("tok"))
       .ckpt // consumers: center side + context side
-    val offsets = (-window to window).filter(_ != 0)
+    val offsets = (-SkipGramWindow to SkipGramWindow).filter(_ != 0)
     val centers = kept
       .select(col("doc_id"), col("tok").as("center"), col("idx"),
         explode(array(offsets.map(lit(_)): _*)).as("off"))
@@ -61,16 +63,15 @@ object SkipGram {
       .groupBy(col("center"), col("context"))
       .agg(count(lit(1)).as("pairs"))
       .orderBy(col("pairs").desc, col("center"), col("context"))
-      .limit(k)
+      .limit(SkipGramK)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("pairs").desc, col("center"), col("context"))))
       .orderBy(col("rn"))
   }
 
-  private def skipgramOracle(window: Int = 2, t: Double = 1e-3,
-      k: Int = 50): String = {
-    val offs = (-window to window).filter(_ != 0).mkString(", ")
+  private def skipgramOracle: String = {
+    val offs = (-SkipGramWindow to SkipGramWindow).filter(_ != 0).mkString(", ")
     s"""WITH d AS (SELECT doc_id, ${TextQueries.toksSql} AS ts
        |           FROM documents),
        |toks AS (
@@ -80,7 +81,7 @@ object SkipGram {
        |tot AS (SELECT COUNT(*) AS total FROM toks),
        |rates AS (
        |  SELECT tok, CAST(floor(LEAST(1.0,
-       |           sqrt($t * total / freq)) * 65536) AS INT) AS thr
+       |           sqrt($SkipGramT * total / freq)) * 65536) AS INT) AS thr
        |  FROM freq, tot),
        |kept AS (
        |  SELECT doc_id,
@@ -100,11 +101,11 @@ object SkipGram {
        |         CAST(ROW_NUMBER() OVER (ORDER BY pairs DESC, center, context)
        |              AS INT) AS rn
        |  FROM pairs) p
-       |WHERE rn <= $k
+       |WHERE rn <= $SkipGramK
        |ORDER BY rn""".stripMargin
   }
 
   val qs: Seq[Q] = Seq(
     Q("q192_skipgram_pairs", (s, d) => skipgramPairs(s, d),
-      Some(skipgramOracle())))
+      Some(skipgramOracle)))
 }

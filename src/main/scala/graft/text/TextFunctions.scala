@@ -122,13 +122,10 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les"),
     "es" -> Seq("el", "los", "las"))
 
-  def langScore(c: Column, markers: Seq[String]): Column =
-    occurrences(tokens(c), markers)
-
   /** Predicted language: argmax of marker scores with deterministic
     * first-wins tie-break in LangMarkers order; all-zero → "und". One
     * primitive pass over the token array via the custom Catalyst
-    * expression (the equivalent CASE-chain of `langScore` comparisons
+    * expression (the equivalent CASE-chain of per-language marker counts
     * re-derived tokenization per branch — ~20× the work per row); the
     * DuckDB oracle states the identical CASE-chain logic. */
   def langId(c: Column): Column =

@@ -33,6 +33,11 @@ object TextQueries {
       .select(col("doc_id"), TextFunctions.tokenCount(col("text")).as("n_tokens"))
       .orderBy(col("doc_id"))
 
+  /** The context-window chunk geometry (q70, q245, q248, q251): chunks of
+    * this many tokens, one starting every `ChunkStride` tokens. */
+  private final val ChunkTok = 64
+  private final val ChunkStride = 48
+
   /** RAG-style document chunking (q245): fixed-size token windows with
     * overlap — chunk k covers tokens [k·stride, k·stride + size), the
     * retrieval-index unit every RAG pipeline derives from its corpus.
@@ -44,9 +49,8 @@ object TextQueries {
     * Scale shape: one map-side pass — tokenize, `sequence` explode,
     * `slice` — rows out bounded by ⌈tokens/stride⌉ per doc; the only
     * exchange is the output sort. */
-  def docChunks(s: SparkSession, dir: String, chunkTok: Int = 64,
-      strideTok: Int = 48): DataFrame =
-    chunkFrame(s, dir, chunkTok, strideTok)
+  def docChunks(s: SparkSession, dir: String): DataFrame =
+    chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_idx"),
         size(col("ctoks")).as("n_tokens"),
         md5(array_join(col("ctoks"), " ")).as("chunk_md5"))
@@ -54,24 +58,23 @@ object TextQueries {
 
   /** The (doc_id, chunk_idx, ctoks) chunk frame q245 hashes and q248
     * retrieves over. */
-  private[text] def chunkFrame(s: SparkSession, dir: String,
-      chunkTok: Int = 64, strideTok: Int = 48): DataFrame =
+  private[text] def chunkFrame(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
       .filter(col("n") > 0)
       .withColumn("chunk_idx", explode(expr(
-        s"sequence(0, cast((n + $strideTok - 1) div $strideTok as int) - 1)")))
+        s"sequence(0, cast((n + $ChunkStride - 1) div $ChunkStride as int) - 1)")))
       .select(col("doc_id"), col("chunk_idx"),
-        expr(s"slice(toks, chunk_idx * $strideTok + 1, $chunkTok)").as("ctoks"))
+        expr(s"slice(toks, chunk_idx * $ChunkStride + 1, $ChunkTok)").as("ctoks"))
 
-  private def docChunksOracle(chunkTok: Int = 64, strideTok: Int = 48): String =
+  private def docChunksOracle: String =
     s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |t AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) > 0),
        |c AS (SELECT doc_id, CAST(k AS INT) AS chunk_idx,
-       |             toks[CAST(k * $strideTok + 1 AS INT) :
-       |                  CAST(k * $strideTok + $chunkTok AS INT)] AS ctoks
-       |      FROM t, unnest(range(0, (n + $strideTok - 1) // $strideTok))
+       |             toks[CAST(k * $ChunkStride + 1 AS INT) :
+       |                  CAST(k * $ChunkStride + $ChunkTok AS INT)] AS ctoks
+       |      FROM t, unnest(range(0, (n + $ChunkStride - 1) // $ChunkStride))
        |        u(k))
        |SELECT doc_id, chunk_idx, CAST(len(ctoks) AS INT) AS n_tokens,
        |       md5(array_to_string(ctoks, ' ')) AS chunk_md5
@@ -476,17 +479,16 @@ object TextQueries {
     * 48) exploded to one row per chunk — the length-bounding pass before
     * tokenizer/packing in a training pipeline. Pure narrow ops (tokenize →
     * sequence → posexplode → slice): no shuffle until the output sort. */
-  def chunkDocs(s: SparkSession, dir: String,
-      chunkSize: Int = 64, stride: Int = 48): DataFrame =
+  def chunkDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .withColumn("toks", TextFunctions.tokens(col("text")))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), col("toks"),
-        posexplode(sequence(lit(0), size(col("toks")) - 1, lit(stride))))
+        posexplode(sequence(lit(0), size(col("toks")) - 1, lit(ChunkStride))))
       .select(col("doc_id"),
         col("pos").as("chunk_idx"),
-        size(slice(col("toks"), col("col") + 1, lit(chunkSize))).as("n_chunk_tokens"),
-        concat_ws(" ", slice(col("toks"), col("col") + 1, lit(chunkSize))).as("chunk_text"))
+        size(slice(col("toks"), col("col") + 1, lit(ChunkTok))).as("n_chunk_tokens"),
+        concat_ws(" ", slice(col("toks"), col("col") + 1, lit(ChunkTok))).as("chunk_text"))
       .orderBy(col("doc_id"), col("chunk_idx"))
 
   /** Posting-mass stats for q159's gram family — one arm of the d17
@@ -676,7 +678,7 @@ object TextQueries {
     * LSH candidates from the pinned signature frame, exact shingle-
     * Jaccard confirmed against the pinned shingle frame. */
   private def verifiedEdgesM(s: SparkSession, dir: String): DataFrame =
-    graft.etl.ChainCache.memo(s, dir, "txt_verified_edges", "minJ=0.5") {
+    graft.etl.ChainCache.memo(s, dir, "txt_verified_edges", s"minJ=$VerifiedMinJ") {
       verifiedNearDupEdges(s, dir)
     }
 
@@ -684,7 +686,8 @@ object TextQueries {
     * edges — q131's output frame, shared verbatim by q164/q172/q267. */
   private[graft] def dedupComponentsM(s: SparkSession,
       dir: String): DataFrame =
-    graft.etl.ChainCache.memo(s, dir, "txt_dedup_components", "minJ=0.5") {
+    graft.etl.ChainCache.memo(s, dir, "txt_dedup_components",
+        s"minJ=$VerifiedMinJ") {
       Dedup.connectedComponents(
         verifiedEdgesM(s, dir)
           .select(col("id1").as("src"), col("id2").as("dst")),
@@ -758,14 +761,17 @@ object TextQueries {
       .select(col("doc_id"),
         concat_ws(" ", slice(col("toks"), col("i"), lit(n))).as("g"))
 
+  /** The shingle length q86 and q108 match against the benchmark set. */
+  private final val ContaminationN = 4
+
   /** Benchmark decontamination: flag corpus documents sharing any n-token
     * shingle with the benchmark set (here: doc_id < 5, standing in for an
     * eval set), with the count of distinct overlapping shingles. The
     * benchmark side is tiny by definition → its distinct shingles
     * broadcast, so the corpus side is ONE narrow scan + explode with no
     * shuffle before the per-doc count. */
-  def contamination(s: SparkSession, dir: String, n: Int = 4): DataFrame = {
-    val sh = shingleRows(Tables.documents(s, dir), n)
+  def contamination(s: SparkSession, dir: String): DataFrame = {
+    val sh = shingleRows(Tables.documents(s, dir), ContaminationN)
     val bench = sh.filter(col("doc_id") < 5).select(col("g")).distinct()
     sh.filter(col("doc_id") >= 5)
       .join(broadcast(bench), Seq("g"))
@@ -790,8 +796,8 @@ object TextQueries {
     * every executor as a literal, exactly like `InjectRuntimeFilter`'s
     * scalar-subquery bloom. The two driver actions (count + sketch
     * collect) move kilobytes — the sketch, never data rows. */
-  def contaminationBloom(s: SparkSession, dir: String, n: Int = 4): DataFrame = {
-    val sh = shingleRows(Tables.documents(s, dir), n)
+  def contaminationBloom(s: SparkSession, dir: String): DataFrame = {
+    val sh = shingleRows(Tables.documents(s, dir), ContaminationN)
     // the bench shingle set is read three times (count, sketch build,
     // exact-join side) — materialize it ONCE; it is eval-set-sized by
     // definition. The doc_id < 5 filter pushes to the scan, so this pass
@@ -1097,9 +1103,11 @@ object TextQueries {
        |SELECT doc_id, $sig AS simhash FROM sums ORDER BY doc_id""".stripMargin
   }
 
+  private final val PackBudget = 512
+  private final val PackShardSize = 1000L
   /** Sequence-packing index: assign each document a (bin, offset) position
     * in the concatenation of all token streams in doc_id order, bins of
-    * `budget` tokens — the index a packed-pretraining dataset uses to
+    * `PackBudget` tokens — the index a packed-pretraining dataset uses to
     * slice batches out of the corpus.
     *
     * The global running sum is computed WITHOUT a global sort/single
@@ -1109,12 +1117,11 @@ object TextQueries {
     * row per shard) get their own exclusive prefix and broadcast back as
     * each shard's base offset. Arithmetic is all-integer, so the result
     * is bit-identical to the single-window form and to the SQL oracle. */
-  def packTokens(s: SparkSession, dir: String,
-      budget: Int = 512, shardSize: Long = 1000L): DataFrame = {
+  def packTokens(s: SparkSession, dir: String): DataFrame = {
     val t = Tables.documents(s, dir)
       .select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"),
-        (col("doc_id") / shardSize).cast("long").as("shard"))
+        (col("doc_id") / PackShardSize).cast("long").as("shard"))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -1131,8 +1138,8 @@ object TextQueries {
       // `div`, not `/`: Column `/` divides in DOUBLE and truncates back,
       // exact only below 2^53 — integer division holds at any prefix sum
       .select(col("doc_id"), col("n_tokens"),
-        expr(s"__pre div $budget").as("bin"),
-        (col("__pre") % budget).as("off"))
+        expr(s"__pre div $PackBudget").as("bin"),
+        (col("__pre") % PackBudget).as("off"))
       .orderBy(col("doc_id"))
   }
 
@@ -1215,17 +1222,24 @@ object TextQueries {
     * sampling pass is a narrow scan filter. All rate arithmetic is the
     * same IEEE expression tree in both engines, floored to an integer
     * threshold before the comparison. */
-  def tokenMix(s: SparkSession, dir: String, budgetFrac: Double = 0.5): DataFrame = {
-    // tokenize once: d feeds both the rate subtree and the sampling join —
-    // without the checkpoint the normalize+split scan runs twice
+  def tokenMix(s: SparkSession, dir: String): DataFrame =
+    budgetMix(s, dir, expr("cast(substring(source, 4) as int)") + 1)
+
+  private final val MixBudgetFrac = 0.5
+  /** The budget-mix pass q113 and q180 share: per-doc token counts (pinned
+    * — they feed both the rate subtree and the sampling join), per-source
+    * totals `toks_s` with the source weight `w` (a column over `source`
+    * and `toks_s`), keep rate min(1, MixBudgetFrac·total·(w/Σw) / toks_s)
+    * per source, and the md5-bucket keep rule. */
+  private def budgetMix(s: SparkSession, dir: String, weight: Column): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("source"),
       TextFunctions.tokenCount(col("text")).cast("long").as("nt"))
       .ckpt
     val bySrc = d.groupBy(col("source")).agg(sum(col("nt")).as("toks_s"))
-      .withColumn("w", expr("cast(substring(source, 4) as int)") + 1)
+      .withColumn("w", weight)
     val tot = bySrc.agg(sum(col("toks_s")).as("total"), sum(col("w")).as("sumw"))
     val rate = least(lit(1.0),
-      (lit(budgetFrac) * col("total") *
+      (lit(MixBudgetFrac) * col("total") *
         (col("w").cast("double") / col("sumw").cast("double"))) /
         col("toks_s").cast("double"))
     val rates = bySrc.crossJoin(broadcast(tot))
@@ -1252,10 +1266,11 @@ object TextQueries {
         nullif(col("n_tokens"), lit(0)).cast("double"), 4))
       .orderBy(col("doc_id"))
 
+  private final val VocabTopK = 100
   /** Vocabulary building: global token frequencies, top-100 (the vocab /
     * BPE-prep pass). Explode + hash aggregate with map-side partial
     * counts; top-k is a k-row merge, not a global sort. */
-  def vocabTopK(s: SparkSession, dir: String, k: Int = 100): DataFrame =
+  def vocabTopK(s: SparkSession, dir: String, k: Int = VocabTopK): DataFrame =
     Tables.documents(s, dir)
       .select(explode(TextFunctions.tokens(col("text"))).as("token"))
       .groupBy(col("token"))
@@ -1273,6 +1288,7 @@ object TextQueries {
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
 
+  private final val SpanDedupN = 5
   /** Cross-document duplicated-SPAN dedup stats — the line-level dedup pass
     * of web-corpus curation (RefinedWeb drops duplicated lines; C4 drops
     * repeated three-sentence spans). This corpus has no newlines, so
@@ -1298,7 +1314,7 @@ object TextQueries {
     * (xxhash64 remains the right trade when an approximate dup_frac is
     * acceptable). The final join prunes to dup grams only (a small
     * fraction of all grams in real corpora). */
-  def spanDedupStats(s: SparkSession, dir: String, n: Int = 5): DataFrame = {
+  def spanDedupStats(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
     // spans feeds BOTH the dup-gram aggregate and the coverage join —
@@ -1307,11 +1323,11 @@ object TextQueries {
     // position, the frame a cluster pipeline would persist to storage
     // between the two stages.
     val spans = toks
-      .filter(size(col("toks")) >= n)
+      .filter(size(col("toks")) >= SpanDedupN)
       .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), size(col("toks")) - (n - 1), lit(1))).as("i"))
+        explode(sequence(lit(1), size(col("toks")) - (SpanDedupN - 1), lit(1))).as("i"))
       .select(col("doc_id"), col("i"),
-        unhex(md5(concat_ws(" ", slice(col("toks"), col("i"), lit(n))))).as("gh"))
+        unhex(md5(concat_ws(" ", slice(col("toks"), col("i"), lit(SpanDedupN))))).as("gh"))
       .ckpt
     // "in ≥2 docs" as min(doc)≠max(doc): ONE plain aggregate with map-side
     // partials, instead of count_distinct's two-round expansion (measured
@@ -1332,7 +1348,7 @@ object TextQueries {
       .partitionBy(col("doc_id")).orderBy(col("i"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val covered = spans.join(dupGrams, Seq("gh"))
-      .select(col("doc_id"), col("i"), (col("i") + (n - 1)).as("e"))
+      .select(col("doc_id"), col("i"), (col("i") + (SpanDedupN - 1)).as("e"))
       .withColumn("pmax", max(col("e")).over(wPrev))
       .select(col("doc_id"), greatest(lit(0L),
         col("e") - greatest(coalesce(col("pmax"), col("i") - 1), col("i") - 1)).as("cov"))
@@ -1346,6 +1362,8 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
+  private final val BoilerplateW = 3
+  private final val BoilerplateMinDf = 3
   /** Boilerplate-segment removal (q151) — the C4/CCNet "line appears in
     * ≥N documents" cleaning rule (C4 drops any line occurring ≥3 times in
     * the corpus) re-expressed over fixed-width token segments, since this
@@ -1371,14 +1389,13 @@ object TextQueries {
     * the df aggregate would key on a 16-byte digest like q94 and persist
     * the boilerplate set as a table; the string key here keeps the oracle
     * value-checkable. */
-  def boilerplateStats(s: SparkSession, dir: String, w: Int = 3,
-      minDf: Int = 3): DataFrame =
-    boilerplateOf(Tables.documents(s, dir), w, minDf)
+  def boilerplateStats(s: SparkSession, dir: String): DataFrame =
+    boilerplateOf(Tables.documents(s, dir), BoilerplateW, BoilerplateMinDf)
 
   /** The boilerplate pass over ANY (doc_id, text) frame (EdgeCaseSpec
     * drives the all-boiler and no-boiler corners through this). */
-  private[graft] def boilerplateOf(docs: DataFrame, w: Int = 3,
-      minDf: Int = 3): DataFrame = {
+  private[graft] def boilerplateOf(docs: DataFrame, w: Int,
+      minDf: Int): DataFrame = {
     val segs = docs
       .withColumn("toks", TextFunctions.tokens(col("text")))
       .filter(size(col("toks")) > 0)
@@ -1431,6 +1448,7 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
+  private final val TfidfK = 5
   /** TF-IDF top-k terms per document (tf × ln((N+1)/(df+1)), the
     * +1-smoothed idf): the keyword-extraction / relevance-weighting pass.
     * Ranking compares the 4dp-ROUNDED score (then token) so the rank is
@@ -1445,7 +1463,7 @@ object TextQueries {
     * order (-score, token) = ORDER BY score DESC, token — total because
     * token is unique within a doc, so the ranking is deterministic (score
     * ≥ 0, so the negation never produces a mixed ±0.0). */
-  def tfidfTopTerms(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def tfidfTopTerms(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     // tf feeds BOTH the df aggregate and the scoring join — materialize
@@ -1464,13 +1482,14 @@ object TextQueries {
       .groupBy(col("doc_id"))
       .agg(graft.functions.TopKAgg.topK(
         struct((-col("score")).as("neg"), col("token").as("token"),
-          col("tf").as("tf"), col("score").as("score")), k).as("tk"))
+          col("tf").as("tf"), col("score").as("score")), TfidfK).as("tk"))
       .select(col("doc_id"), posexplode(col("tk")))
       .select(col("doc_id"), col("col.token").as("token"), col("col.tf").as("tf"),
         col("col.score").as("score"), (col("pos") + 1).cast("int").as("rn"))
       .orderBy(col("doc_id"), col("rn"))
   }
 
+  private final val MinhashEstN = 3
   /** MinHash accuracy harness: for every pair in the q35/q69 subset, the
     * 8-permutation md5-minhash AGREEMENT estimate of 3-gram-shingle
     * Jaccard next to the EXACT shingle Jaccard — the calibration query a
@@ -1481,9 +1500,9 @@ object TextQueries {
     * what the calibration must surface. The all-pairs cross product runs
     * over the COUNT-CAPPED `auditSample` (never a rate-based subset), so
     * the pair count stays O(n²) for fixed n at any corpus size. */
-  def minhashEstVsExact(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
+  def minhashEstVsExact(s: SparkSession, dir: String): DataFrame = {
     val subset = auditSample(Tables.documents(s, dir))
-    val sh = shingleRows(subset, n).distinct()
+    val sh = shingleRows(subset, MinhashEstN).distinct()
     val hashed = sh.select(
       col("doc_id") +: (0 to 7).map { j =>
         val seedHash = md5(concat(lit((j / 4).toString), lit("|"), col("g")))
@@ -1752,6 +1771,8 @@ object TextQueries {
       dir: String): DataFrame =
     dedupComponentsM(s, dir)
 
+  private final val EpochShuffleEpochs = 2
+  private final val EpochShuffleShards = 8
   /** Deterministic multi-epoch shuffle order (q166) — the data-loader
     * contract of reproducible training: each epoch permutes the corpus
     * differently, but identically on every engine, run and cluster
@@ -1765,16 +1786,15 @@ object TextQueries {
     * the shard count is the scale knob (hundreds of shards on a real
     * cluster keeps every partition writer-file-sized, and the rank IS
     * the write-time sort the loader needs anyway). */
-  def epochShuffle(s: SparkSession, dir: String, epochs: Int = 2,
-      nShards: Int = 8): DataFrame = {
+  def epochShuffle(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(s, dir).select(col("doc_id"))
       .crossJoin(broadcast(
-        s.range(0, epochs).select(col("id").cast("int").as("epoch"))))
+        s.range(0, EpochShuffleEpochs).select(col("id").cast("int").as("epoch"))))
       .withColumn("h", md5(concat(col("doc_id").cast("string"),
         lit(":"), col("epoch").cast("string"))))
       .withColumn("shard",
-        (conv(substring(col("h"), 1, 2), 16, 10).cast("int") % nShards))
+        (conv(substring(col("h"), 1, 2), 16, 10).cast("int") % EpochShuffleShards))
     val w = Window.partitionBy(col("epoch"), col("shard"))
       .orderBy(col("h"), col("doc_id"))
     d.withColumn("pos", row_number().over(w))
@@ -1782,15 +1802,15 @@ object TextQueries {
       .orderBy(col("epoch"), col("shard"), col("pos"))
   }
 
-  private def epochShuffleOracle(epochs: Int = 2, nShards: Int = 8): String =
+  private def epochShuffleOracle: String =
     s"""WITH d AS (
        |  SELECT doc_id, e.epoch,
        |         md5(CAST(doc_id AS VARCHAR) || ':' ||
        |             CAST(e.epoch AS VARCHAR)) AS h
        |  FROM documents,
-       |       (SELECT CAST(unnest(range(0, $epochs)) AS INT) AS epoch) e),
+       |       (SELECT CAST(unnest(range(0, $EpochShuffleEpochs)) AS INT) AS epoch) e),
        |s AS (SELECT doc_id, epoch, h,
-       |             CAST(('0x' || substr(h, 1, 2))::INT % $nShards AS INT)
+       |             CAST(('0x' || substr(h, 1, 2))::INT % $EpochShuffleShards AS INT)
        |               AS shard
        |      FROM d)
        |SELECT doc_id, epoch, shard,
@@ -2083,6 +2103,8 @@ object TextQueries {
        |       JOIN ppl p USING (doc_id)) t
        |ORDER BY doc_id""".stripMargin
 
+  private final val BigramTopContext = 20
+  private final val BigramTopK = 3
   /** Distributed bigram LM estimation (q165) — count-based conditional
     * next-token distributions, the classic corpus-scale LM job (and the
     * n>1 generalization of q122's unigram LM): c(w₁,w₂) and c(w₁) from
@@ -2095,8 +2117,8 @@ object TextQueries {
     * second, vocabulary-sized aggregate; the top-context filter
     * broadcasts; final ranking windows run over topContext·vocab-slice
     * rows, never the corpus. */
-  def bigramLm(s: SparkSession, dir: String, topContext: Int = 20,
-      topK: Int = 3): DataFrame = {
+  def bigramLm(s: SparkSession, dir: String, topContext: Int = BigramTopContext,
+      topK: Int = BigramTopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, dir)
       .select(TextFunctions.tokens(col("text")).as("toks"))
@@ -2119,14 +2141,14 @@ object TextQueries {
       .orderBy(col("w1"), col("rn"))
   }
 
-  private def bigramLmOracle(topContext: Int = 20, topK: Int = 3): String =
+  private def bigramLmOracle: String =
     s"""WITH tok AS (SELECT doc_id, $toksSql AS t FROM documents
        |             WHERE len($toksSql) >= 2),
        |bi AS (SELECT t[i] AS w1, t[i + 1] AS w2, COUNT(*) AS cnt
        |       FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
        |       GROUP BY 1, 2),
        |c1 AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS c1 FROM bi GROUP BY w1),
-       |ctx AS (SELECT w1, c1 FROM c1 ORDER BY c1 DESC, w1 LIMIT $topContext),
+       |ctx AS (SELECT w1, c1 FROM c1 ORDER BY c1 DESC, w1 LIMIT $BigramTopContext),
        |ranked AS (
        |  SELECT b.w1, ctx.c1, b.w2, CAST(b.cnt AS BIGINT) AS cnt,
        |         CAST(b.cnt * 10000 // ctx.c1 AS BIGINT) AS prob_bp,
@@ -2134,7 +2156,7 @@ object TextQueries {
        |                ORDER BY b.cnt DESC, b.w2) AS INT) AS rn
        |  FROM bi b JOIN ctx USING (w1))
        |SELECT w1, c1, w2, cnt, prob_bp, rn FROM ranked
-       |WHERE rn <= $topK
+       |WHERE rn <= $BigramTopK
        |ORDER BY w1, rn""".stripMargin
 
   /** Soft-dedup sampling weights (q164) — instead of DROPPING near-dups
@@ -2228,6 +2250,7 @@ object TextQueries {
        |     JOIN best b USING (component)
        |ORDER BY c.doc_id""".stripMargin
 
+  private final val VerifiedMinJ = 0.5
   /** Candidate-verified near-duplicate edges (the q131 stages 1–2,
     * shared with the q145 leakage audit): LSH candidates from the banded
     * minhash (bucket join, never all-pairs), then exact shingle-Jaccard
@@ -2235,8 +2258,7 @@ object TextQueries {
     * against the shingle table. Returns (id1 < id2) verified pairs.
     * `sh` must be the (doc_id, g) DISTINCT shingle frame, checkpointed
     * by the caller (three consumers here). */
-  private def verifiedNearDupEdges(s: SparkSession, dir: String,
-      minJ: Double = 0.5): DataFrame = {
+  private def verifiedNearDupEdges(s: SparkSession, dir: String): DataFrame = {
     val sh = gram3M(s, dir)
     val cand = minhashCandidatePairs(s, dir).select(col("id1"), col("id2"))
     val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -2248,7 +2270,7 @@ object TextQueries {
       .join(sz.select(col("doc_id").as("id1"), col("n").as("n1")), Seq("id1"))
       .join(sz.select(col("doc_id").as("id2"), col("n").as("n2")), Seq("id2"))
       .filter(round(col("i").cast("double") /
-        (col("n1") + col("n2") - col("i")).cast("double"), 4) >= minJ)
+        (col("n1") + col("n2") - col("i")).cast("double"), 4) >= VerifiedMinJ)
       .select(col("id1"), col("id2"))
   }
 
@@ -2942,6 +2964,10 @@ object TextQueries {
       .orderBy(col("source"))
   }
 
+  /** The BPE merge rounds q141, q142 and q209 train (their oracles unroll
+    * as many) over q72's top-`VocabTopK` vocabulary. */
+  private final val BpeRounds = 4
+
   /** Distributed BPE merge training end to end (q141): four merge rounds
     * over the top-100 corpus vocabulary, output as the final symbol
     * representations of the 30 most frequent words — any divergence in
@@ -2950,13 +2976,13 @@ object TextQueries {
     * unrolls all four rounds in SQL, scalar-subquery argmax per round,
     * with the same two-pass literal fuse. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val vocab = vocabTopK(s, dir, 100).withColumnRenamed("token", "word")
-    val (_, reps) = Bpe.train(vocab, rounds = 4)
+    val vocab = vocabTopK(s, dir).withColumnRenamed("token", "word")
+    val (_, reps) = Bpe.train(vocab, rounds = BpeRounds)
     reps.orderBy(col("freq").desc, col("word")).limit(30)
       .select(col("word"), col("freq"), col("rep"))
   }
 
-  private def bpeOracleSql(rounds: Int = 4): String = {
+  private def bpeOracleSql: String = {
     def pairs(reps: String, out: String) =
       s"""$out AS MATERIALIZED (
          |  SELECT syms[i] AS l, syms[i + 1] AS r, SUM(freq) AS w
@@ -2973,7 +2999,7 @@ object TextQueries {
       s"""$out AS MATERIALIZED (
          |  SELECT word, freq, trim(${fused(b, fused(b, "rep"))}) AS rep
          |  FROM $prev)""".stripMargin
-    val roundsSql = (1 to rounds).map { k =>
+    val roundsSql = (1 to BpeRounds).map { k =>
       Seq(pairs(s"reps${k - 1}", s"p$k"), best(s"p$k", s"b$k"),
         reps(s"reps${k - 1}", s"b$k", s"reps$k")).mkString(",\n")
     }.mkString(",\n")
@@ -2987,7 +3013,7 @@ object TextQueries {
        |         trim(regexp_replace(word, '(.)', '\\1 ', 'g')) || ' </w>' AS rep
        |  FROM vocab),
        |$roundsSql
-       |SELECT word, freq, rep FROM reps$rounds
+       |SELECT word, freq, rep FROM reps$BpeRounds
        |ORDER BY freq DESC, word
        |LIMIT 30""".stripMargin
   }
@@ -3002,7 +3028,7 @@ object TextQueries {
       .select(explode(TextFunctions.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     val (merges, _) = Bpe.train(
-      vocabTopK(s, dir, 100).withColumnRenamed("token", "word"), rounds = 4)
+      vocabTopK(s, dir).withColumnRenamed("token", "word"), rounds = BpeRounds)
     Bpe.encode(vocabAll, merges)
       .select(col("freq"), explode(split(col("rep"), " ")).as("subword"))
       .groupBy(col("subword")).agg(sum(col("freq")).as("occurrences"))
@@ -3010,10 +3036,10 @@ object TextQueries {
       .limit(50)
   }
 
-  private def bpeEncodeOracleSql(rounds: Int = 4): String =
-    s"""${bpeApplyCtes(rounds)}
+  private def bpeEncodeOracleSql: String =
+    s"""${bpeApplyCtes(BpeRounds)}
        |SELECT subword, CAST(SUM(freq) AS BIGINT) AS occurrences
-       |FROM (SELECT freq, unnest(string_split(rep, ' ')) AS subword FROM ap$rounds)
+       |FROM (SELECT freq, unnest(string_split(rep, ' ')) AS subword FROM ap$BpeRounds)
        |GROUP BY subword
        |ORDER BY occurrences DESC, subword
        |LIMIT 50""".stripMargin
@@ -3067,8 +3093,9 @@ object TextQueries {
        |$applySql""".stripMargin
   }
 
+  private final val SourceCap = 15
   /** Per-source document caps (q207) — the Common-Crawl-style per-domain
-    * cap (keep at most `cap` documents per source, chosen by the
+    * cap (keep at most `SourceCap` documents per source, chosen by the
     * deterministic (md5(doc_id), doc_id) order every sampled subset in
     * this suite uses) with full before/after token accounting, so the
     * mixing report shows exactly what the cap cost each source.
@@ -3080,7 +3107,7 @@ object TextQueries {
     * map-side struct comparison and ONE source-keyed aggregate builds
     * the report. Sources below the cap keep everything (their threshold
     * is their max key). */
-  def sourceCaps(s: SparkSession, dir: String, cap: Int = 15): DataFrame = {
+  def sourceCaps(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -3089,9 +3116,9 @@ object TextQueries {
     val th = docs
       .groupBy(col("source"))
       .agg(graft.functions.TopKAgg.topK(
-        struct(col("mk"), col("doc_id")), cap).as("tk"))
+        struct(col("mk"), col("doc_id")), SourceCap).as("tk"))
       .select(col("source"),
-        element_at(col("tk"), least(lit(cap), size(col("tk")))).as("th"))
+        element_at(col("tk"), least(lit(SourceCap), size(col("tk")))).as("th"))
     docs.join(broadcast(th), Seq("source"))
       .withColumn("kept",
         when(struct(col("mk"), col("doc_id")) <= col("th"), 1L).otherwise(0L))
@@ -3103,7 +3130,7 @@ object TextQueries {
       .orderBy(col("source"))
   }
 
-  private def sourceCapsOracle(cap: Int = 15): String =
+  private def sourceCapsOracle: String =
     s"""WITH d AS (
        |  SELECT doc_id, source,
        |         CASE WHEN length($norm) = 0 THEN 0
@@ -3115,10 +3142,10 @@ object TextQueries {
        |SELECT source, n_docs, n_kept, tokens_total, tokens_kept,
        |       CAST(n_kept * 10000 // n_docs AS BIGINT) AS kept_bp
        |FROM (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |             CAST(SUM(CASE WHEN rk <= $cap THEN 1 ELSE 0 END) AS BIGINT)
+       |             CAST(SUM(CASE WHEN rk <= $SourceCap THEN 1 ELSE 0 END) AS BIGINT)
        |               AS n_kept,
        |             CAST(SUM(n_tokens) AS BIGINT) AS tokens_total,
-       |             CAST(SUM(CASE WHEN rk <= $cap THEN n_tokens ELSE 0 END)
+       |             CAST(SUM(CASE WHEN rk <= $SourceCap THEN n_tokens ELSE 0 END)
        |                  AS BIGINT) AS tokens_kept
        |      FROM r GROUP BY source) t
        |ORDER BY source""".stripMargin
@@ -3204,7 +3231,7 @@ object TextQueries {
       .ckpt // consumers: corpus vocabulary + lang rollup
     val vocabAll = tokLang.groupBy(col("word")).agg(sum(col("cnt")).as("freq"))
     val (merges, _) = Bpe.train(
-      vocabTopK(s, dir, 100).withColumnRenamed("token", "word"), rounds = 4)
+      vocabTopK(s, dir).withColumnRenamed("token", "word"), rounds = BpeRounds)
     val enc = Bpe.encode(vocabAll, merges)
       .select(col("word"), size(split(col("rep"), " ")).cast("long").as("n_sub"),
         length(col("word")).cast("long").as("n_chr"))
@@ -3326,6 +3353,7 @@ object TextQueries {
        |       CAST(sum_p // n_transitions AS BIGINT) AS mean_p_bp
        |FROM agg""".stripMargin
 
+  private final val IncrementalComponentsK = 20
   /** Incremental connected-components maintenance (q221): near-dup
     * clusters for the 90% base corpus (the q126 train split), then the
     * remaining 10% "new crawl" merges in WITHOUT re-clustering the base —
@@ -3344,8 +3372,7 @@ object TextQueries {
     * contraction itself is two broadcast-sized label joins; the second
     * CC runs over a graph no larger than (|delta edges| + touched base
     * components). */
-  def incrementalComponents(s: SparkSession, dir: String,
-      k: Int = 20): DataFrame = {
+  def incrementalComponents(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val ids = docs.select(col("doc_id"),
       (splitOf(col("doc_id")) === "train").cast("int").as("is_base"))
@@ -3383,14 +3410,14 @@ object TextQueries {
     lab1.join(c2, Seq("l1"))
       .groupBy(col("component")).agg(count(lit(1)).as("csize"))
       .filter(col("csize") >= 2)
-      .orderBy(col("csize").desc, col("component")).limit(k)
+      .orderBy(col("csize").desc, col("component")).limit(IncrementalComponentsK)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("csize").desc, col("component"))))
       .orderBy(col("rn"))
   }
 
-  private def incrementalComponentsOracle(k: Int = 20): String =
+  private def incrementalComponentsOracle: String =
     s"""WITH RECURSIVE $verifiedEdgeCtes,
        |e AS (SELECT id1 AS src, id2 AS dst FROM e0
        |      UNION SELECT id2, id1 FROM e0),
@@ -3405,7 +3432,7 @@ object TextQueries {
        |         CAST(ROW_NUMBER() OVER (ORDER BY csize DESC, component)
        |              AS INT) AS rn
        |  FROM cs WHERE csize >= 2) t
-       |WHERE rn <= $k
+       |WHERE rn <= $IncrementalComponentsK
        |ORDER BY rn""".stripMargin
 
   /** Classifier calibration curve (q222): the q149 hashed classifier's
@@ -3484,15 +3511,15 @@ object TextQueries {
        |GROUP BY decile
        |ORDER BY decile""".stripMargin
 
-  private def fertilityOracleSql(rounds: Int = 4): String =
-    s"""${bpeApplyCtes(rounds)},
+  private def fertilityOracleSql: String =
+    s"""${bpeApplyCtes(BpeRounds)},
        |tl AS (SELECT lang, tok AS word, COUNT(*) AS cnt
        |       FROM (SELECT lang, unnest($toksSql) AS tok FROM documents
        |             WHERE length($norm) > 0)
        |       GROUP BY 1, 2),
        |enc AS (SELECT word, CAST(len(string_split(rep, ' ')) AS BIGINT)
        |          AS n_sub, CAST(length(word) AS BIGINT) AS n_chr
-       |        FROM ap$rounds)
+       |        FROM ap$BpeRounds)
        |SELECT lang, n_words, n_subwords,
        |       CAST(n_subwords * 10000 // n_words AS BIGINT) AS fertility_bp,
        |       CAST(n_chars * 10000 // n_subwords AS BIGINT)
@@ -3595,6 +3622,7 @@ object TextQueries {
       .orderBy(col("id1"), col("id2"))
   }
 
+  private final val WeightedSampleK = 200
   /** Weighted sampling WITHOUT replacement (q178) — the Efraimidis–
     * Spirakis A-Res scheme: each document draws key = ln(uᵢ)/wᵢ from a
     * deterministic per-doc uniform uᵢ ∈ (0,1] (md5-derived, seed-free) and
@@ -3611,7 +3639,7 @@ object TextQueries {
     * a global weighted draw (a corpus-wide sort would shuffle everything;
     * per-partition quotas would bias the draw). The rank window then runs
     * over k rows, never the corpus. */
-  def weightedSample(s: SparkSession, dir: String, k: Int = 200): DataFrame = {
+  def weightedSample(s: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         greatest(col("n_chars"), lit(1L)).as("weight"),
@@ -3621,7 +3649,7 @@ object TextQueries {
       .withColumn("es_key", log(col("u")) / col("weight"))
     keyed
       .orderBy(col("es_key").desc, col("doc_id"))
-      .limit(k)
+      .limit(WeightedSampleK)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("es_key").desc, col("doc_id"))))
@@ -3630,7 +3658,7 @@ object TextQueries {
       .orderBy(col("rn"))
   }
 
-  private def weightedSampleOracle(k: Int = 200): String =
+  private def weightedSampleOracle: String =
     s"""WITH keyed AS (
        |  SELECT doc_id, source, greatest(n_chars, 1) AS weight,
        |         ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
@@ -3642,7 +3670,7 @@ object TextQueries {
        |      FROM keyed)
        |SELECT rn, doc_id, source, CAST(weight AS BIGINT) AS weight,
        |       round(es_key, 6) AS es_key
-       |FROM r WHERE rn <= $k
+       |FROM r WHERE rn <= $WeightedSampleK
        |ORDER BY rn""".stripMargin
 
   /** Temperature-scaled source rebalancing (q180) — the multilingual-
@@ -3658,32 +3686,10 @@ object TextQueries {
     * Scale shape: per-source token totals are one map-side-combined
     * aggregate; the share table is source-cardinality-sized and
     * BROADCASTS back onto the scan; selection is a map-side filter. */
-  def temperatureMix(s: SparkSession, dir: String,
-      budgetFrac: Double = 0.5): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("nt"))
-      .ckpt
-    val bySrc = d.groupBy(col("source")).agg(sum(col("nt")).as("toks_s"))
-    val tot = bySrc.agg(sum(col("toks_s")).as("total"),
-      sum(sqrt(col("toks_s").cast("double"))).as("sum_sq"))
-    val rate = least(lit(1.0),
-      (lit(budgetFrac) * col("total") *
-        (sqrt(col("toks_s").cast("double")) / col("sum_sq"))) /
-        col("toks_s").cast("double"))
-    val rates = bySrc.crossJoin(broadcast(tot))
-      .withColumn("thr", floor(rate * 65536).cast("int"))
-      .select(col("source"), col("thr"))
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-      .cast("int")
-    d.join(broadcast(rates), Seq("source"))
-      .filter(bucket < col("thr"))
-      .groupBy(col("source"), col("thr"))
-      .agg(count(lit(1)).as("docs_kept"), sum(col("nt")).as("tokens_kept"))
-      .orderBy(col("source"))
-  }
+  def temperatureMix(s: SparkSession, dir: String): DataFrame =
+    budgetMix(s, dir, sqrt(col("toks_s").cast("double")))
 
-  private def temperatureMixOracle(budgetFrac: Double = 0.5): String =
+  private def temperatureMixOracle: String =
     s"""WITH d AS (SELECT doc_id, source,
        |                  CAST(CASE WHEN length($norm) = 0 THEN 0
        |                            ELSE len($toksSql) END AS BIGINT) AS nt
@@ -3693,7 +3699,7 @@ object TextQueries {
        |        AS sum_sq FROM b),
        |rates AS (SELECT b.source,
        |                 CAST(floor(least(1.0,
-       |                   ($budgetFrac * t.total *
+       |                   ($MixBudgetFrac * t.total *
        |                    (sqrt(CAST(b.toks_s AS DOUBLE)) / t.sum_sq)) /
        |                   CAST(b.toks_s AS DOUBLE)) * 65536) AS INT) AS thr
        |          FROM b, t)
@@ -3704,6 +3710,8 @@ object TextQueries {
        |GROUP BY d.source, r.thr
        |ORDER BY d.source""".stripMargin
 
+  private final val PmiMinCount = 5
+  private final val PmiK = 30
   /** PMI collocations (q185) — pointwise mutual information over adjacent
     * token pairs (ln P(ab)/(P(a)P(b))), the corpus-linguistics ranking
     * that surfaces COLLOCATIONS (pairs gluing together far beyond chance)
@@ -3719,8 +3727,7 @@ object TextQueries {
     * Scale shape: bigram + unigram counts are two map-side-combined
     * aggregates; the unigram table is vocabulary-sized and BROADCASTS
     * onto bigram rows twice; top-k is TakeOrderedAndProject. */
-  def pmiCollocations(s: SparkSession, dir: String, minCount: Int = 5,
-      k: Int = 30): DataFrame = {
+  def pmiCollocations(s: SparkSession, dir: String): DataFrame = {
     val tokall = Tables.documents(s, dir)
       .select(TextFunctions.tokens(col("text")).as("toks"))
       .ckpt // consumers: unigrams, bigrams
@@ -3733,7 +3740,7 @@ object TextQueries {
         .as(Seq("i", "w1")), col("toks"))
       .select(col("w1"), element_at(col("toks"), col("i") + 2).as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
+      .filter(col("cnt") >= PmiMinCount)
       .ckpt
     val nb = bi.agg(sum(col("cnt")).as("nb"))
     val scored = bi
@@ -3745,7 +3752,7 @@ object TextQueries {
           (col("ca").cast("double") * col("cb") * col("nb")))
     scored
       .orderBy(col("ratio").desc, col("w1"), col("w2"))
-      .limit(k)
+      .limit(PmiK)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("ratio").desc, col("w1"), col("w2"))))
@@ -3754,7 +3761,7 @@ object TextQueries {
       .orderBy(col("rn"))
   }
 
-  private def pmiOracle(minCount: Int = 5, k: Int = 30): String =
+  private def pmiOracle: String =
     s"""WITH tokall AS (SELECT $toksSql AS t FROM documents),
        |uni AS (SELECT tok AS w, COUNT(*) AS c
        |        FROM (SELECT unnest(t) AS tok FROM tokall) u GROUP BY 1),
@@ -3762,7 +3769,7 @@ object TextQueries {
        |bi AS (SELECT t[i] AS w1, t[i + 1] AS w2, COUNT(*) AS cnt
        |       FROM (SELECT t FROM tokall WHERE len(t) >= 2) tok2,
        |            UNNEST(generate_series(1, len(t) - 1)) AS u(i)
-       |       GROUP BY 1, 2 HAVING COUNT(*) >= $minCount),
+       |       GROUP BY 1, 2 HAVING COUNT(*) >= $PmiMinCount),
        |nb AS (SELECT CAST(SUM(cnt) AS BIGINT) AS nb FROM bi),
        |sc AS (SELECT b.w1, b.w2, b.cnt,
        |              (CAST(b.cnt AS DOUBLE) * nu.nu * nu.nu) /
@@ -3774,7 +3781,7 @@ object TextQueries {
        |             CAST(ROW_NUMBER() OVER (ORDER BY ratio DESC, w1, w2)
        |                  AS INT) AS rn
        |      FROM sc)
-       |SELECT w1, w2, cnt, pmi, rn FROM r WHERE rn <= $k
+       |SELECT w1, w2, cnt, pmi, rn FROM r WHERE rn <= $PmiK
        |ORDER BY rn""".stripMargin
 
   /** q174 oracle: winnowing by explicit window enumeration — every gram
@@ -3865,11 +3872,11 @@ object TextQueries {
     Q("q174_winnow_candidates", (s, d) => winnowPairs(s, d),
       Some(winnowOracle)),
     Q("q178_weighted_sample", (s, d) => weightedSample(s, d),
-      Some(weightedSampleOracle())),
+      Some(weightedSampleOracle)),
     Q("q185_pmi_collocations", (s, d) => pmiCollocations(s, d),
-      Some(pmiOracle())),
+      Some(pmiOracle)),
     Q("q180_temperature_mix", (s, d) => temperatureMix(s, d),
-      Some(temperatureMixOracle())),
+      Some(temperatureMixOracle)),
     Q("q143_training_corpus", (s, d) => trainingCorpus(s, d), Some(
       s"""$curationFlagsCtes,
          |kept AS (
@@ -3901,20 +3908,20 @@ object TextQueries {
          |WHERE s.score >= t.thr
          |GROUP BY s.source
          |ORDER BY s.source""".stripMargin)),
-    Q("q142_bpe_encode", (s, d) => bpeEncode(s, d), Some(bpeEncodeOracleSql())),
+    Q("q142_bpe_encode", (s, d) => bpeEncode(s, d), Some(bpeEncodeOracleSql)),
     Q("q207_source_caps", (s, d) => sourceCaps(s, d),
-      Some(sourceCapsOracle())),
+      Some(sourceCapsOracle)),
     Q("q220_holdout_lm_eval", (s, d) => holdoutLmEval(s, d),
       Some(holdoutLmOracle)),
     Q("q221_incremental_components", (s, d) => incrementalComponents(s, d),
-      Some(incrementalComponentsOracle())),
+      Some(incrementalComponentsOracle)),
     Q("q222_calibration_curve", (s, d) => calibrationCurve(s, d),
       Some(calibrationOracle)),
     Q("q208_readability", (s, d) => readabilityHistogram(s, d),
       Some(readabilityOracle)),
     Q("q209_tokenizer_fertility", (s, d) => tokenizerFertility(s, d),
-      Some(fertilityOracleSql())),
-    Q("q141_bpe_train", (s, d) => bpeTrain(s, d), Some(bpeOracleSql())),
+      Some(fertilityOracleSql)),
+    Q("q141_bpe_train", (s, d) => bpeTrain(s, d), Some(bpeOracleSql)),
     Q("q139_quality_gate", (s, d) => qualityGate(s, d), Some(
       s"""WITH scored AS (
          |  SELECT doc_id, source,
@@ -4008,7 +4015,7 @@ object TextQueries {
          |            AND round(1.0 - d / CAST(tot3 AS DOUBLE), 4) <= 0.1 AS INT) AS keep
          |FROM bs JOIN ts ON bs.doc_id = ts.doc_id
          |ORDER BY doc_id""".stripMargin)),
-    Q("q245_doc_chunks", (s, d) => docChunks(s, d), Some(docChunksOracle())),
+    Q("q245_doc_chunks", (s, d) => docChunks(s, d), Some(docChunksOracle)),
     Q("q251_boilerplate_chunks", (s, d) => boilerplateChunks(s, d),
       Some(boilerplateChunksOracle)),
     Q("q30_dedup_exact", (s, d) => dedupExact(s, d), Some(
@@ -4145,7 +4152,7 @@ object TextQueries {
          |      WHERE length($norm) > 0)
          |GROUP BY tok
          |ORDER BY freq DESC, token
-         |LIMIT 100""".stripMargin)),
+         |LIMIT $VocabTopK""".stripMargin)),
     Q("q84_neardup_keepers", (s, d) => nearDupKeepers(s, d), Some(
       s"""WITH RECURSIVE d AS (SELECT doc_id, $norm AS nt FROM ($auditSampleSql) s0),
          |t AS (SELECT DISTINCT doc_id AS id, tok
@@ -4218,9 +4225,9 @@ object TextQueries {
       Some(scoreCalibrationOracle)),
     Q("q164_softdedup_weights", (s, d) => softDedupWeights(s, d),
       Some(softDedupOracle)),
-    Q("q165_bigram_lm", (s, d) => bigramLm(s, d), Some(bigramLmOracle())),
+    Q("q165_bigram_lm", (s, d) => bigramLm(s, d), Some(bigramLmOracle)),
     Q("q166_epoch_shuffle", (s, d) => epochShuffle(s, d),
-      Some(epochShuffleOracle())),
+      Some(epochShuffleOracle)),
     Q("q167_curation_decision", (s, d) => curationDecision(s, d),
       Some(curationDecisionOracle)),
     Q("q169_corpus_datasheet", (s, d) => corpusDatasheet(s, d),
@@ -4338,7 +4345,7 @@ object TextQueries {
          |t AS (SELECT SUM(toks_s) AS total, SUM(w) AS sumw FROM s),
          |r AS (SELECT source,
          |             CAST(floor(least(1.0,
-         |               (0.5 * total * (CAST(w AS DOUBLE) / CAST(sumw AS DOUBLE)))
+         |               ($MixBudgetFrac * total * (CAST(w AS DOUBLE) / CAST(sumw AS DOUBLE)))
          |               / CAST(toks_s AS DOUBLE)) * 65536) AS INT) AS thr
          |      FROM s, t),
          |k AS (SELECT d.source, r.thr, d.nt FROM d JOIN r USING (source)

@@ -20,12 +20,6 @@ object GraftBridge {
   val floatOrDoubleArray: AbstractType = types.TypeCollection(
     types.ArrayType(types.FloatType), types.ArrayType(types.DoubleType))
 
-  /** `Observation.getOrEmpty` is `private[sql]`: the non-blocking read
-    * (waits ≤100 ms, empty if the observed action hasn't reported) that
-    * lets callers bound their wait instead of `get()`'s block-forever
-    * (ADVICE r18: a lazy/failed ckpt path must error, not hang). */
-  def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
-
   /** `sessionUUID` is `private[sql]`: globally-unique session identity for
     * cache keying (identityHashCode collides across live/dead sessions). */
   def sessionUUID(spark: SparkSession): Option[String] = spark match {

@@ -384,8 +384,8 @@ class ExportDeploySpec extends AnyFunSuite {
     val rows = out.collect()
     assert(rows.nonEmpty)
     val nFiles = rows.head.getAs[Long]("n_files")
-    val sf = "sf0_001"
-    val deployed = Deploy.outputFiles(s"/tmp/graft_gate/$sf/export_capstone/deploy")
+    val root = graft.etl.SheetStage.dirFor(dir, "export_capstone")
+    val deployed = Deploy.outputFiles(s"$root/deploy")
     assert(deployed.size.toLong == nFiles, s"deployed=${deployed.size}")
     // each deployed file: header + ≤100 data rows; totals match the output
     val counts = deployed.map(f => Files.readAllLines(f).size() - 1)
@@ -393,7 +393,7 @@ class ExportDeploySpec extends AnyFunSuite {
     assert(counts.sum == rows.length)
     // the export dir was cleaned up after a successful deploy
     assert(Files.exists(
-      Paths.get(s"/tmp/graft_gate/$sf/export_capstone/orders-feed.zip")))
+      Paths.get(s"$root/orders-feed.zip")))
     // one queued completion email per resolved recipient, body = zip + files
     val q = graft.etl.ExportCapstone.completionQueue.queued
     assert(!q.isEmpty)

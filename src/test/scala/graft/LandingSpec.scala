@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Landed snapshots (q260's bucketed customer table, q269/q270's SCD2
-  * dimension), the SCD2 fresh-key offset and FileGate's scratch layouts
-  * (q240's bucketed tables, q244's compacted files) belong to ONE source
+  * dimension), the SCD2 fresh-key offset, FileGate's scratch layouts
+  * (q240's bucketed tables, q244's compacted files) and ExportCapstone's
+  * out/deploy/zip paths belong to ONE source
   * dir: a second dir with the same basename in the same session must
   * land and read its own data, never the first dir's. */
 class LandingSpec extends AnyFunSuite {
@@ -85,6 +86,43 @@ class LandingSpec extends AnyFunSuite {
       val key = etl.SheetStage.sourceKey(b)
       Seq("graft_li_bucketed", "graft_ord_bucketed")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t}_$key"))
+      Seq(new java.io.File(s"/tmp/graft_gate/$key"), root)
+        .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    }
+  }
+
+  test("ExportCapstone's out, deploy and zip paths are keyed by the " +
+      "canonical source dir") {
+    import scala.jdk.CollectionConverters._
+    val a = TestSpark.sfDir
+    // a second dir with the SAME basename holding the even orders only
+    val root = java.nio.file.Files.createTempDirectory("graft_export_key").toFile
+    val b = new java.io.File(root, new java.io.File(a).getName).getPath
+    def copy(t: String, keep: org.apache.spark.sql.Column): Unit =
+      spark.read.parquet(s"$a/$t.parquet").filter(keep)
+        .write.parquet(s"$b/$t.parquet")
+    /** Order keys of the files the capstone deployed for `d`. */
+    def deployedKeys(d: String): Set[Long] =
+      etl.Deploy.outputFiles(etl.SheetStage.dirFor(d, "export_capstone") + "/deploy")
+        .flatMap { f =>
+          val lines = java.nio.file.Files.readAllLines(f).asScala.toSeq
+          val at = lines.head.split(',').indexOf("o_orderkey")
+          lines.tail.map(_.split(',')(at).toLong)
+        }.toSet
+    try {
+      Seq("customer", "nation", "region").foreach(copy(_, lit(true)))
+      copy("orders", col("o_orderkey") % 2 === 0)
+      // both dirs export (and so deploy) before either deploy is read
+      val exported = Seq(a, b).map(d => d -> etl.ExportCapstone
+        .exportCapstone(spark, d).select("o_orderkey").collect()
+        .map(_.getLong(0)).toSet)
+      assert(exported(0)._2 != exported(1)._2, "the two dirs must differ")
+      exported.foreach { case (d, keys) =>
+        assert(deployedKeys(d) == keys,
+          s"the files deployed for $d are not its exported orders")
+      }
+    } finally {
+      val key = etl.SheetStage.sourceKey(b)
       Seq(new java.io.File(s"/tmp/graft_gate/$key"), root)
         .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     }
